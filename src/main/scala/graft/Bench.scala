@@ -111,7 +111,6 @@ object Bench {
     }
     val ok = names.filter(samples(_).nonEmpty)
     val med = ok.map(n => n -> median(samples(n)))
-    def r3(d: Double): String = "%.3f".format(d)
     val errs = names.filter(failures(_) > 0)
       .map(n => "\"" + n + "\":" + failures(n)).mkString("{", ",", "}")
     val total = med.map(_._2).sum
@@ -155,41 +154,17 @@ object Bench {
     // errors, the geomean silently changes composition — the count (5
     // expected) is the flag a round-over-round comparison must check.
     val canaryN = canaryNames.size
-    // ── the canary subtraction as a FIELD, not an evening: read the
-    // PREVIOUS committed bench_full.json before overwriting it, compute
-    // the shared-query median-ratio geomean, divide by the canary ratio.
-    // normalized ≈ 1.0 means "the suite moved with the box"; the raw and
-    // canary components ship alongside so the division is auditable. ──
+    // the previous committed bench_full.json, read before it is overwritten
     val prevPath = sys.env.getOrElse("SPARK_GRAFT_PREV_BENCH",
       "bench_full.json")
-    // `parse_ok` + the echoed path make an unreadable/malformed previous
-    // file DISTINGUISHABLE from a real all-zero comparison: without it a
-    // regex drift or a bad SPARK_GRAFT_PREV_BENCH silently degrades
-    // every vs_prev field to 0.0 and reads as data.
-    val (prevMed, prevCanary, prevParseOk) = (try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(prevPath)), "UTF-8")
-      val M = """"([A-Za-z0-9_]+)":\{"min":[0-9.]+,"median":([0-9.]+)""".r
-      val C = """"canary_geomean_sec":([0-9.]+)""".r
-      val meds = M.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      (meds,
-        C.findFirstMatchIn(txt).map(_.group(1).toDouble).getOrElse(0.0),
-        meds.nonEmpty)
-    } catch { case _: Throwable => (Map.empty[String, Double], 0.0, false) })
-    val sharedPrev = ok.filter(n => prevMed.getOrElse(n, 0.0) > 0.0)
-    val rawVsPrev =
-      if (sharedPrev.isEmpty) 0.0
-      else math.exp(sharedPrev
-        .map(n => math.log(median(samples(n)) / prevMed(n))).sum /
-        sharedPrev.size)
-    val canaryRatio =
-      if (canary > 0.0 && prevCanary > 0.0) canary / prevCanary else 0.0
-    val normVsPrev =
-      if (rawVsPrev > 0.0 && canaryRatio > 0.0) rawVsPrev / canaryRatio
-      else 0.0
-    val vsPrev = s""""vs_prev":{"parse_ok":$prevParseOk,"prev_path":"$prevPath","shared_n":${sharedPrev.size},"raw_geomean":${r3(rawVsPrev)},"canary_ratio":${r3(canaryRatio)},"normalized_geomean":${r3(normVsPrev)}}"""
-    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,"nqueries":${ok.size},"runs2":{"total_a":${r3(totalA)},"total_b":${r3(totalB)}},"canary_geomean_sec":${r3(canary)},"canary_n":$canaryN,$vsPrev,"spread":$spread,"errors":$errs,"sf":"$sfDir"}"""
+    val prevTxt = try Some(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(prevPath)), "UTF-8"))
+    catch { case _: Throwable => None }
+    val config = RunConfig.current(cpus, sfDir)
+    val (vsPrev, warning) = compareToPrev(prevTxt, prevPath, config,
+      med.toMap, canary)
+    warning.foreach(w => System.err.println(s"[bench] vs_prev: $w"))
+    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,"nqueries":${ok.size},"runs2":{"total_a":${r3(totalA)},"total_b":${r3(totalB)}},"canary_geomean_sec":${r3(canary)},"canary_n":$canaryN,$vsPrev,"spread":$spread,"errors":$errs,"sf":"$sfDir",${config.toJson}}"""
     val outPath = java.nio.file.Paths.get("bench_full.json")
     java.nio.file.Files.write(outPath, (full + "\n").getBytes("UTF-8"))
     // The stdout line is budget-capped: slowest queries first (they carry
@@ -210,5 +185,88 @@ object Bench {
     println(header + parts.mkString(",") +
       footer.replace("NNN", omitted.toString))
     spark.stop()
+  }
+
+  private def r3(d: Double): String = "%.3f".format(d)
+
+  /** What a bench run is measured under. Two runs are comparable only when
+    * `cpus`, `sf`, `nproc` and `maxHeapMb` agree; `gitHead` is recorded but
+    * not compared, since telling commits apart is what `vs_prev` is for. */
+  final case class RunConfig(cpus: String, sf: String, nproc: Int,
+      maxHeapMb: Long, gitHead: String) {
+    def toJson: String =
+      s""""config":{"cpus":"$cpus","sf":"$sf","nproc":$nproc,"max_heap_mb":$maxHeapMb,"git_head":"$gitHead"}"""
+
+    /** Why `prev` was measured under a different config, if it was. */
+    def mismatch(prev: RunConfig): Option[String] = {
+      val diffs = Seq(
+        ("cpus", prev.cpus, cpus), ("sf", prev.sf, sf),
+        ("nproc", prev.nproc.toString, nproc.toString),
+        ("max_heap_mb", prev.maxHeapMb.toString, maxHeapMb.toString))
+        .collect { case (k, was, now) if was != now => s"$k $was -> $now" }
+      if (diffs.isEmpty) None else Some(diffs.mkString(", "))
+    }
+  }
+
+  object RunConfig {
+    def current(cpus: String, sf: String): RunConfig = {
+      val head = try {
+        scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+          .!!(scala.sys.process.ProcessLogger(_ => ())).trim
+      } catch { case _: Throwable => "unknown" }
+      RunConfig(cpus, sf, Runtime.getRuntime.availableProcessors,
+        Runtime.getRuntime.maxMemory / (1024 * 1024), head)
+    }
+
+    private val Pattern =
+      """"config":\{"cpus":"([^"]*)","sf":"([^"]*)","nproc":([0-9]+),"max_heap_mb":([0-9]+),"git_head":"([^"]*)"\}""".r
+
+    /** The config a bench_full.json was written under; None for a file
+      * written before configs were recorded. */
+    def parse(txt: String): Option[RunConfig] =
+      Pattern.findFirstMatchIn(txt).map(m => RunConfig(m.group(1), m.group(2),
+        m.group(3).toInt, m.group(4).toLong, m.group(5)))
+  }
+
+  /** The `vs_prev` field: this run's per-query medians against the previous
+    * bench_full.json's, as the shared-query median-ratio geomean divided by
+    * the canary ratio. normalized ≈ 1.0 means "the suite moved with the
+    * box"; the raw and canary components ship alongside so the division is
+    * auditable. `parse_ok` and the echoed path make an unreadable or
+    * malformed previous file distinguishable from a real all-zero
+    * comparison. A previous run under another config (or one that recorded
+    * none) is not comparable: `config_match` is false, `normalized_geomean`
+    * stays 0, and the returned warning says why. */
+  def compareToPrev(prevTxt: Option[String], prevPath: String,
+      config: RunConfig, medians: Map[String, Double],
+      canary: Double): (String, Option[String]) = {
+    val M = """"([A-Za-z0-9_]+)":\{"min":[0-9.]+,"median":([0-9.]+)""".r
+    val C = """"canary_geomean_sec":([0-9.]+)""".r
+    val prevMed = prevTxt.toSeq.flatMap(t => M.findAllMatchIn(t)
+      .map(m => m.group(1) -> m.group(2).toDouble)).toMap
+    val prevCanary = prevTxt.flatMap(t => C.findFirstMatchIn(t))
+      .map(_.group(1).toDouble).getOrElse(0.0)
+    val parseOk = prevMed.nonEmpty
+    val prevConfig = prevTxt.flatMap(RunConfig.parse)
+    val warning =
+      if (!parseOk) Some(s"no readable previous bench at $prevPath")
+      else prevConfig match {
+        case None => Some(s"$prevPath records no run config; not comparable")
+        case Some(p) => config.mismatch(p)
+          .map(d => s"$prevPath was measured under another config ($d); not comparable")
+      }
+    val configMatch = parseOk && warning.isEmpty
+    val shared = medians.keys.toSeq.sorted
+      .filter(n => medians(n) > 0.0 && prevMed.getOrElse(n, 0.0) > 0.0)
+    val raw =
+      if (shared.isEmpty) 0.0
+      else math.exp(shared.map(n => math.log(medians(n) / prevMed(n))).sum / shared.size)
+    val canaryRatio =
+      if (canary > 0.0 && prevCanary > 0.0) canary / prevCanary else 0.0
+    val normalized =
+      if (configMatch && raw > 0.0 && canaryRatio > 0.0) raw / canaryRatio
+      else 0.0
+    (s""""vs_prev":{"parse_ok":$parseOk,"prev_path":"$prevPath","config_match":$configMatch,"shared_n":${shared.size},"raw_geomean":${r3(raw)},"canary_ratio":${r3(canaryRatio)},"normalized_geomean":${r3(normalized)}}""",
+      warning)
   }
 }

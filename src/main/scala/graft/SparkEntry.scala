@@ -531,7 +531,7 @@ object SparkEntry {
     // raw table, so the raw-events oracle must match exactly
     "q_zorder_slice" -> ((s, dir) => {
       val path = sources.ZOrderLayout.eventsZPath(s, dir, Tables.events(s, dir))
-      s.read.parquet(path)
+      Tables.read(s, path)
         .filter(col("user_id").between(40, 60) && col("value").between(100.0, 200.0))
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
         .orderBy("event_id")

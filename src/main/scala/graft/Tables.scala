@@ -1,22 +1,90 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
-/** Loaders for the driver-provided parquet fixtures (TESTDATA.md).
+/** Loaders for the parquet fixtures (TESTDATA.md), and the
+  * schema resolver every parquet table read by a query goes through.
   *
-  * All readers are plain `spark.read.parquet` so Catalyst keeps full
-  * pushdown/pruning freedom; the only special case is `events`, whose
-  * parquet `ts` physical type has drifted across fixture generations and is
-  * therefore probed, not assumed.
+  * [[read]] infers a path's `StructType` once and then reads it with
+  * `spark.read.schema(cached).parquet(path)`. Without a schema, every
+  * `spark.read.parquet(path)` runs a Spark job to read a footer, and does so
+  * each time a frame is built; with one it runs none. The reference declares
+  * the `logs` schema once in DDL (internal/db/db.go:40-54) and no query
+  * derives it again — the resolver gives every other table the same economy.
+  *
+  * The cache holds one entry per qualified path, keyed by
+  *  - the name, length and modification time of every file under the path,
+  *  - the session settings that change what inference decodes
+  *    ([[InferenceConfs]], e.g. `spark.sql.legacy.parquet.nanosAsLong`).
+  * A new file version (or a changed setting) re-infers and replaces the
+  * entry. Only the schema is reused — never a DataFrame or a file listing —
+  * so every read still lists the path and scans whatever files are there
+  * now, and Catalyst keeps full pushdown/pruning freedom.
+  *
+  * The only special loader is `events`, whose parquet `ts` physical type has
+  * drifted across fixture generations and is therefore probed, not assumed.
   */
 object Tables {
   private def p(dir: String, name: String) = s"$dir/$name.parquet"
 
+  /** Settings that change the schema parquet inference produces. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive")
+
+  private final case class Version(files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  private val schemas = new ConcurrentHashMap[String, (Version, StructType)]()
+
+  /** Every file under `root` as (path, length, modification time), sorted. */
+  private def leafFiles(fs: FileSystem, root: Path): Seq[(String, Long, Long)] = {
+    val it = fs.listFiles(root, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val st = it.next()
+      out += ((st.getPath.toString, st.getLen, st.getModificationTime))
+    }
+    out.result().sorted
+  }
+
+  /** The schema `spark.read.parquet(path)` would infer, inferred only when
+    * the path's files or the inference settings changed since the last call.
+    * A path that does not exist as written (missing, or a glob) is not
+    * cached: inference lists it, or raises Spark's own error. */
+  private def schema(spark: SparkSession, path: String): StructType = {
+    val raw = new Path(path)
+    val fs = raw.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(raw)) return spark.read.parquet(path).schema
+    val qualified = fs.makeQualified(raw)
+    val version = Version(leafFiles(fs, qualified),
+      InferenceConfs.map(spark.conf.getOption))
+    val key = qualified.toString
+    val cached = schemas.get(key)
+    if (cached != null && cached._1 == version) cached._2
+    else {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(key, (version, inferred))
+      inferred
+    }
+  }
+
+  /** `spark.read.parquet(path)` with the schema from [[schema]]. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schema(spark, path)).parquet(path)
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(p(dir, name))
+    else read(spark, p(dir, name))
 
   /** `events` with ts normalized to millisecond-precision TimestampType.
     *
@@ -43,6 +111,10 @@ object Tables {
     * tripwire that diagnoses the next driver-side regeneration in one
     * line).
     *
+    * The probe reads the resolver's schema, so it costs no job once the
+    * file's schema is known; a regenerated file is a new version and is
+    * probed afresh.
+    *
     * ts-range predicates on the derived column are rewritten to bounds on
     * the raw scan column ([[graft.plans.NanosTimestampPushdown]]) so they
     * reach parquet `PushedFilters` and prune row groups on every shape.
@@ -51,7 +123,7 @@ object Tables {
     // Required to decode the nanos shape at all; a no-op for micros files.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.plans.NanosTimestampPushdown.install(spark)
-    val raw = spark.read.parquet(p(dir, "events"))
+    val raw = read(spark, p(dir, "events"))
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_millis(expr("ts div 1000000")))
@@ -64,13 +136,13 @@ object Tables {
     }
   }
 
-  def lineitem(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(p(dir, "lineitem"))
-  def orders(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(p(dir, "orders"))
-  def customer(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(p(dir, "customer"))
-  def supplier(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(p(dir, "supplier"))
-  def part(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(p(dir, "part"))
-  def nation(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(p(dir, "nation"))
-  def region(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(p(dir, "region"))
-  def documents(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(p(dir, "documents"))
-  def embeddings(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(p(dir, "embeddings"))
+  def lineitem(spark: SparkSession, dir: String): DataFrame = read(spark, p(dir, "lineitem"))
+  def orders(spark: SparkSession, dir: String): DataFrame = read(spark, p(dir, "orders"))
+  def customer(spark: SparkSession, dir: String): DataFrame = read(spark, p(dir, "customer"))
+  def supplier(spark: SparkSession, dir: String): DataFrame = read(spark, p(dir, "supplier"))
+  def part(spark: SparkSession, dir: String): DataFrame = read(spark, p(dir, "part"))
+  def nation(spark: SparkSession, dir: String): DataFrame = read(spark, p(dir, "nation"))
+  def region(spark: SparkSession, dir: String): DataFrame = read(spark, p(dir, "region"))
+  def documents(spark: SparkSession, dir: String): DataFrame = read(spark, p(dir, "documents"))
+  def embeddings(spark: SparkSession, dir: String): DataFrame = read(spark, p(dir, "embeddings"))
 }

@@ -11,7 +11,11 @@ import org.apache.spark.sql.functions._
   *    carry a month predicate ([[LogQuery.monthPredicate]]).
   *  - `ORDER BY (service, ts)` (db.go:52) → `sortWithinPartitions` before
   *    write, so parquet row-group min/max stats on (service, ts) give the
-  *    same data-skipping a sparse primary index gives ClickHouse.
+  *    same data-skipping a sparse primary index gives ClickHouse. The sort
+  *    leads with `month`: a planned write to `partitionBy("month")` needs
+  *    its input ordered by month, and when it is not, Spark adds its own
+  *    `Sort [month]` and the optimizer drops the (service, ts) sort below
+  *    it, so every file would be written in arrival order.
   *  - `index_granularity = 8192` (db.go:53) → parquet row-group/page
   *    statistics (default sizing is the analogous knob).
   *  - MergeTree background merges (README.md:33) → [[compact]].
@@ -22,16 +26,16 @@ object LogTable {
   /** Append a normalized batch in the reference layout. `repartition` by
     * month first so each output month is written by one task (avoids the
     * many-small-files explosion of task×partition fan-out at scale), then
-    * sort within tasks by `sortCols` — default (service, ts), the DDL's
-    * ORDER BY — for row-group stat locality. `sortCols` lets a frame with
-    * different column names (the events fixture standing in for logs)
+    * sort within tasks by month and `sortCols` — default (service, ts), the
+    * DDL's ORDER BY — for row-group stat locality. `sortCols` lets a frame
+    * with different column names (the events fixture standing in for logs)
     * ride the same month layout. */
   def append(logs: DataFrame, path: String,
       sortCols: Seq[String] = Seq("service", "ts")): Unit =
     logs
       .withColumn("month", date_format(col("ts"), "yyyyMM"))
       .repartition(col("month"))
-      .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
+      .sortWithinPartitions("month", sortCols: _*)
       .write
       .mode(SaveMode.Append)
       .partitionBy("month")
@@ -55,8 +59,8 @@ object LogTable {
   def compact(spark: SparkSession, path: String, filesPerMonth: Int = 1): Unit = {
     val df = spark.read.parquet(path)
     df.repartition(col("month"))
-      .sortWithinPartitions("service", "ts")
       .coalesce(math.max(filesPerMonth, 1))
+      .sortWithinPartitions("month", "service", "ts")
       .write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -79,7 +83,7 @@ object LogTable {
     val boundary = df
       .filter(col("month") === cutoffMonth && col("ts") >= lit(cutoff))
       .repartition(col("month"))
-      .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
+      .sortWithinPartitions("month", sortCols: _*)
     // Rewrite the boundary month in place (dynamic overwrite), then drop
     // the fully-expired month directories.
     boundary.write

@@ -62,7 +62,7 @@ object PartitionedLayout {
     * same k days qualify at every scale factor). */
   def countsOnTopRevenueDays(spark: SparkSession, dir: String,
       events: => DataFrame, k: Int = 5): DataFrame = {
-    val part = spark.read.parquet(eventsDailyPath(spark, dir, events))
+    val part = graft.Tables.read(spark, eventsDailyPath(spark, dir, events))
     // top-k days via orderBy+limit (TakeOrderedAndProject): no window at
     // all — same rows as a rank filter, and unlike a window (or any
     // non-deterministic partition-key workaround) the dim subplan stays

@@ -108,7 +108,7 @@ object ZOrderLayout {
     * skipping scan consults. Returns (file, minA, maxA, minB, maxB). */
   def fileEnvelopes(spark: org.apache.spark.sql.SparkSession, path: String,
       colA: String, colB: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.read(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(colA)).as("min_a"), max(col(colA)).as("max_a"),
         min(col(colB)).as("min_b"), max(col(colB)).as("max_b"))

@@ -59,6 +59,51 @@ class LogTableSpec extends AnyFunSuite {
     assert(pf.contains("month"), s"no month PartitionFilters:\n${plan.take(1500)}")
   }
 
+  /** Files under `dir` whose rows are not in (service, ts) order, read
+    * back one file at a time in file order; and how many files there are. */
+  private def unorderedFiles(dir: String): (Seq[String], Int) = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val files = walk(new java.io.File(dir)).map(_.getPath).filter(_.endsWith(".parquet"))
+    val bad = files.filter { f =>
+      val keys = spark.read.schema(LogSchema.schema).parquet(f).select("service", "ts")
+        .collect().toSeq.map(r => (r.getString(0), r.getTimestamp(1).getTime))
+      keys != keys.sorted
+    }
+    (bad, files.size)
+  }
+
+  test("append, compact and retention write every file in (service, ts) order") {
+    // arrival order deliberately out of (service, ts) order: services
+    // interleaved, time running backwards
+    def shuffled(n: Int) = {
+      import scala.jdk.CollectionConverters._
+      val rows = (0 until n).map { i =>
+        val month = Seq("2023-11", "2023-12", "2024-01")(i % 3)
+        Row(t(f"$month-10T00:${(n - i) / 60 % 60}%02d:${(n - i) % 60}%02dZ"),
+          s"svc${(i / 3) % 4}", "INFO", s"m$i", "{}", "", "")
+      }
+      spark.createDataFrame(rows.asJava, LogSchema.schema).repartition(3)
+    }
+    val dir = Files.createTempDirectory("logorder").toString
+    (0 until 2).foreach(_ => LogTable.append(shuffled(300), dir))
+    val afterAppend = unorderedFiles(dir)
+    LogTable.compact(spark, dir)
+    val afterCompact = unorderedFiles(dir)
+    val ttlDir = Files.createTempDirectory("logorder_ttl").toString
+    LogTable.append(shuffled(300), ttlDir)
+    LogTable.retention(spark, ttlDir, t("2023-12-10T00:01:00Z"))
+    // only the boundary month is rewritten by retention
+    val afterRetention = unorderedFiles(s"$ttlDir/month=202312")
+    val report = Seq("append" -> afterAppend, "compact" -> afterCompact,
+      "retention" -> afterRetention)
+      .map { case (op, (bad, n)) => s"$op: ${bad.size} of $n files unordered" }
+    assert(afterAppend._2 >= 6 && afterCompact._2 == 3 && afterRetention._2 >= 1,
+      report.mkString("; "))
+    assert(Seq(afterAppend, afterCompact, afterRetention).forall(_._1.isEmpty),
+      report.mkString("; "))
+  }
+
   test("retention drops expired months and filters the boundary month") {
     val dir = Files.createTempDirectory("logttl").toString
     LogTable.append(sampleLogs(30), dir)
