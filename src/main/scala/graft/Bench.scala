@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — runs every registered query on SPARK_GRAFT_SF_DIR and
@@ -27,6 +28,11 @@ import org.apache.spark.sql.SparkSession
   * index write (memoized per JVM), which is an ingest-side cost, not query
   * time — with 3 samples that write landed next to the median (r5:
   * q21_bkt median 3.95 s vs min 1.19 s).
+  *
+  * Each sample also counts the Janino compiles it ran (the change in
+  * `CodegenMetrics.METRIC_COMPILATION_TIME`'s count around it); the median
+  * per query ships as `compiles` in bench_full.json, so code generation
+  * shows up as its own cost instead of hiding in the wall time.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -87,9 +93,13 @@ object Bench {
       .filter(n => onlySet.forall(_.contains(n)))
     val samples = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
+    val compiles = scala.collection.mutable.Map[String, Vector[Long]]()
+      .withDefaultValue(Vector.empty)
     val failures = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    def compileCount = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     for (_ <- 1 to runs; name <- names) {
       val fn = SparkEntry.queries(name)
+      val c0 = compileCount
       val t0 = System.nanoTime()
       // A failed run's time-to-failure is NOT a sample — blending it into
       // the median would make the JSON look healthy while hiding the error
@@ -97,6 +107,7 @@ object Bench {
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
+        compiles(name) = compiles(name) :+ (compileCount - c0)
       } catch {
         case e: Throwable =>
           failures(name) += 1
@@ -104,10 +115,6 @@ object Bench {
           // and anything beyond one line risks polluting the captured tail
           System.err.println(s"[bench] $name failed: ${e.toString.linesIterator.next()}")
       }
-    }
-    def median(v: Vector[Double]): Double = {
-      val s = v.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     val ok = names.filter(samples(_).nonEmpty)
     val med = ok.map(n => n -> median(samples(n)))
@@ -121,21 +128,14 @@ object Bench {
     // spike lands in one half), each with its own median; a delta is a
     // CLAIM only when both halves replicate its direction. Totals for
     // both halves ship in every bench JSON.
-    def halfMedian(v: Vector[Double], parity: Int): Double =
-      median(v.zipWithIndex.collect { case (x, i) if i % 2 == parity => x })
     val totalA = ok.map(n => halfMedian(samples(n), 0)).sum
     val totalB = ok.map(n => if (samples(n).size > 1) halfMedian(samples(n), 1)
       else samples(n).head).sum
     // Full per-query spread goes to a file (the harness tail-captures only
     // ~2000 chars of stdout, which 100+ queries of min/median/max can never
     // fit — rounds 1-4 all recorded parsed:null because of this).
-    val spread = ok.map { n =>
-      val s = samples(n)
-      "\"" + n + "\":{\"min\":" + r3(s.min) + ",\"median\":" + r3(median(s)) +
-        ",\"max\":" + r3(s.max) +
-        ",\"med_a\":" + r3(halfMedian(s, 0)) +
-        ",\"med_b\":" + r3(if (s.size > 1) halfMedian(s, 1) else s.head) + "}"
-    }.mkString("{", ",", "}")
+    val spread = ok.map(n => spreadEntry(n, samples(n), compiles(n)))
+      .mkString("{", ",", "}")
     // CANARY set: five long-stable, trivially-planned queries (a pruned
     // scan + top-K, a one-exchange agg, a month-pruned scan, a codec
     // map, a tiny grouped sum). None has been touched since round 10,
@@ -188,6 +188,23 @@ object Bench {
   }
 
   private def r3(d: Double): String = "%.3f".format(d)
+
+  private def median(v: Vector[Double]): Double = {
+    val s = v.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  private def halfMedian(v: Vector[Double], parity: Int): Double =
+    median(v.zipWithIndex.collect { case (x, i) if i % 2 == parity => x })
+
+  /** One query's bench_full.json entry: the spread of its sample times and
+    * the median number of Janino compiles per sample. */
+  def spreadEntry(name: String, s: Vector[Double], compiles: Vector[Long]): String =
+    "\"" + name + "\":{\"min\":" + r3(s.min) + ",\"median\":" + r3(median(s)) +
+      ",\"max\":" + r3(s.max) +
+      ",\"med_a\":" + r3(halfMedian(s, 0)) +
+      ",\"med_b\":" + r3(if (s.size > 1) halfMedian(s, 1) else s.head) +
+      ",\"compiles\":" + "%.1f".format(median(compiles.map(_.toDouble))) + "}"
 
   /** What a bench run is measured under. Two runs are comparable only when
     * `cpus`, `sf`, `nproc` and `maxHeapMb` agree; `gitHead` is recorded but

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.Bench.RunConfig
 
 /** `vs_prev` compares a bench run only with a previous run measured under
-  * the same config. */
+  * the same config; each query's spread entry carries its compile count. */
 class BenchSpec extends AnyFunSuite {
   private val cfg = RunConfig("4", "/data/sf0.1", 4, 4096L, "abc123")
   private val medians = Map("q_a" -> 2.0, "q_b" -> 8.0)
@@ -60,5 +60,16 @@ class BenchSpec extends AnyFunSuite {
     assert(field(json, "config_match") == "false")
     assert(field(json, "shared_n") == "0")
     assert(warning.exists(_.contains("nope.json")))
+  }
+
+  test("a spread entry records the median compiles per sample") {
+    val entry = Bench.spreadEntry("q_a", Vector(1.0, 3.0, 2.0), Vector(4L, 0L, 1L))
+    assert(entry.startsWith("\"q_a\":{\"min\":1.000,\"median\":2.000,\"max\":3.000"))
+    assert(field(entry, "compiles") == "1.0")
+    // the entry still parses as a previous run's median
+    val (json, _) = Bench.compareToPrev(Some(s"""{"spread":{$entry}}"""), "prev.json", cfg,
+      Map("q_a" -> 4.0), canary = 1.0)
+    assert(field(json, "shared_n") == "1")
+    assert(field(json, "raw_geomean") == "2.000")
   }
 }

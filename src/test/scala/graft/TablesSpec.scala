@@ -4,16 +4,64 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.sql.types.{IntegerType, StringType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The schema resolver behind every [[Tables]] loader: inference runs once
-  * per file version, and a new version (rewritten file, added file, changed
-  * inference setting) is seen on the next read. */
+/** The resolver behind every [[Tables]] loader: the schema and the
+  * one-split answer are resolved once per file version, and a new version
+  * (rewritten file, added file, changed inference or split setting) is seen
+  * on the next read. A one-split table plans no exchange above its scan; a
+  * multi-split table plans exactly as a plain parquet read. */
 class TablesSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
+
+  /** Runs `f` with session settings `confs`, restoring the old values. */
+  private def withConfs[T](confs: (String, String)*)(f: => T): T = {
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      f
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Every physical node, including those inside adaptive plans. */
+  private def nodes(df: DataFrame): Seq[SparkPlan] = {
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => p +: flatten(a.executedPlan)
+      case other => other +: other.children.flatMap(flatten)
+    }
+    flatten(df.queryExecution.executedPlan)
+  }
+
+  private def exchanges(df: DataFrame): Int =
+    nodes(df).count(_.isInstanceOf[ShuffleExchangeExec])
+
+  private def coalesced(df: DataFrame): Boolean =
+    nodes(df).exists { case c: CoalesceExec => c.numPartitions == 1; case _ => false }
+
+  private def grouped(df: DataFrame): DataFrame =
+    df.groupBy(col("k")).count().orderBy(col("count").desc, col("k"))
+
+  /** A one-file parquet directory table of `n` rows (k, v). */
+  private def smallTable(prefix: String, n: Int = 200): String = {
+    val dir = tmp(prefix).resolve("t").toString
+    spark.range(n).select((col("id") % 7).as("k"), col("id").as("v"))
+      .coalesce(1).write.parquet(dir)
+    dir
+  }
 
   private val Scope = "graft.tablesspec.scope"
 
@@ -96,6 +144,99 @@ class TablesSpec extends AnyFunSuite {
     } finally before match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
+    }
+  }
+
+  test("a one-split table plans a grouped count and its ordering with no exchange") {
+    val dir = smallTable("tables_one")
+    val df = Tables.read(spark, dir)
+    assert(spark.read.parquet(dir).rdd.getNumPartitions == 1)
+    assert(coalesced(df))
+    val q = grouped(df)
+    assert(exchanges(q) == 0, q.queryExecution.executedPlan.toString)
+    assert(q.collect().toSeq == grouped(spark.read.parquet(dir)).collect().toSeq)
+  }
+
+  test("a multi-split table plans the same partitions and exchanges as a plain read") {
+    val dir = smallTable("tables_multi", n = 20000)
+    withConfs("spark.sql.files.maxPartitionBytes" -> "4096") {
+      val plain = spark.read.parquet(dir)
+      val df = Tables.read(spark, dir)
+      assert(plain.rdd.getNumPartitions > 1)
+      assert(df.rdd.getNumPartitions == plain.rdd.getNumPartitions)
+      assert(!coalesced(df))
+      assert(exchanges(grouped(df)) == exchanges(grouped(plain)))
+      assert(exchanges(grouped(df)) > 0)
+    }
+    // and several files make a multi-split table under default settings
+    spark.range(10).select(lit(1L).as("k"), col("id").as("v")).write.mode("append").parquet(dir)
+    val several = Tables.read(spark, dir)
+    assert(spark.read.parquet(dir).rdd.getNumPartitions > 1)
+    assert(!coalesced(several))
+    assert(exchanges(grouped(several)) == exchanges(grouped(spark.read.parquet(dir))))
+  }
+
+  test("deciding the split launches no job on the first or the second read") {
+    val dir = smallTable("tables_decide")
+    val copy = tmp("tables_decide_plain").resolve("t").toString
+    spark.read.parquet(dir).write.parquet(copy)
+    val (_, plainJobs) = jobsDuring(spark.read.parquet(copy))
+    val (first, firstJobs) = jobsDuring(Tables.read(spark, dir))
+    assert(firstJobs == plainJobs, "the first read should run only schema inference")
+    assert(coalesced(first))
+    val (second, secondJobs) = jobsDuring(Tables.read(spark, dir))
+    assert(secondJobs == 0)
+    assert(coalesced(second))
+  }
+
+  test("a changed openCostInBytes makes the next read decide again") {
+    val dir = smallTable("tables_opencost")
+    assert(coalesced(Tables.read(spark, dir)))
+    withConfs("spark.sql.files.openCostInBytes" -> "0") {
+      assert(spark.read.parquet(dir).rdd.getNumPartitions > 1)
+      assert(!coalesced(Tables.read(spark, dir)))
+    }
+    assert(coalesced(Tables.read(spark, dir)))
+  }
+
+  test("_SUCCESS and .crc files do not count as data files") {
+    val dir = smallTable("tables_hidden")
+    val names = new java.io.File(dir).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
+    assert(names.count(n => !n.startsWith("_") && !n.startsWith(".")) == 1, names)
+    assert(coalesced(Tables.read(spark, dir)))
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  test("loading a micros events file leaves nanosAsLong as it was") {
+    withConfs(NanosAsLong -> "false") {
+      val ev = Tables.events(spark, SparkTestBase.sfDir)
+      assert(ev.schema("ts").dataType == TimestampType)
+      assert(spark.conf.get(NanosAsLong) == "false")
+      // one split, but events is never read as a single partition
+      assert(!coalesced(ev))
+    }
+  }
+
+  test("a TIMESTAMP(NANOS) events file sets nanosAsLong and loads ms-truncated") {
+    val dir = tmp("tables_nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new HPath(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sessionState.newHadoopConf()).build()
+    val rows = new SimpleGroupFactory(schema)
+    val base = java.time.Instant.parse("2024-01-10T00:00:00Z").toEpochMilli * 1000000L
+    try for ((id, ns) <- Seq(1L -> (base - 1L), 2L -> base, 3L -> (base + 1000000L)))
+      w.write(rows.newGroup().append("event_id", id).append("ts", ns))
+    finally w.close()
+    withConfs(NanosAsLong -> "false") {
+      val ev = Tables.events(spark, dir)
+      assert(spark.conf.get(NanosAsLong) == "true")
+      assert(ev.schema("ts").dataType == TimestampType)
+      val ms = ev.orderBy("event_id").select(col("ts").cast("double"))
+        .collect().map(r => math.round(r.getDouble(0) * 1000)).toSeq
+      assert(ms == Seq(base / 1000000L - 1, base / 1000000L, base / 1000000L + 1))
     }
   }
 }

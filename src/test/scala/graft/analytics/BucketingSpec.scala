@@ -55,12 +55,18 @@ class BucketingSpec extends AnyFunSuite {
   test("registered q5_local_supplier_bkt: bucketed scans, same rows as plain q5") {
     val dir = SparkTestBase.sfDir
     // At test SF the planner broadcasts the small orders side, which makes
-    // bucketing moot. The layout's payoff is the at-scale SMJ path —
-    // orders too big to broadcast — so pin that path to assert the plan
-    // shape the 100 TB deployment would get.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    // bucketing moot, and every fixture is one split, which Tables reads
+    // as a single partition that needs no exchange at all. The layout's
+    // payoff is the at-scale SMJ path — orders too big to broadcast, facts
+    // read in many splits — so pin that path to assert the plan shape the
+    // 100 TB deployment would get.
+    val atScale = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.files.openCostInBytes" -> "0",
+      "spark.sql.files.minPartitionNum" -> "4")
+    val prev = atScale.map { case (k, _) => k -> spark.conf.getOption(k) }
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+      atScale.foreach { case (k, v) => spark.conf.set(k, v) }
       val bkt = graft.SparkEntry.queries("q5_local_supplier_bkt")(spark, dir)
       val bucketedScans = planNodes(bkt).collect {
         case s: FileSourceScanExec if s.bucketedScan => s
@@ -72,7 +78,10 @@ class BucketingSpec extends AnyFunSuite {
       val bktEx = planNodes(bkt).collect { case e: ShuffleExchangeExec => e }.length
       assert(bktEx <= plainEx - 2,
         s"bucketed plan should drop both fact-side exchanges: $bktEx vs $plainEx")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
     // and under default planning the registered query answers exactly like
     // the shuffled original
     val plain = graft.SparkEntry.queries("q5_local_supplier")(spark, dir)
