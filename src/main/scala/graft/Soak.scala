@@ -1947,7 +1947,7 @@ object Soak {
       // (even dims: abs(x)+1.0) and leaves the rest — a real
       // distribution shift that RETAINS angular diversity, so a retrain
       // with enough mode mass can re-anchor BOTH signals. Calibrated by
-      // sweep on the synthetic corpus (tools/sweep_shift*.scala): the
+      // one-off sweeps on the synthetic corpus (since removed): the
       // FULL-orthant shift (every dim) collapses the mode into one tight
       // angular cluster whose top-share stays ~0.43 under ANY retrain —
       // traffic that IS one semantic bucket keeps the occupancy alarm on

@@ -31,8 +31,8 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   *    reports `SinglePartition`, so no exchange is planned above it for an
   *    aggregation, window, sort or join. The scan was one task already, so
   *    it loses no parallelism; the saving is the shuffles, stages and jobs
-  *    above it, which dominate small inputs. Multi-split tables, and
-  *    `events` (see [[events]]), are returned as read.
+  *    above it, which dominate small inputs. Multi-split tables are
+  *    returned as read.
   *
   * The cache holds one entry per qualified path, keyed by
   *  - the name, length and modification time of every file under the path,
@@ -181,11 +181,11 @@ object Tables {
     * `spark.sql.legacy.parquet.nanosAsLong` set on the session (the scan
     * needs it too), so loading a micros file leaves the session alone.
     *
-    * Unlike the other loaders, `events` is never read as a single
-    * partition. The flagship reads it with no exchange to save, and in a
-    * cold session the extra `Coalesce` slowed its first runs: perfbench
-    * `analytics` `setup_s` rose from 0.24 to 0.32 s (medians of 13
-    * alternating pairs on a 4-core box).
+    * Like every other loader, a one-split `events` is read as a single
+    * partition. The `coalesce(1)` sits above the ms normalization, so the
+    * flagship's scan, filter and normalization stay one whole-stage-codegen
+    * stage (a `Coalesce` between them would split it in two and compile
+    * more classes on a cold run), with its ts bounds in `PushedFilters`.
     *
     * ts-range predicates on the derived column are rewritten to bounds on
     * the raw scan column ([[graft.plans.NanosTimestampPushdown]]) so they
@@ -200,7 +200,7 @@ object Tables {
         resolve(spark, path)
     }
     val raw = spark.read.schema(r.schema).parquet(path)
-    raw.schema("ts").dataType match {
+    val normalized = raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_millis(expr("ts div 1000000")))
       case TimestampNTZType | TimestampType =>
@@ -210,6 +210,7 @@ object Tables {
           s"fixture drift: events.ts decoded as $other (expected LongType " +
             s"nanos, TimestampNTZType, or TimestampType) in $path")
     }
+    if (r.oneSplit) normalized.coalesce(1) else normalized
   }
 
   /** Whether `e` is parquet inference refusing a nanosecond timestamp,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.ClockTimestamp
+
 /** Canonical log record shape + ingest normalization.
   *
   * The reference defines the record three times (wire: proto/log.proto:6-14,
@@ -49,13 +51,18 @@ object LogSchema {
     * parser, which accepts `Z`/±hh:mm offsets and 0-9 fractional digits —
     * the same surface Go's two time.Parse layouts accept — and yields NULL
     * (not an ANSI error) on failure, making the fallback a `coalesce`.
+    * The fallback is [[ClockTimestamp]], read when the row is normalized
+    * (in the micro-batch, not on the ack path), like the reference's
+    * per-entry `time.Now().UTC()`; unlike `current_timestamp()` it is not
+    * folded into a per-query literal, so warm micro-batches reuse their
+    * generated classes instead of compiling new ones.
     * Result is truncated to millisecond precision like the reference's
     * DateTime64(3) column.
     */
   def normalize(wire: DataFrame): DataFrame =
     wire.select(
       date_trunc("millisecond",
-        coalesce(try_to_timestamp(col("ts")), current_timestamp())).as("ts"),
+        coalesce(try_to_timestamp(col("ts")), ClockTimestamp.clockTimestamp())).as("ts"),
       coalesce(col("service"), lit("")).as("service"),
       coalesce(col("level"), lit("")).as("level"),
       col("msg"),

@@ -10,7 +10,7 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -214,29 +214,93 @@ class TablesSpec extends AnyFunSuite {
       val ev = Tables.events(spark, SparkTestBase.sfDir)
       assert(ev.schema("ts").dataType == TimestampType)
       assert(spark.conf.get(NanosAsLong) == "false")
-      // one split, but events is never read as a single partition
-      assert(!coalesced(ev))
+      // one split, so read as a single partition like every other table
+      assert(coalesced(ev))
     }
   }
 
-  test("a TIMESTAMP(NANOS) events file sets nanosAsLong and loads ms-truncated") {
+  private val nanosBase = java.time.Instant.parse("2024-01-10T00:00:00Z").toEpochMilli * 1000000L
+
+  /** An `events` file whose ts is INT64 TIMESTAMP(NANOS) — the shape Spark
+    * cannot write — written with parquet's example writer: three error
+    * rows around a millisecond boundary, with every column the flagship
+    * reads. */
+  private def nanosEventsDir(): String = {
     val dir = tmp("tables_nanos").toString
     val schema = MessageTypeParser.parseMessageType(
-      "message m { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+      "message m { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); " +
+        "required int64 user_id; required binary event_type (UTF8); " +
+        "required double value; required binary props (UTF8); }")
     val w = ExampleParquetWriter.builder(new HPath(s"$dir/events.parquet"))
       .withType(schema).withConf(spark.sessionState.newHadoopConf()).build()
     val rows = new SimpleGroupFactory(schema)
-    val base = java.time.Instant.parse("2024-01-10T00:00:00Z").toEpochMilli * 1000000L
-    try for ((id, ns) <- Seq(1L -> (base - 1L), 2L -> base, 3L -> (base + 1000000L)))
-      w.write(rows.newGroup().append("event_id", id).append("ts", ns))
+    try for ((id, ns) <- Seq(1L -> (nanosBase - 1L), 2L -> nanosBase, 3L -> (nanosBase + 1000000L)))
+      w.write(rows.newGroup().append("event_id", id).append("ts", ns).append("user_id", 0L)
+        .append("event_type", "error").append("value", 0.0d).append("props", "{}"))
     finally w.close()
+    dir
+  }
+
+  test("a TIMESTAMP(NANOS) events file sets nanosAsLong and loads ms-truncated") {
+    val dir = nanosEventsDir()
     withConfs(NanosAsLong -> "false") {
       val ev = Tables.events(spark, dir)
       assert(spark.conf.get(NanosAsLong) == "true")
       assert(ev.schema("ts").dataType == TimestampType)
       val ms = ev.orderBy("event_id").select(col("ts").cast("double"))
         .collect().map(r => math.round(r.getDouble(0) * 1000)).toSeq
-      assert(ms == Seq(base / 1000000L - 1, base / 1000000L, base / 1000000L + 1))
+      val base = nanosBase / 1000000L
+      assert(ms == Seq(base - 1, base, base + 1))
+    }
+  }
+
+  /** The sf0.01 fixtures, next to the suite's sf0.001 ones: `events` is one
+    * split there under the suite's settings. */
+  private val sf001 = s"${new java.io.File(SparkTestBase.sfDir).getParent}/sf0.01"
+
+  private def groupedEvents(df: DataFrame): DataFrame =
+    df.groupBy(col("event_type")).count().orderBy(col("count").desc, col("event_type"))
+
+  test("a grouped count and its ordering over a one-split events plan no exchange") {
+    val ev = Tables.events(spark, sf001)
+    assert(coalesced(ev))
+    val q = groupedEvents(ev)
+    assert(exchanges(q) == 0, q.queryExecution.executedPlan.toString)
+    assert(q.collect().toSeq == groupedEvents(spark.read.parquet(s"$sf001/events.parquet")).collect().toSeq)
+  }
+
+  /** The pushed filters of the flagship's one parquet scan over `dir`,
+    * which shares one codegen stage with the filter and the ts normalization. */
+  private def flagshipPushedFilters(dir: String): String = {
+    val q = SparkEntry.queries("q_logs_flagship")(spark, dir)
+    val plan = q.queryExecution.executedPlan.toString
+    val scans = nodes(q).collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, plan)
+    assert(nodes(q).count(_.isInstanceOf[WholeStageCodegenExec]) == 1, plan)
+    scans.head.metadata("PushedFilters")
+  }
+
+  test("the flagship's scan keeps both ts bounds in its pushed filters over a one-split events") {
+    assert(coalesced(Tables.events(spark, sf001)))
+    val micros = flagshipPushedFilters(sf001)
+    assert(micros.contains("GreaterThanOrEqual(ts,") && micros.contains("LessThan(ts,"), micros)
+    withConfs(NanosAsLong -> "false") {
+      val dir = nanosEventsDir()
+      assert(coalesced(Tables.events(spark, dir)))
+      val nanos = flagshipPushedFilters(dir)
+      assert(nanos.contains("GreaterThanOrEqual(ts,") && nanos.contains("LessThan(ts,"), nanos)
+    }
+  }
+
+  test("a multi-split events is not coalesced and plans the same exchanges as a plain read") {
+    withConfs("spark.sql.files.maxPartitionBytes" -> "4096") {
+      val plain = spark.read.parquet(s"$sf001/events.parquet")
+      val ev = Tables.events(spark, sf001)
+      assert(plain.rdd.getNumPartitions > 1)
+      assert(ev.rdd.getNumPartitions == plain.rdd.getNumPartitions)
+      assert(!coalesced(ev))
+      assert(exchanges(groupedEvents(ev)) == exchanges(groupedEvents(plain)))
+      assert(exchanges(groupedEvents(ev)) > 0)
     }
   }
 }

@@ -41,6 +41,32 @@ class LogSchemaSpec extends AnyFunSuite {
     assert(got != null && got.getTime >= before)
   }
 
+  test("an unparseable ts falls back to the clock during the call") {
+    val start = System.currentTimeMillis()
+    val got = LogSchema.normalize(wireDf(Seq(("not-a-time", Map()))))
+      .select(col("ts")).collect().head.getTimestamp(0).getTime
+    val end = System.currentTimeMillis()
+    // the fallback is ms-truncated, so it cannot fall before `start`'s ms
+    assert(start <= got && got <= end, s"$got not in [$start, $end]")
+  }
+
+  test("warm normalize calls compile no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // a micro-batch of 100 wire rows, every tenth ts unparseable, read
+    // through an RDD scan as a micro-batch is, so the projection runs in
+    // generated code
+    def batch(i: Int) = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until 100).map(j => Row(
+        if (j % 10 == 0) "not-a-time" else f"2024-01-02T03:04:${j % 60}%02d.${i}%03dZ",
+        s"svc${j % 3}", "INFO", s"m$j", Map("k" -> s"$i"), "t", "s")), 1),
+      LogSchema.wireSchema)
+    def run(i: Int): Unit = LogSchema.normalize(batch(i)).write.format("noop").mode("overwrite").save()
+    (1 to 2).foreach(run)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    (3 to 6).foreach(run)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0)
+  }
+
   test("attrs map survives JSON round-trip; malformed JSON reads empty") {
     val norm = LogSchema.normalize(wireDf(Seq(
       ("2024-01-01T00:00:00Z", Map("user" -> "jane", "order_id" -> "12346")))))

@@ -3,6 +3,7 @@
 // Env: PROF_QUERIES=q_a,q_b  PROF_SF=/root/testdata/sf0.1  PROF_RUNS=3
 // Prints, per query, total wall plus the top stages by task-time sum
 // (stage name = callsite), so the hot operator is visible without the UI.
+// Exits 1, after printing each failure in full, if any query failed.
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -23,7 +24,9 @@ val listener = new SparkListener {
 }
 spark.sparkContext.addSparkListener(listener)
 
-for (q <- names) {
+// every query is tried; each failure is printed in full and fails the run
+val failures = mutable.ArrayBuffer[(String, Throwable)]()
+for (q <- names) try {
   val fn = graft.SparkEntry.queries(q)
   // warm (layout builds, codegen)
   fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -38,5 +41,13 @@ for (q <- names) {
   }.toSeq.sortBy(-_._2)
   for ((n, ms, tasks, cnt) <- byName.take(14))
     println(f"  ${ms}%7d ms-task  $cnt%3d stages $tasks%5d tasks  $n%s")
+} catch { case e: Throwable => failures += q -> e }
+for ((q, e) <- failures) {
+  System.err.println(s"profile_query: $q failed:")
+  e.printStackTrace(System.err)
+}
+if (failures.nonEmpty) {
+  System.err.println(s"profile_query: ${failures.size} of ${names.size} queries failed")
+  sys.exit(1)
 }
 sys.exit(0)
