@@ -508,6 +508,7 @@ object Soak {
       // timing is only evidence if the answers agree
       val diff = merged.exceptAll(full).count() + full.exceptAll(merged).count()
       println(f"""SOAK {"phase":"incrcc","scale":"$tag","docs":$n,"delta_docs":$nDelta,"merge_sec":$mergeSec%.2f,"rebuild_sec":$rebuildSec%.2f,"label_diff":$diff}""")
+      require(diff == 0L, s"merged labels != rebuild at $tag: $diff")
 
       // vary-delta-hold-corpus direction: a HALF delta (doc_id % 14 == 0
       // — every other member of the %7 set) merged against the same
@@ -551,9 +552,7 @@ object Soak {
     val nBase = Tables.documents(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/docstream_$tag"
-      val fsys = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
+      freshDir(spark, dir)
       trueGrowthDocuments(spark, baseDir, n)
         .repartition(spark.sparkContext.defaultParallelism)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -588,11 +587,7 @@ object Soak {
       q.stop()
       val medianWave = waveSecs.sorted.apply(waveSecs.length / 2)
       // invariant before timing is trusted
-      val labels = DocumentStream.labels(spark, s"$dir/state")
-      val cc = graft.ops.Dedup.nearDupClusters(
-        DocumentStream.keptIds(spark, s"$dir/state").select(col("doc_id")),
-        DocumentStream.livePairs(spark, s"$dir/state"))
-      val diff = labels.exceptAll(cc).count() + cc.exceptAll(labels).count()
+      val diff = DocumentStream.labelDiff(spark, s"$dir/state")
       val keptRows = DocumentStream.keptIds(spark, s"$dir/state").count()
       // TTL: the oldest half of the standing history expires, PLUS every
       // 5th arrival — arrivals are what hold band state, so the retire
@@ -622,6 +617,7 @@ object Soak {
       val candPost = candLegs()
       val keptAfter = DocumentStream.keptIds(spark, s"$dir/state").count()
       println(f"""SOAK {"phase":"docstream","scale":"$tag","docs":$n,"history":${splitId},"arrivals":${arrivals.length},"waves":${waveSecs.length},"init_sec":$initSec%.2f,"median_wave_sec":$medianWave%.2f,"max_wave_sec":${waveSecs.max}%.2f,"label_diff":$diff,"kept_rows":$keptRows,"retire_sec":$retireSec%.2f,"kept_after_retire":$keptAfter,"cand_legs_pre_retire":$candPre,"cand_legs_post_retire":$candPost}""")
+      require(diff == 0L, s"labels != CC at $tag: $diff")
     }
   }
 
@@ -636,8 +632,8 @@ object Soak {
     xs.sorted.apply(2)
   }
 
-  // shared long-horizon measurement helpers (docstreamlong +
-  // embstreamlong MUST report through identical formulas — a fix to one
+  // shared long-horizon measurement helpers (every timed-wave receipt
+  // MUST report through identical formulas — a fix to one
   // slope receipt's math must not silently diverge from the other's)
   private def medSec(xs: Seq[Double]): Double =
     if (xs.isEmpty) 0.0 else xs.sorted.apply(xs.length / 2)
@@ -653,75 +649,407 @@ object Soak {
       p: String): Long =
     fsys.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
 
-  /** `docstreamlong` mode: the runnable pipeline under a LONG batch
-    * horizon — the receipt the 8-wave soak cannot give: per-batch cost
-    * must be flat in BATCH COUNT, not just corpus size, which is exactly
-    * what the consolidation fold (the MergeTree background-merge
-    * analogue) buys — without it every batch re-lists and re-opens one
-    * directory per prior batch per state sub. `nBatches` constant-size
-    * micro-batches drive [[graft.streaming.DocumentStream.processBatch]]
-    * DIRECTLY (the wave soak already measures the streaming engine's
-    * trigger latency; this isolates the state-maintenance slope), with
-    * `consolidateEvery` batches between folds. Printed per scale:
-    * median/p99 batch seconds, first/last-third medians (the flatness
-    * verdict in batch count), the consolidation batches' median (the
-    * fold's amortized price), final per-sub directory counts (vs the
-    * one-per-batch count consolidation prevents), and state bytes vs
-    * live-text bytes. The standing invariant (labels == CC over
-    * kept/pairs) is asserted before any timing is trusted. */
-  def docStreamLongSoak(spark: SparkSession, factor: Int, baseDir: String,
-      outDir: String, nBatches: Int = 120,
-      consolidateEvery: Int = 16): Unit = {
+  /** Seconds one block takes. */
+  private def timed(f: => Unit): Double = {
+    val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
+  }
+
+  /** The per-batch slope fields every timed-wave receipt prints. */
+  private def slopeFields(xs: Seq[Double]): String = {
+    val third = xs.length / 3
+    f""""median_batch_sec":${medSec(xs)}%.2f,"p99_batch_sec":${p99Sec(xs)}%.2f,"first_third_median":${medSec(xs.take(third))}%.2f,"last_third_median":${medSec(xs.takeRight(third))}%.2f"""
+  }
+
+  /** A fresh output directory (emptied first) and its file system. */
+  private def freshDir(spark: SparkSession,
+      dir: String): org.apache.hadoop.fs.FileSystem = {
+    val fsys = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
+    fsys
+  }
+
+  /** Media rows for doc ids [lo, hi) — the true-growth image generators'
+    * input shape. */
+  private def mediaDocs(spark: SparkSession, lo: Long, hi: Long): DataFrame =
+    spark.range(lo, hi).select(col("id").as("doc_id"),
+      concat(lit("src"), pmod(col("id"), lit(8L))).as("source"))
+
+  /** The decodable true-growth images' fingerprints (doc_id, sh0, sh1). */
+  private def trueGrowthFps(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    import graft.streaming.DocumentStream
-    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val horizonMs = 3600000L
-    val nBase = Tables.documents(spark, baseDir).count()
+    graft.ops.Multimodal.pHashes(
+        graft.ops.Multimodal.imagePngMediaTrueGrowth(spark, docs))
+      .filter(_.decoded).toDF()
+      .select(col("media_id").as("doc_id"),
+        col("ph0").as("sh0"), col("ph1").as("sh1"))
+  }
+
+  /** One tier's long-horizon fixture at one scale: its SOAK fields ahead
+    * of "arrivals", the arrival count, the wave count and a runner for
+    * wave i, the subs whose directory counts print, the trailing byte
+    * field, and whether the line carries label_diff. */
+  private final case class LongFixture(tier: graft.streaming.IndexTier,
+      head: String, arrivals: Int, waves: Int, runBatch: Int => Unit,
+      dirSubs: Seq[String], tail: () => String, printsDiff: Boolean)
+
+  private def longFixture(spark: SparkSession, tier: String, n: Long,
+      nBase: Long, baseDir: String, dir: String, root: String,
+      fsys: org.apache.hadoop.fs.FileSystem, nBatches: Int,
+      consolidateEvery: Int): LongFixture = {
+    import spark.implicits._
+    import graft.ops.{Dedup, Multimodal}
+    import graft.streaming.{DocumentStream, EmbeddingStream, FingerprintStream}
+    val splitId = n * 3L / 5L
+    // CONSTANT arrival stream regardless of corpus scale (the live-
+    // serving regime): the last nBase·2/5 ids arrive
+    val arrFrom = n - nBase * 2L / 5L
+    def wavesOf[A](xs: Seq[A]): Seq[Seq[A]] =
+      xs.grouped(math.max(1, xs.length / nBatches)).toSeq
+    tier match {
+      case "doc" =>
+        val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+        trueGrowthDocuments(spark, baseDir, n)
+          .repartition(spark.sparkContext.defaultParallelism)
+          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        val docs = spark.read.parquet(s"$dir/documents.parquet")
+        val history = docs.filter(col("doc_id") < splitId)
+        // minute-spaced event times
+        val arrivals = docs.filter(col("doc_id") >= arrFrom)
+          .select(col("doc_id"),
+            (lit(t0Ms) + (col("doc_id") - splitId) * 60000L).as("ts_ms"),
+            col("text"))
+          .as[DocumentStream.DocTsIn].collect().sortBy(_.doc_id).toSeq
+        val histPairs = Dedup.minHashPairs(history).localCheckpoint(true)
+        DocumentStream.init(spark, root, history, histPairs,
+          Dedup.nearDupClusters(history, histPairs))
+        val waves = wavesOf(arrivals)
+        LongFixture(DocumentStream, s""""docs":$n,"history":$splitId""",
+          arrivals.length, waves.length,
+          i => DocumentStream.processBatch(waves(i).toDF(), i.toLong, root,
+            3600000L, consolidateEvery = consolidateEvery),
+          Seq("hist", "kept", "pairs", "hw", "bands"),
+          () => s""","hist_bytes":${dirBytes(fsys, s"$root/hist")}""",
+          printsDiff = true)
+      case "fp" =>
+        val docs = mediaDocs(spark, 0L, n)
+        val baseFps = trueGrowthFps(spark, docs.filter(col("doc_id") < splitId))
+          .localCheckpoint(true,
+            org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        val basePairs = Dedup.hammingPairs128(baseFps, 3)
+          .localCheckpoint(true)
+        FingerprintStream.init(spark, root, baseFps, basePairs,
+          Dedup.nearDupClusters(baseFps.select(col("doc_id")),
+            basePairs.select(col("id_a"), col("id_b"))))
+        val arrivals = Multimodal.imagePngMediaTrueGrowth(spark,
+            docs.filter(col("doc_id") >= arrFrom))
+          .collect().sortBy(_.media_id).toSeq
+        val waves = wavesOf(arrivals)
+        LongFixture(FingerprintStream, s""""docs":$n,"images":${n / 3}""",
+          arrivals.length, waves.length,
+          i => FingerprintStream.processBatch(
+            spark.createDataset(waves(i)).toDF(), i.toLong, root,
+            maxHamming = 3, consolidateEvery = consolidateEvery),
+          Seq("fps", "pairs", "gauge"), () => "", printsDiff = false)
+      case "emb" =>
+        trueGrowthEmbeddings(spark, baseDir, n)
+          .repartition(spark.sparkContext.defaultParallelism)
+          .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        val arrFrame = emb.filter(col("vec_id") >= arrFrom)
+          .select(col("vec_id"), col("embedding"))
+        val arrivals = arrFrame.as[EmbeddingStream.VecIn]
+          .collect().sortBy(_.vec_id).toSeq
+        EmbeddingStream.initFromCorpus(spark, root,
+          emb.filter(col("vec_id") < splitId), refDelta = arrFrame,
+          threshold = 0.4)
+        val waves = wavesOf(arrivals)
+        LongFixture(EmbeddingStream, s""""vectors":$n,"base":$splitId""",
+          arrivals.length, waves.length,
+          i => EmbeddingStream.processBatch(
+            waves(i).toDF().select(col("vec_id"), col("embedding")),
+            i.toLong, root, 0.4, consolidateEvery = consolidateEvery),
+          Seq("vecs", "vhash", "pairs", "gauge"),
+          () => s""","vecs_bytes":${dirBytes(fsys, s"$root/vecs")}""",
+          printsDiff = true)
+    }
+  }
+
+  /** `docstreamlong` / `fpstreamlong` / `embstreamlong` modes (`tier` =
+    * doc / fp / emb): a runnable pipeline under a LONG batch horizon —
+    * the receipt the wave soaks cannot give: per-batch cost must be flat
+    * in BATCH COUNT, not just corpus size, which is exactly what the
+    * consolidation fold (the MergeTree background-merge analogue) buys —
+    * without it every batch re-lists and re-opens one directory per
+    * prior batch per state sub. Per scale (×1 and ×factor standing
+    * corpus, CONSTANT arrival stream), `nBatches` constant-size
+    * micro-batches drive the tier's `processBatch` DIRECTLY (the wave
+    * soaks measure the streaming engine's trigger latency; this isolates
+    * the state-maintenance slope), with `consolidateEvery` batches
+    * between folds (0 = the unbounded counterfactual). The media tier
+    * runs real PNG bytes through the real javax.imageio codec — its
+    * dominant per-batch cost; the vector tier folds full embeddings, the
+    * heaviest per-row state. Printed per scale: median/p99 batch
+    * seconds, first/last-third medians (the flatness verdict), the
+    * consolidation batches' median (the fold's amortized price), final
+    * per-sub directory counts vs one-per-batch, and state bytes. The
+    * standing invariant ([[graft.streaming.IndexTier.labelDiff]] = 0)
+    * must hold or the run fails. */
+  def streamLongSoak(spark: SparkSession, tier: String, factor: Int,
+      baseDir: String, outDir: String, nBatches: Int,
+      consolidateEvery: Int): Unit = {
+    val nBase = (if (tier == "emb") Tables.embeddings(spark, baseDir)
+      else Tables.documents(spark, baseDir)).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
-      val dir = s"$outDir/docstreamlong_$tag"
+      val dir = s"$outDir/${tier}streamlong_$tag"
       val root = s"$dir/state"
-      val fsys = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-      trueGrowthDocuments(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-      val splitId = n * 3L / 5L
-      val history = docs.filter(col("doc_id") < splitId)
-      // CONSTANT arrival stream regardless of corpus scale (the live-
-      // serving regime), minute-spaced event times
-      val arrivals = docs.filter(col("doc_id") >= n - nBase * 2L / 5L)
-        .select(col("doc_id"),
-          (lit(t0Ms) + (col("doc_id") - splitId) * 60000L).as("ts_ms"),
-          col("text"))
-        .as[DocumentStream.DocTsIn].collect().sortBy(_.doc_id)
-      val histPairs = graft.ops.Dedup.minHashPairs(history)
-        .localCheckpoint(true)
-      DocumentStream.init(spark, root, history, histPairs,
-        graft.ops.Dedup.nearDupClusters(history, histPairs))
-      val waves = arrivals.grouped(
-        math.max(1, arrivals.length / nBatches)).toSeq
-      val batchSecs = waves.zipWithIndex.map { case (w, i) =>
-        val t = System.nanoTime()
-        DocumentStream.processBatch(w.toSeq.toDF(), i.toLong, root,
-          horizonMs, consolidateEvery = consolidateEvery)
-        (System.nanoTime() - t) / 1e9
-      }
+      val fsys = freshDir(spark, dir)
+      val fx = longFixture(spark, tier, n, nBase, baseDir, dir, root, fsys,
+        nBatches, consolidateEvery)
+      val batchSecs = (0 until fx.waves).map(i => timed(fx.runBatch(i)))
       val consSecs = batchSecs.zipWithIndex.collect {
         case (s, i) if consolidateEvery > 0 && i > 0 &&
           i % consolidateEvery == 0 => s }
-      val third = batchSecs.length / 3
-      // invariant before timing is trusted
-      val labels = DocumentStream.labels(spark, root)
-      val cc = graft.ops.Dedup.nearDupClusters(
-        DocumentStream.keptIds(spark, root).select(col("doc_id")),
-        DocumentStream.livePairs(spark, root))
-      val diff = labels.exceptAll(cc).count() + cc.exceptAll(labels).count()
-      val dirCounts = Seq("hist", "kept", "pairs", "hw", "bands")
+      val diff = fx.tier.labelDiff(spark, root)
+      val diffField = if (fx.printsDiff) s""""label_diff":$diff,""" else ""
+      val dirCounts = fx.dirSubs
         .map(s => s""""$s":${batchDirCount(fsys, root, s)}""").mkString(",")
-      println(f"""SOAK {"phase":"docstreamlong","scale":"$tag","docs":$n,"history":$splitId,"arrivals":${arrivals.length},"batches":${waves.length},"consolidate_every":$consolidateEvery,"median_batch_sec":${medSec(batchSecs)}%.2f,"p99_batch_sec":${p99Sec(batchSecs)}%.2f,"first_third_median":${medSec(batchSecs.take(third))}%.2f,"last_third_median":${medSec(batchSecs.takeRight(third))}%.2f,"consolidation_median_sec":${medSec(consSecs)}%.2f,"label_diff":$diff,"dirs":{$dirCounts},"unconsolidated_dirs_per_sub":${waves.length + 1},"state_bytes":${dirBytes(fsys, root)},"hist_bytes":${dirBytes(fsys, s"$root/hist")}}""")
+      println(f"""SOAK {"phase":"${tier}streamlong","scale":"$tag",${fx.head},"arrivals":${fx.arrivals},"batches":${fx.waves},"consolidate_every":$consolidateEvery,${slopeFields(batchSecs)},"consolidation_median_sec":${medSec(consSecs)}%.2f,$diffField"dirs":{$dirCounts},"unconsolidated_dirs_per_sub":${fx.waves + 1},"state_bytes":${dirBytes(fsys, root)}${fx.tail()}}""")
+      require(diff == 0L, s"labels != CC at $tag: $diff")
     }
+  }
+
+  /** Per-tier flood scenario sizes: (batches, cap, organic rows per
+    * batch, default flood rows per batch). */
+  private val FloodSizes = Map("doc" -> (48, 16, 64, 64),
+    "emb" -> (32, 30, 64, 128), "fp" -> (32, 30, 48, 64))
+
+  /** One tier's flood scenario: initialize a root, run wave i under a
+    * cap (0 = uncapped) with a fold every k batches, the mode's ledger
+    * fields, the tier's query over a memory stream (root, checkpoint,
+    * FAIR pool — 5 ms trigger, a fold every 8 batches) with a feeder of
+    * wave i, and the frames to free at the end. */
+  private final case class FloodFixture(tier: graft.streaming.IndexTier,
+      init: String => Unit, runBatch: (String, Int, Int, Int) => Unit,
+      fields: String => String,
+      feed: (String, String, Option[String]) =>
+        (org.apache.spark.sql.streaming.StreamingQuery, Int => Unit),
+      frames: Seq[DataFrame])
+
+  private def floodFixture(spark: SparkSession, tier: String,
+      baseDir: String, dir: String, nBatches: Int, organicPerBatch: Int,
+      floodPerBatch: Int): FloodFixture = {
+    import spark.implicits._
+    import graft.ops.{Dedup, Multimodal}
+    import graft.streaming.{DocumentStream, EmbeddingStream, FingerprintStream}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val organicNeeded = nBatches * organicPerBatch
+    tier match {
+      case "doc" =>
+        val template = graft.OracleSql.CappedFloodTemplate
+        val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+        val horizonMs = 3600000L
+        // the soak's premise is "the whole run sits inside the horizon —
+        // nothing ages out of the uncapped measurement"; at 500 ms spacing
+        // that bounds rows-per-run, so an oversized env override must fail
+        // loudly here rather than silently age early flood state out
+        val spanMs = nBatches.toLong * (organicPerBatch + floodPerBatch) * 500L
+        require(spanMs <= horizonMs,
+          s"event span ${spanMs} ms exceeds the $horizonMs ms horizon — " +
+          "lower nBatches/organicPerBatch/SPARK_GRAFT_FLOOD_PER_BATCH so " +
+          "the whole run stays horizon-resident")
+        val n = math.max(Tables.documents(spark, baseDir).count(),
+          organicNeeded * 5L / 2L + 10L)
+        trueGrowthDocuments(spark, baseDir, n)
+          .repartition(spark.sparkContext.defaultParallelism)
+          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        val docs = spark.read.parquet(s"$dir/documents.parquet")
+        val splitId = n * 3L / 5L
+        val history = docs.filter(col("doc_id") < splitId)
+        val organicPool = docs.filter(col("doc_id") >= splitId)
+          .select(col("doc_id"), col("text"))
+          .limit(organicNeeded)
+          .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+        require(organicPool.length == organicNeeded,
+          s"organic pool short: ${organicPool.length} < $organicNeeded")
+        var floodId = n + 1000000L
+        var k = 0L
+        // sub-second event spacing: the whole run sits inside the horizon
+        val waves = (0 until nBatches).map { i =>
+          (organicPool.slice(i * organicPerBatch, (i + 1) * organicPerBatch) ++
+            (0 until floodPerBatch).map { _ =>
+              floodId += 1; (floodId, template)
+            }).map { case (id, tx) =>
+              k += 1; DocumentStream.DocTsIn(id, t0Ms + k * 500L, tx)
+            }.toSeq
+        }
+        val histPairs = Dedup.minHashPairs(history).localCheckpoint(true)
+        val histLabels = Dedup.nearDupClusters(history, histPairs)
+          .localCheckpoint(true)
+        FloodFixture(DocumentStream,
+          DocumentStream.init(spark, _, history, histPairs, histLabels),
+          (root, i, hc, every) => DocumentStream.processBatch(
+            waves(i).toDF(), i.toLong, root, horizonMs,
+            consolidateEvery = every, hotBucketCap = hc),
+          root => {
+            val g = DocumentStream.gaugeRows(spark, root)
+              .agg(count(when(col("alert"), 1)).as("alerts"),
+                count(when(col("hot_buckets") > 0, 1)).as("interventions"),
+                sum(col("cand_ppb")).as("cand_ppb_sum")).head()
+            s""""alerts":${g.getLong(0)},"interventions":${g.getLong(1)},"cand_ppb_sum":${g.getLong(2)}"""
+          },
+          (root, ckpt, pool) => {
+            val mem = MemoryStream[DocumentStream.DocTsIn]
+            (DocumentStream.start(mem.toDF(), root, ckpt, horizonMs,
+              maxDelayMs = 5L, consolidateEvery = 8, schedulerPool = pool),
+              i => mem.addData(waves(i)))
+          },
+          Seq(histPairs, histLabels))
+      case "emb" =>
+        val n = math.max(Tables.embeddings(spark, baseDir).count(),
+          organicNeeded * 5L / 2L + 10L)
+        trueGrowthEmbeddings(spark, baseDir, n)
+          .select(col("vec_id"), col("embedding"))
+          .repartition(spark.sparkContext.defaultParallelism)
+          .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        val splitId = n * 3L / 5L
+        val organicPool = emb.filter(col("vec_id") >= splitId)
+          .orderBy(col("vec_id")).limit(organicNeeded)
+          .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+        require(organicPool.length == organicNeeded,
+          s"organic pool short: ${organicPool.length}")
+        // near-copies of one base vector: distinct bytes (a per-copy
+        // component nudge), so the exact tier keeps them and they all
+        // assign to one cluster
+        val src = emb.filter(col("vec_id") === 0)
+          .select(col("embedding")).head().getSeq[Float](0).toArray
+        var k = 0
+        val waves = (0 until nBatches).map { i =>
+          organicPool.slice(i * organicPerBatch,
+            (i + 1) * organicPerBatch).toSeq ++
+            (0 until floodPerBatch).map { _ =>
+              k += 1
+              val v = src.clone(); v(0) = v(0) + k * 1e-4f
+              (9000000L + k, v)
+            }
+        }
+        FloodFixture(EmbeddingStream,
+          EmbeddingStream.initFromCorpus(spark, _,
+            emb.filter(col("vec_id") < splitId),
+            refDelta = emb.filter(col("vec_id") >= splitId)),
+          (root, i, hc, every) => EmbeddingStream.processBatch(
+            waves(i).toDF("vec_id", "embedding"), i.toLong, root,
+            consolidateEvery = every, hotClusterCap = hc),
+          root => {
+            val nPairs = EmbeddingStream.livePairs(spark, root).count()
+            val alerts = EmbeddingStream.gaugeRows(spark, root)
+              .filter(col("retrain")).count()
+            // cap interventions are LEDGER rows (hot_clusters > 0)
+            val interventions = EmbeddingStream.gaugeRows(spark, root)
+              .agg(sum(col("hot_clusters"))).head().getLong(0)
+            s""""pairs":$nPairs,"gauge_alerts":$alerts,"hot_cluster_interventions":$interventions"""
+          },
+          (root, ckpt, pool) => {
+            val mem = MemoryStream[(Long, Array[Float])]
+            (EmbeddingStream.start(mem.toDF().toDF("vec_id", "embedding"),
+              root, ckpt, maxDelayMs = 5L, consolidateEvery = 8,
+              schedulerPool = pool), i => mem.addData(waves(i)))
+          },
+          Nil)
+      case "fp" =>
+        // organic arrivals: true-growth texture families (block 15 — every
+        // per-batch band bucket sits well under the cap); image ids ≡ 1 mod
+        // 3, so `organicNeeded` images span 3× that many doc ids
+        val mTotal = (organicNeeded.toLong * 2L + 10L) * 3L
+        val splitM = mTotal / 2L
+        val baseFps = trueGrowthFps(spark, mediaDocs(spark, 0L, splitM))
+          .localCheckpoint(true,
+            org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        val basePairs = Dedup.hammingPairs128(baseFps, 3).localCheckpoint(true)
+        val baseLabels = Dedup.nearDupClusters(
+          baseFps.select(col("doc_id")),
+          basePairs.select(col("id_a"), col("id_b"))).localCheckpoint(true)
+        val organicPool = Multimodal.imagePngMediaTrueGrowth(spark,
+            mediaDocs(spark, splitM, mTotal))
+          .collect().sortBy(_.media_id).take(organicNeeded).toSeq
+        require(organicPool.length == organicNeeded,
+          s"organic pool short: ${organicPool.length} < $organicNeeded")
+        // the flood payload: ONE fixed texture from a seed range no fixture
+        // or generator uses (4.0e9 — doc textures sit at 1.0e9+, audio
+        // 1.1e9+, video 2.0e9+/3.0e9+), so the flood never collides with
+        // organic traffic; byte-identical copies under fresh ids, exactly a
+        // re-posted viral image
+        val floodPayload = Multimodal.pngBytes(
+          Multimodal.textureImage(4000000000L, 0))
+        var floodId = mTotal + 1000000L
+        val waves = (0 until nBatches).map { i =>
+          organicPool.slice(i * organicPerBatch, (i + 1) * organicPerBatch) ++
+            (0 until floodPerBatch).map { _ =>
+              floodId += 1
+              Multimodal.MediaRow(floodId, "image", floodPayload, "flood")
+            }
+        }
+        FloodFixture(FingerprintStream,
+          FingerprintStream.init(spark, _, baseFps, basePairs, baseLabels),
+          (root, i, hc, every) => FingerprintStream.processBatch(
+            spark.createDataset(waves(i)).toDF(), i.toLong, root,
+            maxHamming = 3, consolidateEvery = every, hotBucketCap = hc),
+          root => {
+            val nPairs = FingerprintStream.livePairs(spark, root).count()
+            val g = FingerprintStream.gaugeRows(spark, root)
+              .agg(count(when(col("alert"), 1)).as("alerts"),
+                count(when(col("hot_buckets") > 0, 1)).as("interventions"),
+                coalesce(sum(col("n_quarantined")), lit(0L)).as("quar")).head()
+            s""""pairs":$nPairs,"alerts":${g.getLong(0)},"interventions":${g.getLong(1)},"quarantined":${g.getLong(2)}"""
+          },
+          (root, ckpt, pool) => {
+            val mem = MemoryStream[Multimodal.MediaRow]
+            (FingerprintStream.start(mem.toDF(), root, ckpt, maxHamming = 3,
+              maxDelayMs = 5L, consolidateEvery = 8, schedulerPool = pool),
+              i => mem.addData(waves(i)))
+          },
+          Seq(baseFps, basePairs, baseLabels))
+    }
+  }
+
+  /** `docstreamflood` / `embstreamflood` / `fpstreamflood` modes (`tier`
+    * = doc / emb / fp): the hot-key cap's receipt on a RUNNABLE pipeline
+    * — every batch carries `floodPerBatch` template arrivals alongside
+    * constant organic traffic ([[FloodSizes]]): byte-identical template
+    * texts (the whole run inside the horizon — nothing ages out),
+    * near-copies of one base vector, or byte-identical copies of one
+    * DECODABLE texture (quarantine never fires — which is exactly why the
+    * cap has to exist). UNCAPPED, the flood bucket's between-join legs
+    * grow linearly with the standing state (cumulative quadratic — the
+    * per-batch slope this mode exists to show) and the junk pairs
+    * persist; CAPPED, the occupancy prune drops the flood buckets from
+    * every join, so per-batch time stays at the organic baseline for ANY
+    * flood duration. Printed per mode: first/last-third per-batch
+    * medians (the slope verdict) and the tier's ledger counts (detection
+    * fires in BOTH modes — the cap is the automatic remediation, not the
+    * detector), with the standing invariant
+    * ([[graft.streaming.IndexTier.labelDiff]] = 0) gating the timing. */
+  def streamFloodSoak(spark: SparkSession, tier: String, baseDir: String,
+      outDir: String, floodPerBatch: Option[Int] = None): Unit = {
+    val (nBatches, cap, organicPerBatch, defaultFlood) = FloodSizes(tier)
+    val flood = floodPerBatch.getOrElse(defaultFlood)
+    val dir = s"$outDir/${tier}streamflood"
+    freshDir(spark, dir)
+    val fx = floodFixture(spark, tier, baseDir, dir, nBatches,
+      organicPerBatch, flood)
+    for ((mode, hc) <- Seq("uncapped" -> 0, "capped" -> cap)) {
+      val root = s"$dir/$mode"
+      fx.init(root)
+      val batchSecs = (0 until nBatches)
+        .map(i => timed(fx.runBatch(root, i, hc, 16)))
+      val fields = fx.fields(root)
+      val diff = fx.tier.labelDiff(spark, root)
+      require(diff == 0L, s"$mode labels != CC: $diff")
+      println(f"""SOAK {"phase":"${tier}streamflood","mode":"$mode","cap":$hc,"batches":$nBatches,"organic_per_batch":$organicPerBatch,"flood_per_batch":$flood,${slopeFields(batchSecs)},$fields}""")
+    }
+    fx.frames.foreach(graft.Snap.free(_))
   }
 
   /** `capflood` mode: the hot-bucket cap's SCALE receipt
@@ -745,9 +1073,7 @@ object Soak {
     val nBase = Tables.documents(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/capflood_$tag"
-      val fsys = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
+      freshDir(spark, dir)
       trueGrowthDocuments(spark, baseDir, n)
         .withColumn("text", when(col("doc_id") % 11 === 0,
           lit(template)).otherwise(col("text")))
@@ -796,9 +1122,7 @@ object Soak {
     val nBase = Tables.embeddings(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/semcapflood_$tag"
-      val fsys = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
+      freshDir(spark, dir)
       val raw = trueGrowthEmbeddings(spark, baseDir, n)
       val tpl = broadcast(raw.orderBy(col("vec_id")).limit(1)
         .select(col("embedding").as("tpl_emb")))
@@ -836,358 +1160,11 @@ object Soak {
     }
   }
 
-  /** `embstreamflood` mode: [[docStreamFloodSoak]] on the VECTOR
-    * pipeline — every batch carries `floodPerBatch` near-copies of one
-    * base vector (distinct bytes, a per-copy component nudge, so the
-    * exact tier keeps them and they all assign to one cluster) alongside
-    * constant organic traffic. UNCAPPED, the flood cluster's
-    * between-join legs grow linearly with the standing state (cumulative
-    * quadratic) and every leg is a dim-wide cosine; CAPPED
-    * (`hotClusterCap`), the batch-occupancy prune quarantines the
-    * cluster per batch and per-batch time stays at the organic baseline.
-    * The capped run's labels == CC invariant gates the timing; the
-    * inline gauge's top_share fires in BOTH modes (detection is not the
-    * remediation). */
-  def embStreamFloodSoak(spark: SparkSession, factor: Int, baseDir: String,
-      outDir: String, nBatches: Int = 32, cap: Int = 30,
-      organicPerBatch: Int = 64, floodPerBatch: Int = 128): Unit = {
-    import spark.implicits._
-    import graft.streaming.EmbeddingStream
-    val nBase = Tables.embeddings(spark, baseDir).count()
-    val organicNeeded = nBatches.toLong * organicPerBatch
-    val n = math.max(nBase, organicNeeded * 5L / 2L + 10L)
-    val dir = s"$outDir/embstreamflood"
-    val fsys = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-    trueGrowthEmbeddings(spark, baseDir, n)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val splitId = n * 3L / 5L
-    val base = emb.filter(col("vec_id") < splitId)
-    val organicPool = emb.filter(col("vec_id") >= splitId)
-      .orderBy(col("vec_id")).limit(organicNeeded.toInt)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    require(organicPool.length == organicNeeded,
-      s"organic pool short: ${organicPool.length}")
-    val src = emb.filter(col("vec_id") === 0)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    var k = 0
-    val waves = (0 until nBatches).map { i =>
-      val organic = organicPool.slice(i * organicPerBatch,
-        (i + 1) * organicPerBatch).toSeq
-      val flood = (0 until floodPerBatch).map { _ =>
-        k += 1
-        val v = src.clone(); v(0) = v(0) + k * 1e-4f
-        (9000000L + k, v)
-      }
-      organic ++ flood
-    }
-    for ((mode, hc) <- Seq("uncapped" -> 0, "capped" -> cap)) {
-      val root = s"$dir/$mode"
-      EmbeddingStream.initFromCorpus(spark, root, base,
-        refDelta = emb.filter(col("vec_id") >= splitId))
-      val batchSecs = waves.zipWithIndex.map { case (w, i) =>
-        val t = System.nanoTime()
-        EmbeddingStream.processBatch(w.toDF("vec_id", "embedding"),
-          i.toLong, root, consolidateEvery = 16, hotClusterCap = hc)
-        (System.nanoTime() - t) / 1e9
-      }
-      val third = batchSecs.length / 3
-      val nPairs = EmbeddingStream.livePairs(spark, root).count()
-      val alerts = EmbeddingStream.gaugeRows(spark, root)
-        .filter(col("retrain")).count()
-      // cap interventions are now LEDGER rows (hot_clusters > 0), not
-      // just behavior — the audit surface the other two tiers already had
-      val interventions = EmbeddingStream.gaugeRows(spark, root)
-        .agg(sum(col("hot_clusters"))).head().getLong(0)
-      // standing invariant before timing is trusted
-      val labels = EmbeddingStream.labels(spark, root)
-      val cc = graft.ops.Dedup.nearDupClusters(
-        EmbeddingStream.keptIds(spark, root)
-          .select(col("vec_id").as("doc_id")),
-        EmbeddingStream.livePairs(spark, root)
-          .select(col("id_a"), col("id_b")))
-      val diff = labels.exceptAll(cc).count() + cc.exceptAll(labels).count()
-      require(diff == 0L, s"$mode labels != CC: $diff")
-      println(f"""SOAK {"phase":"embstreamflood","mode":"$mode","cap":$hc,"batches":$nBatches,"organic_per_batch":$organicPerBatch,"flood_per_batch":$floodPerBatch,"median_batch_sec":${medSec(batchSecs)}%.2f,"p99_batch_sec":${p99Sec(batchSecs)}%.2f,"first_third_median":${medSec(batchSecs.take(third))}%.2f,"last_third_median":${medSec(batchSecs.takeRight(third))}%.2f,"pairs":$nPairs,"gauge_alerts":$alerts,"hot_cluster_interventions":$interventions}""")
-    }
-  }
-
-  /** `docstreamflood` mode: the hot-bucket cap's receipt on the
-    * RUNNABLE pipeline — [[capFloodSoak]] measured the batch operator;
-    * this drives [[graft.streaming.DocumentStream.processBatch]] itself
-    * under a standing template flood (every batch carries `floodPerBatch`
-    * byte-identical template arrivals alongside constant organic
-    * traffic, sub-second event spacing so the whole run sits inside the
-    * horizon — the worst case, nothing ages out). UNCAPPED, the flood
-    * bucket's between-join legs grow linearly with the accumulated
-    * band state (cumulative quadratic — the per-batch slope this mode
-    * exists to show); CAPPED (`hotBucketCap`), the occupancy prune drops
-    * the flood buckets from every join, so per-batch time stays at the
-    * organic baseline for ANY flood duration. Printed per mode:
-    * first/last-third per-batch medians (the slope verdict), ledger
-    * alert/intervention counts (detection fires in BOTH modes — the cap
-    * is the automatic remediation, not the detector), and the capped
-    * run's standing invariant (labels == CC over kept/pairs) gating the
-    * timing. */
-  def docStreamFloodSoak(spark: SparkSession, factor: Int, baseDir: String,
-      outDir: String, nBatches: Int = 48, cap: Int = 16,
-      organicPerBatch: Int = 64, floodPerBatch: Int = 64): Unit = {
-    import spark.implicits._
-    import graft.streaming.DocumentStream
-    val template = graft.OracleSql.CappedFloodTemplate
-    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val horizonMs = 3600000L
-    // the soak's premise is "the whole run sits inside the horizon —
-    // nothing ages out of the uncapped measurement"; at 500 ms spacing
-    // that bounds rows-per-run, so an oversized env override must fail
-    // loudly here rather than silently age early flood state out
-    val spanMs = nBatches.toLong * (organicPerBatch + floodPerBatch) * 500L
-    require(spanMs <= horizonMs,
-      s"event span ${spanMs} ms exceeds the $horizonMs ms horizon — " +
-      "lower nBatches/organicPerBatch/SPARK_GRAFT_FLOOD_PER_BATCH so " +
-      "the whole run stays horizon-resident")
-    val nBase = Tables.documents(spark, baseDir).count()
-    val organicNeeded = nBatches.toLong * organicPerBatch
-    val n = math.max(nBase, organicNeeded * 5L / 2L + 10L)
-    val dir = s"$outDir/docstreamflood"
-    val fsys = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-    trueGrowthDocuments(spark, baseDir, n)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val splitId = n * 3L / 5L
-    val history = docs.filter(col("doc_id") < splitId)
-    val organicPool = docs.filter(col("doc_id") >= splitId)
-      .select(col("doc_id"), col("text"))
-      .limit(organicNeeded.toInt)
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    require(organicPool.length == organicNeeded,
-      s"organic pool short: ${organicPool.length} < $organicNeeded")
-    var floodId = n + 1000000L
-    var k = 0L
-    val waves = (0 until nBatches).map { i =>
-      val organic = organicPool.slice(i * organicPerBatch,
-        (i + 1) * organicPerBatch)
-      val rows = (organic.map { case (id, tx) => (id, tx) } ++
-        (0 until floodPerBatch).map { _ =>
-          floodId += 1; (floodId, template)
-        }).map { case (id, tx) =>
-          k += 1; DocumentStream.DocTsIn(id, t0Ms + k * 500L, tx)
-        }
-      rows.toSeq
-    }
-    val histPairs = graft.ops.Dedup.minHashPairs(history)
-      .localCheckpoint(true)
-    val histLabels = graft.ops.Dedup.nearDupClusters(history, histPairs)
-      .localCheckpoint(true)
-    for ((mode, hc) <- Seq("uncapped" -> 0, "capped" -> cap)) {
-      val root = s"$dir/$mode"
-      DocumentStream.init(spark, root, history, histPairs, histLabels)
-      val batchSecs = waves.zipWithIndex.map { case (w, i) =>
-        val t = System.nanoTime()
-        DocumentStream.processBatch(w.toDF(), i.toLong, root,
-          horizonMs, consolidateEvery = 16, hotBucketCap = hc)
-        (System.nanoTime() - t) / 1e9
-      }
-      val third = batchSecs.length / 3
-      val g = DocumentStream.gaugeRows(spark, root)
-        .agg(count(when(col("alert"), 1)).as("alerts"),
-          count(when(col("hot_buckets") > 0, 1)).as("interventions"),
-          sum(col("cand_ppb")).as("cand_ppb_sum")).head()
-      // standing invariant before timing is trusted
-      val labels = DocumentStream.labels(spark, root)
-      val cc = graft.ops.Dedup.nearDupClusters(
-        DocumentStream.keptIds(spark, root).select(col("doc_id")),
-        DocumentStream.livePairs(spark, root))
-      val diff = labels.exceptAll(cc).count() + cc.exceptAll(labels).count()
-      require(diff == 0L, s"$mode labels != CC: $diff")
-      println(f"""SOAK {"phase":"docstreamflood","mode":"$mode","cap":$hc,"batches":$nBatches,"organic_per_batch":$organicPerBatch,"flood_per_batch":$floodPerBatch,"median_batch_sec":${medSec(batchSecs)}%.2f,"p99_batch_sec":${p99Sec(batchSecs)}%.2f,"first_third_median":${medSec(batchSecs.take(third))}%.2f,"last_third_median":${medSec(batchSecs.takeRight(third))}%.2f,"alerts":${g.getLong(0)},"interventions":${g.getLong(1)},"cand_ppb_sum":${g.getLong(2)}}""")
-    }
-  }
-
-  /** `fpstreamlong` mode: [[docStreamLongSoak]]'s batch-count-flatness
-    * receipt on the MEDIA tier ([[graft.streaming.FingerprintStream]]):
-    * a TRUE-growth texture-family image corpus (real PNG bytes through
-    * the real javax.imageio codec — the dominant per-batch cost) splits
-    * into a standing fingerprint index and a CONSTANT arrival stream
-    * regardless of corpus scale; `nBatches` constant-size micro-batches
-    * drive [[graft.streaming.FingerprintStream.processBatch]] with the
-    * tiered consolidation on its cadence
-    * (`SPARK_GRAFT_CONSOLIDATE_EVERY=0` = the unbounded counterfactual).
-    * Printed per scale: median/p99 batch seconds, first/last-third
-    * medians (flatness in BATCH COUNT and in CORPUS SIZE), final
-    * directory counts vs one-per-batch, state bytes — gated by the
-    * standing invariant labels == CC over index/pairs. */
-  def fpStreamLongSoak(spark: SparkSession, factor: Int, baseDir: String,
-      outDir: String, nBatches: Int = 60,
-      consolidateEvery: Int = 16): Unit = {
-    import spark.implicits._
-    import graft.ops.{Dedup, Multimodal}
-    import graft.streaming.FingerprintStream
-    val nBase = Tables.documents(spark, baseDir).count()
-    def docsOf(m: Long): DataFrame =
-      spark.range(m).select(col("id").as("doc_id"),
-        concat(lit("src"), pmod(col("id"), lit(8L))).as("source"))
-    for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
-      val dir = s"$outDir/fpstreamlong_$tag"
-      val root = s"$dir/state"
-      val fsys = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-      val docs = docsOf(n)
-      val splitId = n * 3L / 5L
-      // constant arrival stream regardless of corpus scale
-      val arrFrom = n - nBase * 2L / 5L
-      def fpOf(d: DataFrame): DataFrame =
-        Multimodal.pHashes(Multimodal.imagePngMediaTrueGrowth(spark, d))
-          .filter(_.decoded).toDF()
-          .select(col("media_id").as("doc_id"),
-            col("ph0").as("sh0"), col("ph1").as("sh1"))
-      val baseFps = fpOf(docs.filter(col("doc_id") < splitId))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val basePairs = Dedup.hammingPairs128(baseFps, 3)
-        .localCheckpoint(true)
-      FingerprintStream.init(spark, root, baseFps, basePairs,
-        Dedup.nearDupClusters(baseFps.select(col("doc_id")),
-          basePairs.select(col("id_a"), col("id_b"))))
-      val arrivals = Multimodal.imagePngMediaTrueGrowth(spark,
-          docs.filter(col("doc_id") >= arrFrom))
-        .collect().sortBy(_.media_id).toSeq
-      val waves = arrivals.grouped(
-        math.max(1, arrivals.length / nBatches)).toSeq
-      val batchSecs = waves.zipWithIndex.map { case (w, i) =>
-        val t = System.nanoTime()
-        FingerprintStream.processBatch(spark.createDataset(w).toDF(),
-          i.toLong, root, maxHamming = 3,
-          consolidateEvery = consolidateEvery)
-        (System.nanoTime() - t) / 1e9
-      }
-      val consSecs = batchSecs.zipWithIndex.collect {
-        case (s, i) if consolidateEvery > 0 && i > 0 &&
-          i % consolidateEvery == 0 => s }
-      val third = batchSecs.length / 3
-      // standing invariant before timing is trusted
-      val labels = FingerprintStream.labels(spark, root)
-      val cc = Dedup.nearDupClusters(
-        FingerprintStream.indexedFps(spark, root).select(col("doc_id")),
-        FingerprintStream.livePairs(spark, root)
-          .select(col("id_a"), col("id_b")))
-      val diff = labels.exceptAll(cc).count() + cc.exceptAll(labels).count()
-      require(diff == 0L, s"labels != CC at $tag: $diff")
-      val dirCounts = Seq("fps", "pairs", "gauge")
-        .map(s => s""""$s":${batchDirCount(fsys, root, s)}""").mkString(",")
-      println(f"""SOAK {"phase":"fpstreamlong","scale":"$tag","docs":$n,"images":${n / 3},"arrivals":${arrivals.length},"batches":${waves.length},"consolidate_every":$consolidateEvery,"median_batch_sec":${medSec(batchSecs)}%.2f,"p99_batch_sec":${p99Sec(batchSecs)}%.2f,"first_third_median":${medSec(batchSecs.take(third))}%.2f,"last_third_median":${medSec(batchSecs.takeRight(third))}%.2f,"consolidation_median_sec":${medSec(consSecs)}%.2f,"dirs":{$dirCounts},"unconsolidated_dirs_per_sub":${waves.length + 1},"state_bytes":${dirBytes(fsys, root)}}""")
-    }
-  }
-
-  /** `fpstreamflood` mode: the hot-bucket cap's receipt on the MEDIA
-    * pipeline — [[docStreamFloodSoak]]'s protocol with a DECODABLE
-    * template-image flood (every batch carries `floodPerBatch`
-    * byte-identical copies of one fixed texture alongside constant
-    * organic TRUE-growth image traffic; quarantine never fires — the
-    * payloads parse fine, which is exactly why the cap has to exist).
-    * UNCAPPED, each batch's flood banding joins ALL prior flood
-    * fingerprints in the standing index — between-leg candidates grow
-    * linearly per batch, cumulative quadratic, and the junk pairs
-    * persist into `pairs/` and the label merge; CAPPED
-    * (`hotBucketCap` — batch-side occupancy, the vector tier's rule),
-    * the flood buckets prune from both legs at arrival and per-batch
-    * time stays at the organic baseline. Printed per mode: first/last-
-    * third per-batch medians (the slope verdict), persisted pair count
-    * (the junk the cap keeps out of the corpus), ledger
-    * alert/intervention counts, with the capped run's standing
-    * invariant (labels == CC over index/pairs) gating the timing. */
-  def fpStreamFloodSoak(spark: SparkSession, factor: Int, baseDir: String,
-      outDir: String, nBatches: Int = 32, cap: Int = 30,
-      organicPerBatch: Int = 48, floodPerBatch: Int = 64): Unit = {
-    import spark.implicits._
-    import graft.ops.{Dedup, Multimodal}
-    import graft.streaming.FingerprintStream
-    val dir = s"$outDir/fpstreamflood"
-    val fsys = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-    // organic arrivals: true-growth texture families (block 15 — every
-    // per-batch band bucket sits well under the cap); image ids ≡ 1 mod
-    // 3, so `organicNeeded` images span 3× that many doc ids
-    val organicNeeded = nBatches * organicPerBatch
-    val mTotal = (organicNeeded.toLong * 2L + 10L) * 3L
-    val splitM = mTotal / 2L
-    def docsOf(lo: Long, hi: Long): org.apache.spark.sql.DataFrame =
-      spark.range(lo, hi).select(col("id").as("doc_id"),
-        concat(lit("src"), pmod(col("id"), lit(8L))).as("source"))
-    def fpOf(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      Multimodal.pHashes(Multimodal.imagePngMediaTrueGrowth(spark, d))
-        .filter(_.decoded).toDF()
-        .select(col("media_id").as("doc_id"),
-          col("ph0").as("sh0"), col("ph1").as("sh1"))
-    val baseFps = fpOf(docsOf(0L, splitM)).localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val basePairs = Dedup.hammingPairs128(baseFps, 3).localCheckpoint(true)
-    val baseLabels = Dedup.nearDupClusters(
-      baseFps.select(col("doc_id")),
-      basePairs.select(col("id_a"), col("id_b"))).localCheckpoint(true)
-    val organicPool = Multimodal.imagePngMediaTrueGrowth(spark,
-        docsOf(splitM, mTotal))
-      .collect().sortBy(_.media_id).take(organicNeeded).toSeq
-    require(organicPool.length == organicNeeded,
-      s"organic pool short: ${organicPool.length} < $organicNeeded")
-    // the flood payload: ONE fixed texture from a seed range no fixture
-    // or generator uses (4.0e9 — doc textures sit at 1.0e9+, audio
-    // 1.1e9+, video 2.0e9+/3.0e9+), so the flood never collides with
-    // organic traffic; byte-identical copies under fresh ids, exactly a
-    // re-posted viral image
-    val floodPayload = Multimodal.pngBytes(
-      Multimodal.textureImage(4000000000L, 0))
-    var floodId = mTotal + 1000000L
-    val waves = (0 until nBatches).map { i =>
-      organicPool.slice(i * organicPerBatch, (i + 1) * organicPerBatch) ++
-        (0 until floodPerBatch).map { _ =>
-          floodId += 1
-          Multimodal.MediaRow(floodId, "image", floodPayload, "flood")
-        }
-    }
-    for ((mode, hc) <- Seq("uncapped" -> 0, "capped" -> cap)) {
-      val root = s"$dir/$mode"
-      FingerprintStream.init(spark, root, baseFps, basePairs, baseLabels)
-      val batchSecs = waves.zipWithIndex.map { case (w, i) =>
-        val t = System.nanoTime()
-        FingerprintStream.processBatch(spark.createDataset(w).toDF(),
-          i.toLong, root, maxHamming = 3, consolidateEvery = 16,
-          hotBucketCap = hc)
-        (System.nanoTime() - t) / 1e9
-      }
-      val third = batchSecs.length / 3
-      val nPairs = FingerprintStream.livePairs(spark, root).count()
-      val g = FingerprintStream.gaugeRows(spark, root)
-        .agg(count(when(col("alert"), 1)).as("alerts"),
-          count(when(col("hot_buckets") > 0, 1)).as("interventions"),
-          coalesce(sum(col("n_quarantined")), lit(0L)).as("quar")).head()
-      // standing invariant before timing is trusted
-      val labels = FingerprintStream.labels(spark, root)
-      val cc = Dedup.nearDupClusters(
-        FingerprintStream.indexedFps(spark, root).select(col("doc_id")),
-        FingerprintStream.livePairs(spark, root)
-          .select(col("id_a"), col("id_b")))
-      val diff = labels.exceptAll(cc).count() + cc.exceptAll(labels).count()
-      require(diff == 0L, s"$mode labels != CC: $diff")
-      println(f"""SOAK {"phase":"fpstreamflood","mode":"$mode","cap":$hc,"batches":$nBatches,"organic_per_batch":$organicPerBatch,"flood_per_batch":$floodPerBatch,"median_batch_sec":${medSec(batchSecs)}%.2f,"p99_batch_sec":${p99Sec(batchSecs)}%.2f,"first_third_median":${medSec(batchSecs.take(third))}%.2f,"last_third_median":${medSec(batchSecs.takeRight(third))}%.2f,"pairs":$nPairs,"alerts":${g.getLong(0)},"interventions":${g.getLong(1)},"quarantined":${g.getLong(2)}}""")
-    }
-    Seq(baseFps, basePairs, baseLabels)
-      .foreach(graft.Snap.free(_))
-  }
-
   /** `fpdecontam` mode: the retroactive-decontamination cost receipt —
     * the missing half of the flood story the caps alone leave open. The
-    * [[fpStreamFloodSoak]] scenario runs BOTH modes first (uncapped:
-    * junk pairs persisted + flood mega-cluster; capped: organic-only),
+    * `fpstreamflood` scenario ([[streamFloodSoak]]) runs BOTH modes
+    * first (uncapped: junk pairs persisted + flood mega-cluster; capped:
+    * organic-only),
     * then [[graft.streaming.FingerprintStream.decontaminate]] repairs
     * the POLLUTED root at a corpus-level cap and the receipt asserts:
     *
@@ -1203,15 +1180,12 @@ object Soak {
     *
     * Printed: per-mode repair seconds, pairs before/after, report
     * counts (hot buckets, members, suspects, dropped). */
-  def fpDecontamSoak(spark: SparkSession, factor: Int, baseDir: String,
-      outDir: String, nBatches: Int = 32, cap: Int = 30,
-      organicPerBatch: Int = 48, floodPerBatch: Int = 64,
-      decontamCap: Int = 64): Unit = {
+  def fpDecontamSoak(spark: SparkSession, baseDir: String, outDir: String,
+      floodPerBatch: Option[Int], decontamCap: Int = 64): Unit = {
     import graft.streaming.FingerprintStream
     // build the two roots (uncapped polluted, capped clean) with the
     // flood scenario — the receipts this mode extends
-    fpStreamFloodSoak(spark, factor, baseDir, outDir, nBatches, cap,
-      organicPerBatch, floodPerBatch)
+    streamFloodSoak(spark, "fp", baseDir, outDir, floodPerBatch)
     val dir = s"$outDir/fpstreamflood"
     for (mode <- Seq("uncapped", "capped")) {
       val root = s"$dir/$mode"
@@ -1251,115 +1225,23 @@ object Soak {
     * co-resident roots. */
   def coResidencySoak(spark: SparkSession, factor: Int, baseDir: String,
       outDir: String, nBatches: Int = 24, perBatch: Int = 48): Unit = {
-    import spark.implicits._
-    import graft.ops.{Dedup, Multimodal}
-    import graft.streaming.{DocumentStream, EmbeddingStream, FingerprintStream}
     val dir = s"$outDir/coresidency"
-    val fsys = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-    val horizonMs = 3600000L
-    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val need = nBatches * perBatch
-
-    // ── TEXT fixture ──
-    val nD = math.max(Tables.documents(spark, baseDir).count(),
-      need.toLong * 5L / 2L + 10L)
-    trueGrowthDocuments(spark, baseDir, nD)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val docsD = spark.read.parquet(s"$dir/documents.parquet")
-    val splitD = nD * 3L / 5L
-    val histD = docsD.filter(col("doc_id") < splitD)
-    val poolD = docsD.filter(col("doc_id") >= splitD)
-      .select(col("doc_id"), col("text")).limit(need)
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    require(poolD.length == need, s"doc pool short: ${poolD.length}")
-    var k = 0L
-    val docWaves = (0 until nBatches).map { i =>
-      poolD.slice(i * perBatch, (i + 1) * perBatch).map { case (id, tx) =>
-        k += 1; DocumentStream.DocTsIn(id, t0Ms + k * 500L, tx)
-      }.toSeq
-    }
-    val histPairsD = Dedup.minHashPairs(histD).localCheckpoint(true)
-    val histLabelsD = Dedup.nearDupClusters(histD, histPairsD)
-      .localCheckpoint(true)
-
-    // ── VECTOR fixture ──
-    val nE = math.max(Tables.embeddings(spark, baseDir).count(),
-      need.toLong * 5L / 2L + 10L)
-    trueGrowthEmbeddings(spark, baseDir, nE)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val embD = spark.read.parquet(s"$dir/embeddings.parquet")
-    val splitE = nE * 3L / 5L
-    val baseE = embD.filter(col("vec_id") < splitE)
-    val poolE = embD.filter(col("vec_id") >= splitE)
-      .orderBy(col("vec_id")).limit(need)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    require(poolE.length == need, s"emb pool short: ${poolE.length}")
-    val embWaves = (0 until nBatches).map(i =>
-      poolE.slice(i * perBatch, (i + 1) * perBatch).toSeq)
-
-    // ── MEDIA fixture (codec-dominated — half the per-batch rows) ──
-    val imgPerBatch = math.max(8, perBatch / 2)
-    val needImgs = nBatches * imgPerBatch
-    val mTotal = (needImgs.toLong * 2L + 10L) * 3L
-    val splitM = mTotal / 2L
-    def docsOf(lo: Long, hi: Long): org.apache.spark.sql.DataFrame =
-      spark.range(lo, hi).select(col("id").as("doc_id"),
-        concat(lit("src"), pmod(col("id"), lit(8L))).as("source"))
-    val baseFpsM = Multimodal.pHashes(
-        Multimodal.imagePngMediaTrueGrowth(spark, docsOf(0L, splitM)))
-      .filter(_.decoded).toDF()
-      .select(col("media_id").as("doc_id"),
-        col("ph0").as("sh0"), col("ph1").as("sh1"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val basePairsM = Dedup.hammingPairs128(baseFpsM, 3).localCheckpoint(true)
-    val baseLabelsM = Dedup.nearDupClusters(
-      baseFpsM.select(col("doc_id")),
-      basePairsM.select(col("id_a"), col("id_b"))).localCheckpoint(true)
-    val poolM = Multimodal.imagePngMediaTrueGrowth(spark,
-        docsOf(splitM, mTotal))
-      .collect().sortBy(_.media_id).take(needImgs).toSeq
-    require(poolM.length == needImgs, s"media pool short: ${poolM.length}")
-    val mediaWaves = (0 until nBatches).map(i =>
-      poolM.slice(i * imgPerBatch, (i + 1) * imgPerBatch))
-
-    // ── per-tier drivers over a given root ──
-    def initTier(name: String, root: String): Unit = name match {
-      case "text" =>
-        DocumentStream.init(spark, root, histD, histPairsD, histLabelsD)
-      case "vector" =>
-        EmbeddingStream.initFromCorpus(spark, root, baseE,
-          refDelta = embD.filter(col("vec_id") >= splitE))
-      case "media" =>
-        FingerprintStream.init(spark, root, baseFpsM, basePairsM,
-          baseLabelsM)
-    }
-    def runBatch(name: String, root: String, i: Int): Unit = name match {
-      case "text" => DocumentStream.processBatch(docWaves(i).toDF(),
-        i.toLong, root, horizonMs, consolidateEvery = 8)
-      case "vector" => EmbeddingStream.processBatch(
-        embWaves(i).toDF("vec_id", "embedding"), i.toLong, root,
-        consolidateEvery = 8)
-      case "media" => FingerprintStream.processBatch(
-        spark.createDataset(mediaWaves(i)).toDF(), i.toLong, root,
-        maxHamming = 3, consolidateEvery = 8)
-    }
-    val tiers = Seq("text", "vector", "media")
+    freshDir(spark, dir)
+    // each tier's flood-scenario fixture with its organic traffic only;
+    // the media tier is codec-dominated, so it carries half the rows
+    val fixtures = Seq("text" -> "doc", "vector" -> "emb", "media" -> "fp")
+      .map { case (name, tier) => name -> floodFixture(spark, tier, baseDir,
+        dir, nBatches, if (tier == "fp") math.max(8, perBatch / 2)
+          else perBatch, floodPerBatch = 0) }
+    val tiers = fixtures.map(_._1)
+    val fx = fixtures.toMap
 
     // ── phase 1: each tier SOLO ──
     val solo = tiers.map { name =>
       val root = s"$dir/solo_$name"
-      initTier(name, root)
-      name -> (0 until nBatches).map { i =>
-        val t = System.nanoTime()
-        runBatch(name, root, i)
-        (System.nanoTime() - t) / 1e9
-      }
+      fx(name).init(root)
+      name -> (0 until nBatches).map(i =>
+        timed(fx(name).runBatch(root, i, 0, 8)))
     }.toMap
 
     // ── phase 2: CO-RESIDENT — per round, all three tiers concurrently,
@@ -1372,39 +1254,19 @@ object Soak {
     // path; FAIR pools (the session runs spark.scheduler.mode=FAIR)
     // give the tiers equal shares. The 5 ms trigger keeps per-round
     // drain latency negligible next to ~1 s batches. ──
-    tiers.foreach(n => initTier(n, s"$dir/co_$n"))
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val memD = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[DocumentStream.DocTsIn]
-    val memE = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Array[Float])]
-    val memM = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Multimodal.MediaRow]
-    val queries = Map(
-      "text" -> DocumentStream.start(memD.toDF(), s"$dir/co_text",
-        s"$dir/co_ckpt_text", horizonMs, maxDelayMs = 5L,
-        consolidateEvery = 8, schedulerPool = Some("tier-text")),
-      "vector" -> EmbeddingStream.start(
-        memE.toDF().toDF("vec_id", "embedding"), s"$dir/co_vector",
-        s"$dir/co_ckpt_vector", maxDelayMs = 5L, consolidateEvery = 8,
-        schedulerPool = Some("tier-vector")),
-      "media" -> FingerprintStream.start(memM.toDF(), s"$dir/co_media",
-        s"$dir/co_ckpt_media", maxHamming = 3, maxDelayMs = 5L,
-        consolidateEvery = 8, schedulerPool = Some("tier-media")))
+    tiers.foreach(n => fx(n).init(s"$dir/co_$n"))
+    val feeds = tiers.map(n => n -> fx(n).feed(s"$dir/co_$n",
+      s"$dir/co_ckpt_$n", Some(s"tier-$n"))).toMap
     val coSecs = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     try {
       (0 until nBatches).foreach { i =>
-        memD.addData(docWaves(i))
-        memE.addData(embWaves(i))
-        memM.addData(mediaWaves(i))
+        tiers.foreach(n => feeds(n)._2(i))
         val threads = tiers.map { name =>
           new Thread(() => {
             try {
-              val t = System.nanoTime()
-              queries(name).processAllAvailable()
-              val sec = (System.nanoTime() - t) / 1e9
+              val sec = timed(feeds(name)._1.processAllAvailable())
               coSecs.synchronized { coSecs(name) = coSecs(name) :+ sec }
             } catch { case e: Throwable => failure.compareAndSet(null, e) }
           }, s"coresidency-$name")
@@ -1413,104 +1275,20 @@ object Soak {
         threads.foreach(_.join())
         Option(failure.get()).foreach(throw _)
       }
-    } finally queries.values.foreach(_.stop())
+    } finally feeds.values.foreach(_._1.stop())
 
     // ── invariants + verdicts ──
     for (name <- tiers) {
-      val root = s"$dir/co_$name"
-      val (labels, cc) = name match {
-        case "text" => (DocumentStream.labels(spark, root),
-          Dedup.nearDupClusters(
-            DocumentStream.keptIds(spark, root).select(col("doc_id")),
-            DocumentStream.livePairs(spark, root)))
-        case "vector" => (EmbeddingStream.labels(spark, root),
-          Dedup.nearDupClusters(
-            EmbeddingStream.keptIds(spark, root)
-              .select(col("vec_id").as("doc_id")),
-            EmbeddingStream.livePairs(spark, root)
-              .select(col("id_a"), col("id_b"))))
-        case "media" => (FingerprintStream.labels(spark, root),
-          Dedup.nearDupClusters(
-            FingerprintStream.indexedFps(spark, root)
-              .select(col("doc_id")),
-            FingerprintStream.livePairs(spark, root)
-              .select(col("id_a"), col("id_b"))))
-      }
-      val diff = labels.exceptAll(cc).count() + cc.exceptAll(labels).count()
+      val diff = fx(name).tier.labelDiff(spark, s"$dir/co_$name")
       require(diff == 0L, s"co-resident $name labels != CC: $diff")
       val co = coSecs(name)
       val third = co.length / 3
       val ratio = medSec(co) / medSec(solo(name))
       println(f"""SOAK {"phase":"coresidency","tier":"$name","batches":$nBatches,"solo_median_sec":${medSec(solo(name))}%.2f,"co_median_sec":${medSec(co)}%.2f,"co_over_solo":$ratio%.2f,"co_first_third_median":${medSec(co.take(third))}%.2f,"co_last_third_median":${medSec(co.takeRight(third))}%.2f,"co_p99_sec":${p99Sec(co)}%.2f}""")
     }
-    Seq(histPairsD, histLabelsD, baseFpsM, basePairsM, baseLabelsM)
-      .foreach(graft.Snap.free(_))
+    fx.values.foreach(_.frames.foreach(graft.Snap.free(_)))
   }
 
-  /** `embstreamlong` mode: [[docStreamLongSoak]]'s batch-count-flatness
-    * receipt on the VECTOR tier — the fold machinery is the shared
-    * [[graft.streaming.BatchState]], but the folded bytes differ (the
-    * `vecs/` state carries full embeddings, the heaviest per-row state
-    * any runnable pipeline folds), so the vector pipeline earns its own
-    * slope measurement. `nBatches` constant-size micro-batches drive
-    * [[graft.streaming.EmbeddingStream.processBatch]] directly with
-    * `consolidateEvery` between folds (0 = the unbounded counterfactual,
-    * `SPARK_GRAFT_CONSOLIDATE_EVERY` selects it); printed per scale:
-    * median/p99 batch seconds, first/last-third medians (the flatness
-    * verdict in BATCH COUNT), the consolidation batches' median, final
-    * per-sub directory counts vs one-per-batch, and state bytes. The
-    * standing invariant (labels == CC over kept/pairs) gates the
-    * timing. */
-  def embStreamLongSoak(spark: SparkSession, factor: Int, baseDir: String,
-      outDir: String, nBatches: Int = 120,
-      consolidateEvery: Int = 16): Unit = {
-    import graft.ops.{Dedup, Similarity}
-    import graft.streaming.EmbeddingStream
-    val threshold = 0.4
-    val nBase = Tables.embeddings(spark, baseDir).count()
-    for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
-      val dir = s"$outDir/embstreamlong_$tag"
-      val root = s"$dir/state"
-      val fsys = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-      trueGrowthEmbeddings(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val splitId = n * 3L / 5L
-      val base = emb.filter(col("vec_id") < splitId)
-      val arrFrame = emb.filter(col("vec_id") >= n - nBase * 2L / 5L)
-        .select(col("vec_id"), col("embedding"))
-      import spark.implicits._
-      val arrivals = arrFrame.as[EmbeddingStream.VecIn]
-        .collect().sortBy(_.vec_id)
-      EmbeddingStream.initFromCorpus(spark, root, base,
-        refDelta = arrFrame, threshold = threshold)
-      val waves = arrivals.grouped(
-        math.max(1, arrivals.length / nBatches)).toSeq
-      val batchSecs = waves.zipWithIndex.map { case (w, i) =>
-        val t = System.nanoTime()
-        EmbeddingStream.processBatch(
-          w.toSeq.toDF().select(col("vec_id"), col("embedding")),
-          i.toLong, root, threshold, consolidateEvery = consolidateEvery)
-        (System.nanoTime() - t) / 1e9
-      }
-      val consSecs = batchSecs.zipWithIndex.collect {
-        case (s, i) if consolidateEvery > 0 && i > 0 &&
-          i % consolidateEvery == 0 => s }
-      val third = batchSecs.length / 3
-      val labels = EmbeddingStream.labels(spark, root)
-      val cc = Dedup.nearDupClusters(
-        EmbeddingStream.keptIds(spark, root).select(col("vec_id").as("doc_id")),
-        EmbeddingStream.livePairs(spark, root)
-          .select(col("id_a"), col("id_b")))
-      val diff = labels.exceptAll(cc).count() + cc.exceptAll(labels).count()
-      val dirCounts = Seq("vecs", "vhash", "pairs", "gauge")
-        .map(s => s""""$s":${batchDirCount(fsys, root, s)}""").mkString(",")
-      println(f"""SOAK {"phase":"embstreamlong","scale":"$tag","vectors":$n,"base":$splitId,"arrivals":${arrivals.length},"batches":${waves.length},"consolidate_every":$consolidateEvery,"median_batch_sec":${medSec(batchSecs)}%.2f,"p99_batch_sec":${p99Sec(batchSecs)}%.2f,"first_third_median":${medSec(batchSecs.take(third))}%.2f,"last_third_median":${medSec(batchSecs.takeRight(third))}%.2f,"consolidation_median_sec":${medSec(consSecs)}%.2f,"label_diff":$diff,"dirs":{$dirCounts},"unconsolidated_dirs_per_sub":${waves.length + 1},"state_bytes":${dirBytes(fsys, root)},"vecs_bytes":${dirBytes(fsys, s"$root/vecs")}}""")
-    }
-  }
 
   /** `bandhealth` mode: the blind-spot + threshold-calibration receipt
     * for [[graft.ops.Dedup.bandIndexHealthGauge]] (the ivfdrift soak's
@@ -1750,6 +1528,7 @@ object Soak {
       val diff = retired.exceptAll(rebuilt).count() +
         rebuilt.exceptAll(retired).count()
       println(f"""SOAK {"phase":"retirecc","scale":"$tag","docs":$n,"expired_docs":$nExp,"retire_sec":$retireSec%.2f,"rebuild_sec":$rebuildSec%.2f,"label_diff":$diff}""")
+      require(diff == 0L, s"retired labels != rebuild at $tag: $diff")
 
       // vary-expired-hold-corpus: half the expired set against the same
       // corpus — cost should track the expired-touched components
@@ -1778,11 +1557,8 @@ object Soak {
     import spark.implicits._
     import graft.ops.{Dedup, Multimodal}
     val nBase = Tables.documents(spark, baseDir).count()
-    def docsOf(n: Long): DataFrame =
-      spark.range(n).select(col("id").as("doc_id"),
-        concat(lit("src"), pmod(col("id"), lit(8L))).as("source"))
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
-      val docs = docsOf(n)
+      val docs = mediaDocs(spark, 0L, n)
       val runs: Seq[(String, () => DataFrame)] = Seq(
         "q_phash_pairs" -> (() => Dedup.hammingPairs128(
           Multimodal.pHashes(Multimodal.imagePngMediaTrueGrowth(spark, docs))
@@ -1881,15 +1657,13 @@ object Soak {
   def embStreamSoak(spark: SparkSession, factor: Int, baseDir: String,
       outDir: String, nWaves: Int = 8): Unit = {
     import spark.implicits._
-    import graft.ops.{Dedup, Similarity}
+    import graft.ops.Similarity
     import graft.streaming.EmbeddingStream
     val threshold = 0.4
     val nBase = Tables.embeddings(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/embstream_$tag"
-      val fsys = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
+      freshDir(spark, dir)
       trueGrowthEmbeddings(spark, baseDir, n)
         .repartition(spark.sparkContext.defaultParallelism)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -1921,16 +1695,7 @@ object Soak {
       q.stop()
       val medianWave = waveSecs.sorted.apply(waveSecs.length / 2)
       // invariant before timing is trusted
-      def labelDiff(): Long = {
-        val labels = EmbeddingStream.labels(spark, root)
-        val cc = Dedup.nearDupClusters(
-          EmbeddingStream.keptIds(spark, root)
-            .select(col("vec_id").as("doc_id")),
-          EmbeddingStream.livePairs(spark, root)
-            .select(col("id_a"), col("id_b")))
-        labels.exceptAll(cc).count() + cc.exceptAll(labels).count()
-      }
-      val diff = labelDiff()
+      val diff = EmbeddingStream.labelDiff(spark, root)
 
       // ── epoch leg: shifted traffic fires → ACCUMULATE → retrain →
       // quiet + flat. A corpus-proportional retrain gives a new mode
@@ -2038,9 +1803,11 @@ object Soak {
       EmbeddingStream.retire(spark, root, expired)
       val retireSec = (System.nanoTime() - tR) / 1e9
       val legsPost = probeLegs()
-      val diffAfter = labelDiff()
+      val diffAfter = EmbeddingStream.labelDiff(spark, root)
       val keptAfter = EmbeddingStream.keptIds(spark, root).count()
       println(f"""SOAK {"phase":"embstream","scale":"$tag","vectors":$n,"base":$splitId,"arrivals":${arrivals.length},"waves":${waveSecs.length},"init_sec":$initSec%.2f,"median_wave_sec":$medianWave%.2f,"max_wave_sec":${waveSecs.max}%.2f,"label_diff":$diff,"shift_batch_sec":$shiftBatchSec%.2f,"retrain_sec":$retrainSec%.2f,"post_epoch_batch_sec":$postEpochBatchSec%.2f,"kept_rows":$keptRows,"retire_sec":$retireSec%.2f,"kept_after_retire":$keptAfter,"label_diff_after_retire":$diffAfter,"probe_legs_pre_retire":$legsPre,"probe_legs_post_retire":$legsPost}""")
+      require(diff == 0L && diffAfter == 0L,
+        s"labels != CC at $tag: $diff before retire, $diffAfter after")
     }
   }
 
@@ -2372,13 +2139,26 @@ object Soak {
       spark.stop()
       return
     }
-    if (args.lift(3).contains("docstreamlong")) {
+    val floodPerBatch = sys.env.get("SPARK_GRAFT_FLOOD_PER_BATCH")
+      .map(_.toInt)
+    val longTier = Map("docstreamlong" -> "doc", "fpstreamlong" -> "fp",
+      "embstreamlong" -> "emb")
+    val floodTier = Map("docstreamflood" -> "doc", "fpstreamflood" -> "fp",
+      "embstreamflood" -> "emb")
+    val mode = args.lift(3).getOrElse("")
+    if (longTier.contains(mode)) {
       // SPARK_GRAFT_CONSOLIDATE_EVERY=0 runs the COUNTERFACTUAL (no
       // consolidation — one directory per batch forever) so the slope
       // the fold prevents is measured, not argued
-      docStreamLongSoak(spark, factor, baseDir, outDir,
+      streamLongSoak(spark, longTier(mode), factor, baseDir, outDir,
+        nBatches = if (mode == "fpstreamlong") 60 else 120,
         consolidateEvery = sys.env.get("SPARK_GRAFT_CONSOLIDATE_EVERY")
           .map(_.toInt).getOrElse(16))
+      spark.stop()
+      return
+    }
+    if (floodTier.contains(mode)) {
+      streamFloodSoak(spark, floodTier(mode), baseDir, outDir, floodPerBatch)
       spark.stop()
       return
     }
@@ -2392,55 +2172,18 @@ object Soak {
       spark.stop()
       return
     }
-    if (args.lift(3).contains("embstreamflood")) {
-      embStreamFloodSoak(spark, factor, baseDir, outDir,
-        floodPerBatch = sys.env.get("SPARK_GRAFT_FLOOD_PER_BATCH")
-          .map(_.toInt).getOrElse(128))
-      spark.stop()
-      return
-    }
     if (args.lift(3).contains("semcapflood")) {
       semCapFloodSoak(spark, factor, baseDir, outDir)
       spark.stop()
       return
     }
-    if (args.lift(3).contains("docstreamflood")) {
-      docStreamFloodSoak(spark, factor, baseDir, outDir,
-        floodPerBatch = sys.env.get("SPARK_GRAFT_FLOOD_PER_BATCH")
-          .map(_.toInt).getOrElse(64))
-      spark.stop()
-      return
-    }
     if (args.lift(3).contains("fpdecontam")) {
-      fpDecontamSoak(spark, factor, baseDir, outDir,
-        floodPerBatch = sys.env.get("SPARK_GRAFT_FLOOD_PER_BATCH")
-          .map(_.toInt).getOrElse(64))
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("fpstreamflood")) {
-      fpStreamFloodSoak(spark, factor, baseDir, outDir,
-        floodPerBatch = sys.env.get("SPARK_GRAFT_FLOOD_PER_BATCH")
-          .map(_.toInt).getOrElse(64))
+      fpDecontamSoak(spark, baseDir, outDir, floodPerBatch)
       spark.stop()
       return
     }
     if (args.lift(3).contains("coresidency")) {
       coResidencySoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("fpstreamlong")) {
-      fpStreamLongSoak(spark, factor, baseDir, outDir,
-        consolidateEvery = sys.env.get("SPARK_GRAFT_CONSOLIDATE_EVERY")
-          .map(_.toInt).getOrElse(16))
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("embstreamlong")) {
-      embStreamLongSoak(spark, factor, baseDir, outDir,
-        consolidateEvery = sys.env.get("SPARK_GRAFT_CONSOLIDATE_EVERY")
-          .map(_.toInt).getOrElse(16))
       spark.stop()
       return
     }

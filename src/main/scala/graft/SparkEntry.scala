@@ -121,7 +121,8 @@ object SparkEntry {
   /** The media DECONTAMINATION gate's state, built once per JVM
     * ([[graft.streaming.ParityCheck.buildDecontamFingerprintPipeline]] —
     * the template flood run UNCAPPED, then
-    * [[graft.streaming.FingerprintStream.decontaminate]], report
+    * [[graft.streaming.FingerprintStream.decontaminate]] — the shared
+    * [[graft.streaming.IndexTier.repairFlood]] — report
     * persisted) — serves q_fpstream_decontam_parity. */
   private def fpStreamDecontamRoot(s: SparkSession, dir: String): String =
     graft.sources.ManagedTable.once(
@@ -132,7 +133,8 @@ object SparkEntry {
   /** The TEXT decontamination gate's state, built once per JVM
     * ([[graft.streaming.ParityCheck.buildDecontamPipeline]] — a NEAR-dup
     * template flood the exact tier cannot stop, run uncapped, then
-    * [[graft.streaming.DocumentStream.decontaminate]]) — serves
+    * [[graft.streaming.DocumentStream.decontaminate]], the same shared
+    * repair) — serves
     * q_docstream_decontam_parity. */
   private def docStreamDecontamRoot(s: SparkSession, dir: String): String =
     graft.sources.ManagedTable.once(
@@ -143,7 +145,8 @@ object SparkEntry {
   /** The VECTOR decontamination gate's state, built once per JVM
     * ([[graft.streaming.ParityCheck.buildDecontamEmbeddingPipeline]] —
     * a sign-flip mode-collapse flood run uncapped, then
-    * [[graft.streaming.EmbeddingStream.decontaminate]] at the derived
+    * [[graft.streaming.EmbeddingStream.decontaminate]] (the shared
+    * repair without a survivor test) at the derived
     * corpus cap) — serves q_embstream_decontam_parity. */
   private def embStreamDecontamRoot(s: SparkSession, dir: String): String =
     graft.sources.ManagedTable.once(

@@ -10,6 +10,14 @@ object Verify {
     // iteration (the driver always passes exactly two args → full dump)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // a misspelled filter name would otherwise dump nothing for it, and an
+    // oracle check over the dump would compare nothing and pass
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[verify] unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -1253,9 +1253,8 @@ object Dedup {
     * EDGES): re-converge exactly the components containing `seedIds`
     * from the given (post-deletion) pair set, at cost proportional to
     * those components, passing every untouched label through. The
-    * retroactive-decontamination operators
-    * ([[graft.streaming.FingerprintStream.decontaminate]] /
-    * [[graft.streaming.DocumentStream.decontaminate]]) call this with
+    * retroactive-decontamination repair shared by the runnable
+    * pipelines ([[graft.streaming.IndexTier.repairFlood]]) calls this with
     * `seedIds` = the endpoints of the pairs they just deleted from the
     * persisted pair state.
     *

@@ -241,7 +241,7 @@ object Search {
     * TTL batch, but a standing per-query tax that grows with the expired
     * set), the persisted postings/doclen tables are physically REWRITTEN
     * once ([[graft.sources.ManagedTable.rewriteExpired]] — the
-    * [[graft.streaming.DocumentStream.retire]] pattern applied to
+    * [[graft.streaming.IndexTier.retireWith]] pattern applied to
     * ManagedTable artifacts), and serving reads them through the exact
     * [[bm25TopKIndexed]] plan: shard partition pruning intact, NO
     * anti-join anywhere — post-rewrite serve cost equals the

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * batch, the tiered LSM-style consolidation fold with its crash-safe
   * two-phase rename protocol), extracted so every runnable pipeline
   * shares ONE implementation of the replay contract instead of
-  * re-deriving it per tier ([[EmbeddingStream]] is the vector twin,
-  * [[FingerprintStream]] the media one).
+  * re-deriving it per tier; the lifecycle built on it is
+  * [[IndexTier]], which [[DocumentStream]], [[EmbeddingStream]] and
+  * [[FingerprintStream]] extend.
   *
   * The invariants live here; the SEMANTICS (which tiers run per batch,
   * what folds mean for each sub) stay with the pipelines:

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The RUNNABLE live document-dedup pipeline — the three tiers the
   * wave-replay gate ([[ParityCheck.livePipelineParity]]) proves by hand,
@@ -25,16 +25,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  3. LABEL tier — the verified pairs merge into the standing labeling
   *     via [[graft.ops.Dedup.mergeClusterDelta]], cost ∝ batch.
   *
-  * RESTART CONTRACT (the reason this file exists beyond the gate):
-  * foreachBatch is at-least-once — a crash can replay a partially-applied
-  * batch — so every state write is keyed by BATCH ID and every state read
-  * is filtered to batches strictly BEFORE the current one. A replayed
-  * batch therefore recomputes against exactly the pre-batch state and
-  * overwrites its own partitions with identical rows: effectively-once,
-  * end to end. DocumentStreamSpec kills the query mid-replay, restarts it
-  * from the checkpoint, and asserts the final kept/pair/label state
-  * equals the all-at-once batch twin — the same equalities the parity
-  * gate folds.
+  * RESTART CONTRACT: the shared [[IndexTier]] lifecycle's — every state
+  * write keyed by BATCH ID, every state read pinned strictly BEFORE the
+  * current batch, so a replayed batch overwrites its own partitions with
+  * identical rows: effectively-once, end to end. DocumentStreamSpec kills
+  * the query mid-replay, restarts it from the checkpoint, and asserts the
+  * final kept/pair/label state equals the all-at-once batch twin — the
+  * same equalities the parity gate folds.
   *
   * State layout under `root` (each `batch=<id>` directory written with
   * overwrite — idempotent under replay; the standing corpus initializes
@@ -70,12 +67,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * ~864k directories/day, and every batch re-lists and unions all of
   * them, so listing + parquet-footer cost would dominate per-batch time
   * long before data volume does. [[consolidate]] folds the committed
-  * batch directories of `hist`/`kept`/`pairs`/`hw`/`bands` into TIERED
-  * consolidated units (crash-safe two-phase rename protocol; the
-  * binomial ladder of [[tieredFold]]), so with `consolidateEvery = K`
-  * the per-sub directory count is bounded by K + log₂(batches/K) + 2
-  * for any uptime AND each arrival byte is rewritten only O(log batches)
-  * times total — the fold-everything alternative would rewrite every
+  * batch directories of `hist`/`kept`/`pairs`/`gauge`/`hw`/`bands` into
+  * TIERED consolidated units (crash-safe two-phase rename protocol; the
+  * binomial ladder of [[BatchState.tieredFold]]), so with
+  * `consolidateEvery = K` the per-sub directory count is bounded by
+  * K + log₂(batches/K) + 2 for any uptime AND each arrival byte is
+  * rewritten only O(log batches) times total — the fold-everything alternative would rewrite every
   * byte on every fold (T/K times), the write amplification tiered
   * MergeTree merges exist to avoid.
   *
@@ -85,7 +82,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * janitor + fold filter), batch-sized verify and label merge. Nothing
   * corpus-sized shuffles at arrival time.
   */
-object DocumentStream {
+object DocumentStream extends IndexTier {
+  import IndexTier.{MemDisk, Sub}
 
   /** One streamed document with its event time (epoch ms). */
   final case class DocTsIn(doc_id: Long, ts_ms: Long, text: String)
@@ -102,56 +100,37 @@ object DocumentStream {
   val AlertSharePpb = 200000000L
   val AlertCandPpb = 16000000000L
 
-  // the batch-keyed state machinery is SHARED with the other runnable
-  // pipelines (EmbeddingStream is the vector twin) — one implementation
-  // of the replay/consolidation contract, extracted to [[BatchState]]
-  private def fs(spark: SparkSession, root: String) =
-    BatchState.fs(spark, root)
+  private val Hist = Sub("hist", "doc_id BIGINT, text STRING", Seq("doc_id"))
+  private val Kept = Sub("kept", "doc_id BIGINT", Seq("doc_id"))
+  private val Pairs = Sub("pairs", "id_a BIGINT, id_b BIGINT",
+    Seq("id_a", "id_b"))
+  // `hw` folds to its single MAX row — the admission bound only ever
+  // needs the max over prior batches
+  private val Hw = Sub("hw", "ts_ms BIGINT",
+    fold = _.agg(max(col("ts_ms")).as("ts_ms"))
+      .filter(col("ts_ms").isNotNull))
+  private val Bands = Sub("bands",
+    "doc_id BIGINT, band INT, bh BIGINT, ts_ms BIGINT", Seq("doc_id"))
+  protected val subs: Seq[Sub] =
+    Seq(Hist, Kept, Pairs, Sub("gauge", GaugeSchema), Hw, Bands)
+  protected val keptSub: Sub = Kept
 
-  private def batchDirs(spark: SparkSession, root: String, sub: String,
-      before: Long): Seq[String] =
-    BatchState.batchDirs(spark, root, sub, before)
-
-  private def state(spark: SparkSession, root: String, sub: String,
-      before: Long, schema: String): DataFrame =
-    BatchState.state(spark, root, sub, before, schema)
-
-  private def write(df: DataFrame, root: String, sub: String,
-      batchId: Long): Unit =
-    BatchState.write(df, root, sub, batchId)
-
-  // ── consolidation: the MergeTree background-merge analogue (the fold
-  // protocol itself — two-phase crash-safe swaps, the tiered binomial
-  // ladder, unit sidecars — lives in [[BatchState]]) ──
-
-  private def foldRange(spark: SparkSession, root: String, sub: String,
-      lo: Long, upTo: Long, schema: String, intoBase: Boolean,
-      xform: DataFrame => DataFrame): Unit =
-    BatchState.foldRange(spark, root, sub, lo, upTo, schema, intoBase, xform)
-
-  private def recoverFold(spark: SparkSession, root: String,
-      sub: String): Unit =
-    BatchState.recoverFold(spark, root, sub)
-
-  private def unitLo(f: org.apache.hadoop.fs.FileSystem, root: String,
-      sub: String, id: Long): Option[Long] =
-    BatchState.unitLo(f, root, sub, id)
-
-  private def tieredFold(spark: SparkSession, root: String, sub: String,
-      upTo: Long, schema: String, xform: DataFrame => DataFrame): Unit =
-    BatchState.tieredFold(spark, root, sub, upTo, schema, xform)
+  /** The committed high-water mark — max event time over the hw rows of
+    * batches strictly below `before` (Long.MinValue before any). */
+  private def highWater(spark: SparkSession, root: String,
+      before: Long): Long =
+    read(spark, root, Hw, before).agg(max(col("ts_ms"))).head().get(0) match {
+      case null => Long.MinValue
+      case t: java.lang.Long => t.longValue()
+    }
 
   /** Consolidate every committed state surface below `upToBatch` — call
     * between batches with the stream stopped, or let [[processBatch]]
-    * invoke it on a `consolidateEvery` cadence (there `upToBatch` is the
-    * current batch id: every directory below it is checkpoint-committed
-    * and immutable, so the fold can never touch a batch that might
-    * replay differently).
+    * invoke it on a `consolidateEvery` cadence (the shared
+    * [[IndexTier.foldSubs]]).
     *
-    *  - `hist`/`kept`/`pairs` fold row-for-row;
-    *  - `hw` folds to its single MAX row — the admission bound only ever
-    *    needs the max over prior batches (this is the reaping the old
-    *    in-code comment wrongly claimed the band janitor performed);
+    *  - `hist`/`kept`/`pairs`/`gauge` fold row-for-row; `hw` folds to its
+    *    single MAX row;
     *  - `bands` first reclaims whole aged directories via
     *    [[compactBands]] (parquet-footer max-ts, no Spark job), then
     *    folds the survivors UNDER the TTL filter ts_ms ≥ highWater −
@@ -162,42 +141,21 @@ object DocumentStream {
     *    with sits at ts ≥ highWater − lateness − horizon — exactly the
     *    cut. The high-water mark is read from the COMMITTED hw rows
     *    (batches strictly below `upToBatch`), never from an uncommitted
-    *    batch's row, closing the replay hole a wall-clock or
-    *    all-batches-max janitor cut would have.
+    *    batch's row.
     *
-    * Folding is TIERED ([[tieredFold]] — O(log batches) units, O(log
-    * batches) total rewrites per byte), and NEVER touches the
-    * `batch=-1` base on the in-stream cadence: the base snapshot is the
-    * standing 100 TB corpus. `intoBase = true` folds everything into it
-    * — a MAJOR compaction that rewrites the standing corpus; reserve it
-    * for maintenance windows. */
+    * `intoBase = true` folds everything into the `batch=-1` base — a
+    * MAJOR compaction that rewrites the standing corpus; reserve it for
+    * maintenance windows. */
   def consolidate(spark: SparkSession, root: String, upToBatch: Long,
       horizonMs: Long, latenessMs: Long = 600000L,
       intoBase: Boolean = false): Unit = {
-    def fold(sub: String, schema: String,
-        xform: DataFrame => DataFrame): Unit =
-      if (intoBase)
-        foldRange(spark, root, sub, -1L, upToBatch, schema,
-          intoBase = true, xform)
-      else tieredFold(spark, root, sub, upToBatch, schema, xform)
-    fold("hist", "doc_id BIGINT, text STRING", identity)
-    fold("kept", "doc_id BIGINT", identity)
-    fold("pairs", "id_a BIGINT, id_b BIGINT", identity)
-    fold("gauge", GaugeSchema, identity)
-    fold("hw", "ts_ms BIGINT",
-      df => df.agg(max(col("ts_ms")).as("ts_ms"))
-        .filter(col("ts_ms").isNotNull))
-    // committed high water only: hw rows of batches < upToBatch
-    val hw = state(spark, root, "hw", upToBatch, "ts_ms BIGINT")
-      .agg(max(col("ts_ms"))).head().get(0) match {
-        case null => Long.MinValue
-        case t: java.lang.Long => t.longValue()
-      }
+    foldSubs(spark, root, upToBatch, subs.filterNot(_ == Bands), intoBase)
+    val hw = highWater(spark, root, upToBatch)
     if (hw != Long.MinValue) {
       compactBands(spark, root, hw, horizonMs, latenessMs)
       val cut = hw - horizonMs - latenessMs
-      fold("bands", "doc_id BIGINT, band INT, bh BIGINT, ts_ms BIGINT",
-        df => df.filter(col("ts_ms") >= cut))
+      foldSubs(spark, root, upToBatch,
+        Seq(Bands.copy(fold = _.filter(col("ts_ms") >= cut))), intoBase)
     }
   }
 
@@ -209,88 +167,27 @@ object DocumentStream {
     * REMOVAL; the pair edges can — the retireClusterDelta contract). */
   def init(spark: SparkSession, root: String, history: DataFrame,
       historyPairs: DataFrame, baseLabels: DataFrame): Unit = {
-    write(history.select(col("doc_id"), col("text")), root, "hist", -1L)
-    write(history.select(col("doc_id")), root, "kept", -1L)
-    write(historyPairs.select(col("id_a"), col("id_b")), root, "pairs", -1L)
-    write(baseLabels.select(col("doc_id"), col("cluster_id")),
+    BatchState.write(history.select(col("doc_id"), col("text")),
+      root, "hist", -1L)
+    BatchState.write(history.select(col("doc_id")), root, "kept", -1L)
+    BatchState.write(historyPairs.select(col("id_a"), col("id_b")),
+      root, "pairs", -1L)
+    BatchState.write(baseLabels.select(col("doc_id"), col("cluster_id")),
       root, "labels", -1L)
   }
 
-  /** RETENTION for the runnable pipeline — the reference's TTL
-    * (internal/db/db.go:59-65) applied to EVERY state the stream
-    * maintains, so live state follows the live corpus instead of the
-    * all-time one:
-    *
-    *  - `hist/` and `kept/` drop the expired documents' rows
-    *    ([[graft.ops.Dedup.expireRows]] per batch directory) — so a
-    *    re-sent expired text is genuinely NEW again, exactly the
-    *    reference's TTL semantics;
-    *  - `pairs/` drops every edge with an expired endpoint (an edge dies
-    *    with its node);
-    *  - `bands/` drops the expired documents' band signatures, so
-    *    arrivals stop generating candidates against retired documents
-    *    immediately instead of until age-out (the kept-endpoint
-    *    restriction already FILTERS such candidates — correctness never
-    *    depended on this — but generating and probing them is wasted
-    *    work ∝ expired-band collisions per batch);
-    *  - `labels/`'s latest snapshot retires through
-    *    [[graft.ops.Dedup.retireClusterDelta]] over the PRE-prune pair
-    *    state — touched components re-converge from their surviving
-    *    edges (removal can split), hash-equal to a rebuild on survivors;
-    *  - aged band directories reclaim through [[compactBands]] when a
-    *    high-water mark is supplied.
-    *
-    * OPERATIONAL CONTRACT: run with the stream STOPPED at a committed
-    * checkpoint (the reference's TTL is likewise a maintenance-window
-    * merge). Earlier batches must not replay afterwards — a cleanly
-    * stopped checkpoint guarantees that — and the rewrite itself is
-    * idempotent (pruning is an anti-join; re-running completes a
-    * crashed pass). Each directory rewrite snapshots before overwriting
-    * (Spark cannot overwrite its own input in place). */
+  /** RETENTION — the shared [[IndexTier.retireWith]] over `hist`,
+    * `kept`, `pairs` and `bands` (a retired document's band signatures
+    * drop too, so arrivals stop generating candidates against it
+    * immediately instead of at age-out); aged band directories then
+    * reclaim through [[compactBands]] when a high-water mark is
+    * supplied. */
   def retire(spark: SparkSession, root: String, expiredIds: DataFrame,
       highWaterMs: Option[Long] = None, horizonMs: Long = 3600000L,
       latenessMs: Long = 600000L): Unit = {
-    // a crashed consolidation may hold committed-but-unswapped rows in a
-    // fold stage the per-directory prune below would miss — finish (or
-    // abort) any interrupted fold before rewriting state
-    Seq("hist", "kept", "pairs", "hw", "bands", "gauge")
-      .foreach(recoverFold(spark, root, _))
-    val memDisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = expiredIds
-      .select(col(graft.ops.Dedup.expiryKey(expiredIds, "doc_id"))
-        .as("doc_id")).distinct()
-      .localCheckpoint(true, memDisk)
-    // labels first, from the PRE-prune pair state (retireClusterDelta
-    // does its own surviving-touched restriction, so feeding pruned or
-    // unpruned edges is equivalent — unpruned keeps the contract plain)
-    val pairsState = state(spark, root, "pairs", Long.MaxValue,
-      "id_a BIGINT, id_b BIGINT")
-    // retireClusterDelta returns its result already checkpointed
-    val retired = graft.ops.Dedup.retireClusterDelta(
-      labels(spark, root), pairsState, e)
-    val latest = batchDirs(spark, root, "labels", Long.MaxValue)
-      .maxBy(_.split("batch=").last.toLong)
-    retired.write.mode("overwrite").parquet(latest)
-    // prune the append-only states directory by directory, preserving
-    // each consolidated unit's `_unit_lo` sidecar
-    // ([[BatchState.rewriteDirPreservingUnit]] — the parquet overwrite
-    // would drop it; without it the next tiered fold would demote the
-    // unit to raw and re-fold it — correct but a wasted rewrite)
-    def prune(sub: String, cols: Seq[String]): Unit =
-      batchDirs(spark, root, sub, Long.MaxValue).foreach { p =>
-        BatchState.rewriteDirPreservingUnit(spark, root, sub, p,
-          df => cols.foldLeft(df)(
-            (acc, c) => graft.ops.Dedup.expireRows(acc, c, e)))
-      }
-    prune("hist", Seq("doc_id"))
-    prune("kept", Seq("doc_id"))
-    prune("pairs", Seq("id_a", "id_b"))
-    prune("bands", Seq("doc_id"))
+    retireWith(spark, root, expiredIds)
     highWaterMs.foreach(hw =>
       compactBands(spark, root, hw, horizonMs, latenessMs))
-    graft.Snap.free(e)
-    graft.Snap.free(retired)
-    ()
   }
 
   /** The per-batch transaction — public so the spec can also drive a
@@ -329,20 +226,13 @@ object DocumentStream {
       hotBucketCap: Int = 0, alertSharePpb: Long = AlertSharePpb,
       alertCandPpb: Long = AlertCandPpb): Unit = {
     val spark = batch.sparkSession
-    val memDisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    if (consolidateEvery > 0 && batchId > 0 &&
-        batchId % consolidateEvery == 0)
+    if (foldDue(batchId, consolidateEvery))
       consolidate(spark, root, batchId, horizonMs, latenessMs)
     if (batch.isEmpty) return
-    // the committed high-water mark (max event time over prior batches;
-    // Long.MinValue before any) — the hw/ rows are 1-per-batch AND the
-    // consolidation fold collapses them to one max row per tiered unit
-    // (O(log batches)), so this read stays bounded for any uptime
-    val hw = state(spark, root, "hw", batchId, "ts_ms BIGINT")
-      .agg(max(col("ts_ms"))).head().get(0) match {
-        case null => Long.MinValue
-        case t: java.lang.Long => t.longValue()
-      }
+    // the hw/ rows are 1-per-batch AND the consolidation fold collapses
+    // them to one max row per tiered unit (O(log batches)), so this read
+    // stays bounded for any uptime
+    val hw = highWater(spark, root, batchId)
     // snapshot the ADMITTED view only — its several consumers (exact
     // tier, banding, text lookup, ts bounds) all read post-admission
     // rows; the arrived count (a ledger signal) re-scans the unpersisted
@@ -353,21 +243,20 @@ object DocumentStream {
     val b = raw
       .filter(col("ts_ms") >= (if (hw == Long.MinValue) Long.MinValue
         else hw - latenessMs))
-      .localCheckpoint(true, memDisk)
+      .localCheckpoint(true, MemDisk)
     if (b.isEmpty) { graft.Snap.free(b); return }
 
     // ── tier 1: exact dedup against history, then within-batch ──
-    val histTexts = state(spark, root, "hist", batchId,
-      "doc_id BIGINT, text STRING")
+    val histTexts = read(spark, root, Hist, batchId)
     val survIds = graft.ops.Dedup.historyDedupBloom(spark,
         b.select(col("doc_id"), col("text")), histTexts)
       .groupBy(col("text_hash")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     val kept = b.join(survIds, Seq("doc_id"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    write(kept.select(col("doc_id"), col("text")), root, "hist", batchId)
-    write(kept.select(col("doc_id")), root, "kept", batchId)
+      .localCheckpoint(true, MemDisk)
+    BatchState.write(kept.select(col("doc_id"), col("text")),
+      root, "hist", batchId)
+    BatchState.write(kept.select(col("doc_id")), root, "kept", batchId)
 
     // ── tier 2: horizon-bounded LSH candidates + exact verify ──
     // every arrival bands (the stream sees traffic before the exact
@@ -375,11 +264,9 @@ object DocumentStream {
     val bandedB = graft.ops.Dedup.minHashBanded(
         b.select(col("doc_id"), col("text")), n)
       .join(b.select(col("doc_id"), col("ts_ms")), Seq("doc_id"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    write(bandedB, root, "bands", batchId)
-    val bandState = state(spark, root, "bands", batchId,
-      "doc_id BIGINT, band INT, bh BIGINT, ts_ms BIGINT")
+      .localCheckpoint(true, MemDisk)
+    BatchState.write(bandedB, root, "bands", batchId)
+    val bandState = read(spark, root, Bands, batchId)
     // HOT-BUCKET CAP (the [[graft.ops.Dedup.minHashPairsCapped]] kernel,
     // live): occupancy counts the batch's banding ∪ the state rows still
     // inside the admission-reachable window ts ≥ hw − horizon − lateness
@@ -404,7 +291,7 @@ object DocumentStream {
           .agg(count(lit(1)).as("occ"))
           .filter(col("occ") > hotBucketCap)
           .select(col("band"), col("bh"))
-          .localCheckpoint(true, memDisk))
+          .localCheckpoint(true, MemDisk))
       }
     val bandedCool = hotOpt
       .map(h => bandedB.join(broadcast(h), Seq("band", "bh"), "left_anti"))
@@ -428,8 +315,7 @@ object DocumentStream {
     // the janitor); snapshotted — they feed the endpoint probe AND the
     // restricted join below
     val rawCands = between.unionByName(within).distinct()
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true, MemDisk)
     // kept-endpoint restriction WITHOUT broadcasting all-time state: the
     // batch-bounded candidate id set broadcasts INTO the kept state (one
     // narrow streamed scan), and only the surviving endpoint ids — a
@@ -439,11 +325,10 @@ object DocumentStream {
     // finding).
     val candIds = rawCands.select(col("id_a").as("doc_id"))
       .unionByName(rawCands.select(col("id_b").as("doc_id"))).distinct()
-    val keptEnds = state(spark, root, "kept", batchId, "doc_id BIGINT")
+    val keptEnds = read(spark, root, Kept, batchId)
       .unionByName(kept.select(col("doc_id")))
       .join(broadcast(candIds), Seq("doc_id"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true, MemDisk)
     val cands = rawCands
       .join(broadcast(keptEnds.select(col("doc_id").as("id_a"))), Seq("id_a"))
       .join(broadcast(keptEnds.select(col("doc_id").as("id_b"))), Seq("id_b"))
@@ -456,9 +341,8 @@ object DocumentStream {
     val verified = graft.ops.Dedup
       .jaccardVerify(cands, texts, n, threshold)
       .select(col("id_a"), col("id_b"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    write(verified, root, "pairs", batchId)
+      .localCheckpoint(true, MemDisk)
+    BatchState.write(verified, root, "pairs", batchId)
 
     // ── inline health ledger: one row per non-empty batch (the
     // [[EmbeddingStream]] gauge/ pattern on the text tier) — the
@@ -467,7 +351,7 @@ object DocumentStream {
     // aggregates over checkpointed frames; nothing re-scans the corpus),
     // plus the cap's own accounting (hot-bucket count). A fully-late
     // batch (admission drops everything) leaves no row — the ledger
-    // records batches that reached the tiers, like the vector twin's. ──
+    // records batches that reached the tiers, like the vector tier's. ──
     val nArr = raw.agg(count(lit(1)).as("n_arrived"))
     val nAdm = b.agg(count(lit(1)).as("n_admitted"))
     val top = bandedB.groupBy(col("band"), col("bh"))
@@ -489,184 +373,76 @@ object DocumentStream {
         (expr("mx * 1000000000L div n_admitted") > alertSharePpb ||
           expr("n_cand * 1000000000L div n_admitted") > alertCandPpb)
           .as("alert"))
-    write(gaugeRow, root, "gauge", batchId)
+    BatchState.write(gaugeRow, root, "gauge", batchId)
 
     // ── tier 3: incremental label merge over the previous snapshot ──
-    val prevId = batchDirs(spark, root, "labels", batchId)
-      .map(_.split("batch=").last.toLong).max // -1 exists from init
-    val merged = graft.ops.Dedup.mergeClusterDelta(
-      spark.read.parquet(s"$root/labels/batch=$prevId"),
-      kept.select(col("doc_id")), verified)
-    write(merged, root, "labels", batchId)
+    mergeLabels(spark, root, batchId, kept.select(col("doc_id")), verified)
     // the high-water row publishes LAST, after every other state write:
     // an uncommitted batch must never advance the mark an external
     // janitor could take a cut from — a crash before this line replays
     // the batch against the OLDER committed hw, whose admission horizon
     // is exactly what the previous janitor cut was derived from
-    write(b.agg(max(col("ts_ms")).as("ts_ms")), root, "hw", batchId)
-    // reap snapshots older than the one THIS batch merged from: a replay
-    // of this batch needs exactly `prevId` (empty batches write no
-    // snapshot, so prevId can trail batchId by more than one), so
-    // storage stays bounded at two snapshots plus the immutable init
-    val f = fs(spark, root)
-    batchDirs(spark, root, "labels", prevId)
-      .filter(!_.endsWith("batch=-1"))
-      .foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), true))
+    BatchState.write(b.agg(max(col("ts_ms")).as("ts_ms")), root, "hw",
+      batchId)
     // the batch's checkpoint blocks serve nothing once its state is on
     // disk — free them now instead of waiting for the ContextCleaner
     // (a long-lived session would otherwise pin one frame set per batch)
-    Seq(b, kept, bandedB, rawCands, keptEnds, verified, merged)
+    Seq(b, kept, bandedB, rawCands, keptEnds, verified)
       .foreach(graft.Snap.free(_))
     hotOpt.foreach(graft.Snap.free(_))
   }
 
-  /** RETROACTIVE DECONTAMINATION — [[FingerprintStream.decontaminate]]'s
-    * text twin: repair a root that ran UNCAPPED (or under-capped)
-    * through a near-dup template flood, whose junk pairs and flood
-    * mega-cluster the hot-bucket cap would have refused at arrival.
-    * Applies the occupancy rule retroactively over the STANDING band
-    * state and deletes exactly the pairs that had no path but a hot
-    * bucket, then re-converges only the components those deletions
-    * touched. Run with the stream STOPPED at a committed checkpoint.
-    *
-    * SEMANTICS: a persisted pair survives iff its endpoints still
-    * collide in a COOL bucket (occupancy over all standing `bands/`
-    * rows ≤ `hotBucketCap`) within the horizon — the
-    * [[graft.ops.Dedup.minHashPairsCapped]] GLOBAL-occupancy rule
-    * composed with the live tier's horizon, re-evaluated over the state
-    * the janitor already bounds. No re-verification: persisted pairs
-    * are exact-Jaccard-verified at commit and deleting buckets only
-    * removes CANDIDACY paths. Pairs from the `batch=-1` init (the
-    * standing corpus's pair table) predate the stream and carry no band
-    * rows — they are structurally untouchable here, exactly as they are
-    * invisible to the live cap. `bands/` itself is NOT rewritten: the
-    * band rows are the detector's substrate (occupancy must stay
-    * visible) and the horizon janitor owns their lifecycle — the
-    * index-stays-uncapped stance of the media tier.
-    *
-    * Idempotent, cost ∝ flood-touched state, recall-bounded by policy —
-    * the [[FingerprintStream.decontaminate]] contract throughout; gated
-    * hash-exact by q_docstream_decontam_parity. Returns the one-row
-    * repair report (hot_buckets, n_members, n_suspects, n_dropped). */
+  /** RETROACTIVE DECONTAMINATION on the text tier — the shared
+    * [[IndexTier.repairFlood]] over the STANDING band state: a persisted
+    * pair survives iff its endpoints still collide in a COOL bucket
+    * (occupancy over all standing `bands/` rows ≤ `hotBucketCap`) within
+    * the horizon — the [[graft.ops.Dedup.minHashPairsCapped]]
+    * GLOBAL-occupancy rule composed with the live tier's horizon. No
+    * re-verification: persisted pairs are exact-Jaccard-verified at
+    * commit and deleting buckets only removes CANDIDACY paths. Pairs
+    * from the `batch=-1` init predate the stream and carry no band rows —
+    * structurally untouchable here, exactly as they are invisible to the
+    * live cap. `bands/` itself is NOT rewritten: the horizon janitor owns
+    * its lifecycle. Gated hash-exact by q_docstream_decontam_parity.
+    * Returns the one-row repair report (hot_buckets, n_members,
+    * n_suspects, n_dropped). */
   def decontaminate(spark: SparkSession, root: String, hotBucketCap: Int,
-      horizonMs: Long = 3600000L,
-      broadcastRowLimit: Long = 8L << 20): DataFrame = {
+      horizonMs: Long = 3600000L): DataFrame = {
     import spark.implicits._
-    require(hotBucketCap > 0, s"hotBucketCap must be positive: $hotBucketCap")
-    Seq("hist", "kept", "pairs", "hw", "bands", "gauge")
-      .foreach(recoverFold(spark, root, _))
-    val memDisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bandState = state(spark, root, "bands", Long.MaxValue,
-      "doc_id BIGINT, band INT, bh BIGINT, ts_ms BIGINT")
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val hot = bandState.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > hotBucketCap)
-      .select(col("band"), col("bh"))
-      .localCheckpoint(true, memDisk) // tiny by construction
-    val nHot = hot.count()
-    val members = bandState.join(broadcast(hot), Seq("band", "bh"))
-      .select(col("doc_id")).distinct()
-      .localCheckpoint(true, memDisk)
-    val nMembers = members.count()
-    def mb(df: DataFrame): DataFrame =
-      if (nMembers <= broadcastRowLimit) broadcast(df) else df
-    val pairsState = livePairs(spark, root).select(col("id_a"), col("id_b"))
-    val suspects = pairsState
-      .join(mb(members.select(col("doc_id").as("id_a"))), Seq("id_a"),
-        "left_semi")
-      .unionByName(pairsState
-        .join(mb(members.select(col("doc_id").as("id_b"))), Seq("id_b"),
-          "left_semi")
-        .select(col("id_a"), col("id_b")))
-      .distinct()
-      .localCheckpoint(true, memDisk)
-    val nSuspects = suspects.count()
-    // survival: endpoints still collide in a cool bucket within the
-    // horizon — recomputed over the touched docs' band rows only
-    val touched = suspects.select(col("id_a").as("doc_id"))
-      .unionByName(suspects.select(col("id_b").as("doc_id")))
-      .distinct()
-    val cooledT = bandState
-      .join(broadcast(hot), Seq("band", "bh"), "left_anti")
-      .join(mb(touched), Seq("doc_id"), "left_semi")
-    val survivors = cooledT.select(col("band"), col("bh"),
-        col("doc_id").as("id_a"), col("ts_ms").as("ts_a"))
-      .join(cooledT.select(col("band"), col("bh"),
-        col("doc_id").as("id_b"), col("ts_ms").as("ts_b")),
-        Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b") &&
-        abs(col("ts_a") - col("ts_b")) <= horizonMs)
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    val dropped = suspects
-      .join(survivors, Seq("id_a", "id_b"), "left_anti")
-      .localCheckpoint(true, memDisk)
-    val nDropped = dropped.count()
-    // pair-sized set: its broadcast decision probes its own count (the
-    // [[FingerprintStream.decontaminate]] flood-clique argument)
-    def mbPairs(df: DataFrame): DataFrame =
-      if (nDropped <= broadcastRowLimit) broadcast(df) else df
-    if (nDropped > 0) {
-      batchDirs(spark, root, "pairs", Long.MaxValue).foreach { p =>
-        BatchState.rewriteDirPreservingUnit(spark, root, "pairs", p,
-          df => df.join(mbPairs(dropped), Seq("id_a", "id_b"), "left_anti"))
-      }
-      val newPairs = state(spark, root, "pairs", Long.MaxValue,
-        "id_a BIGINT, id_b BIGINT")
-      val seeds = dropped.select(col("id_a").as("doc_id"))
-        .unionByName(dropped.select(col("id_b").as("doc_id")))
-        .distinct()
-      val repaired = graft.ops.Dedup.reconvergeClusterDelta(
-        labels(spark, root), newPairs, seeds)
-      val latest = batchDirs(spark, root, "labels", Long.MaxValue)
-        .maxBy(_.split("batch=").last.toLong)
-      repaired.write.mode("overwrite").parquet(latest)
-      graft.Snap.free(repaired)
-    }
-    Seq(bandState, hot, members, suspects, dropped)
-      .foreach(graft.Snap.free(_))
-    Seq((nHot, nMembers, nSuspects, nDropped))
-      .toDF("hot_buckets", "n_members", "n_suspects", "n_dropped")
+    val report = repairFlood(spark, root,
+      bandState(spark, root).localCheckpoint(true,
+        org.apache.spark.storage.StorageLevel.DISK_ONLY),
+      Seq("band", "bh"), hotBucketCap, Some { cooled =>
+        cooled.select(col("band"), col("bh"),
+            col("doc_id").as("id_a"), col("ts_ms").as("ts_a"))
+          .join(cooled.select(col("band"), col("bh"),
+            col("doc_id").as("id_b"), col("ts_ms").as("ts_b")),
+            Seq("band", "bh"))
+          .filter(col("id_a") < col("id_b") &&
+            abs(col("ts_a") - col("ts_b")) <= horizonMs)
+          .select(col("id_a"), col("id_b"))
+          .distinct()
+      })
+    Seq(report).toDF("hot_buckets", "n_members", "n_suspects", "n_dropped")
   }
 
-  /** Unlike the append-only states, `labels/` holds SNAPSHOTS: the state
-    * as of a batch is the single latest snapshot strictly before it. */
-  private def latestLabels(spark: SparkSession, root: String,
-      before: Long): DataFrame = {
-    val dirs = batchDirs(spark, root, "labels", before)
-    require(dirs.nonEmpty, s"no label snapshot under $root/labels")
-    val latest = dirs.maxBy(_.split("batch=").last.toLong)
-    spark.read.parquet(latest)
-  }
-
-  /** Start the pipeline on a streaming (doc_id, ts_ms, text) frame.
-    * `consolidateEvery` bounds the state directory count (see
-    * [[processBatch]]); 0 disables in-stream consolidation.
-    * `schedulerPool` names the FAIR pool every batch's jobs submit to
-    * (thread-local `spark.scheduler.pool`, set on the foreachBatch
-    * execution thread — the co-residency deployment shape, SCALE.md);
-    * the alert thresholds are deployment-tunable with the oracle-pinned
-    * calibration as defaults. */
+  /** Start the pipeline on a streaming (doc_id, ts_ms, text) frame
+    * ([[IndexTier.startWith]]). `consolidateEvery` bounds the state
+    * directory count (see [[processBatch]]); 0 disables in-stream
+    * consolidation. The alert thresholds are deployment-tunable with the
+    * oracle-pinned calibration as defaults. */
   def start(docs: DataFrame, root: String, checkpoint: String,
       horizonMs: Long, latenessMs: Long = 600000L,
       maxDelayMs: Long = 100L, consolidateEvery: Int = 0,
       hotBucketCap: Int = 0, alertSharePpb: Long = AlertSharePpb,
       alertCandPpb: Long = AlertCandPpb,
       schedulerPool: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(s"$maxDelayMs milliseconds"))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        schedulerPool.foreach(p => batch.sparkSession.sparkContext
-          .setLocalProperty("spark.scheduler.pool", p))
+    startWith(docs, checkpoint, maxDelayMs, schedulerPool) {
+      (batch, batchId) =>
         processBatch(batch, batchId, root, horizonMs, latenessMs,
           consolidateEvery = consolidateEvery, hotBucketCap = hotBucketCap,
           alertSharePpb = alertSharePpb, alertCandPpb = alertCandPpb)
-      }
-      .start()
+    }
 
   /** The band-state JANITOR — the physical half of the TTL bound (the
     * horizon predicate is a JOIN condition, so the band-state scan
@@ -684,46 +460,28 @@ object DocumentStream {
     * writes), never a wall clock or an uncommitted batch's event time —
     * an inflated mark would cut directories a replayed batch's horizon
     * still reaches. Returns the dropped directory count. Per-directory
-    * max ts comes from the PARQUET FOOTERS directly — no Spark job, cost
-    * ∝ file count, flat in data volume. */
+    * max ts comes from the PARQUET FOOTERS directly
+    * ([[BatchState.dirMaxLong]] — no Spark job, cost ∝ file count, flat
+    * in data volume). */
   def compactBands(spark: SparkSession, root: String, highWaterMs: Long,
       horizonMs: Long, latenessMs: Long = 600000L): Int = {
-    val f = fs(spark, root)
+    val f = BatchState.fs(spark, root)
     val cut = highWaterMs - horizonMs - latenessMs
-    val dropped = batchDirs(spark, root, "bands", Long.MaxValue)
-      .filter(p => dirMaxTs(spark, root, p) < cut)
+    val dropped = BatchState.batchDirs(spark, root, "bands", Long.MaxValue)
+      .filter(p => BatchState.dirMaxLong(spark, root, p, "ts_ms") < cut)
     dropped.foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), true))
     dropped.length
   }
 
-  /** Newest `ts_ms` in one batch directory, read from the parquet footer
-    * statistics of its part files ([[BatchState.dirMaxLong]] — no Spark
-    * job; falls back to a real scan if any footer lacks the stat). */
-  private def dirMaxTs(spark: SparkSession, root: String,
-      dir: String): Long =
-    BatchState.dirMaxLong(spark, root, dir, "ts_ms")
-
-  // ── served outputs (what a reader queries between batches) ──
+  // ── served outputs (what a reader queries between batches; labels,
+  // livePairs and gaugeRows come from [[IndexTier]]) ──
 
   def keptIds(spark: SparkSession, root: String): DataFrame =
-    state(spark, root, "kept", Long.MaxValue, "doc_id BIGINT")
-
-  def livePairs(spark: SparkSession, root: String): DataFrame =
-    state(spark, root, "pairs", Long.MaxValue, "id_a BIGINT, id_b BIGINT")
+    read(spark, root, Kept)
 
   /** The standing band-signature state — what an arrival batch joins
     * for near-dup candidates (exposed so operators and the soak can
     * measure candidate economics across retire/janitor passes). */
   def bandState(spark: SparkSession, root: String): DataFrame =
-    state(spark, root, "bands", Long.MaxValue,
-      "doc_id BIGINT, band INT, bh BIGINT, ts_ms BIGINT")
-
-  def labels(spark: SparkSession, root: String): DataFrame =
-    latestLabels(spark, root, Long.MaxValue)
-
-  /** Health rows, one per non-empty batch — the pipeline's candidate-
-    * economics ledger (what an operator alerts on; `hot_buckets` > 0
-    * records the cap actually intervening). */
-  def gaugeRows(spark: SparkSession, root: String): DataFrame =
-    state(spark, root, "gauge", Long.MaxValue, GaugeSchema)
+    read(spark, root, Bands)
 }

@@ -2,14 +2,15 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** The RUNNABLE live EMBEDDING-dedup pipeline — the vector twin of
-  * [[DocumentStream]]: the incremental chain the hand-driven wave gate
-  * ([[ParityCheck.embeddingLiveParity]]) proves, wired as ONE
-  * checkpointed Structured Streaming job, with the IVF health loop
-  * ([[graft.ops.Similarity.ivfDriftGauge]] → retrain → serve) running
-  * INSIDE the pipeline instead of as a separate batch ritual. Per
+/** The RUNNABLE live EMBEDDING-dedup pipeline — the vector tier of the
+  * shared [[IndexTier]] lifecycle: the incremental chain the
+  * hand-driven wave gate ([[ParityCheck.embeddingLiveParity]]) proves,
+  * wired as ONE checkpointed Structured Streaming job, with the IVF
+  * health loop ([[graft.ops.Similarity.ivfDriftGauge]] → retrain →
+  * serve) running INSIDE the pipeline instead of as a separate batch
+  * ritual. Per
   * micro-batch:
   *
   *  1. EXACT tier — byte-identical vectors dedup against the standing
@@ -44,9 +45,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * epoch rows strictly below N, so a replayed batch resolves the same
   * centroids the original run used.
   *
-  * RESTART CONTRACT: identical to [[DocumentStream]]'s (the shared
-  * [[BatchState]] machinery) — foreachBatch is at-least-once, so every
-  * state write is keyed by batch id and every state read is pinned
+  * RESTART CONTRACT: the shared [[IndexTier]] one — foreachBatch is
+  * at-least-once, so every state write is keyed by batch id and every
+  * state read is pinned
   * strictly before the current batch; a replayed batch recomputes
   * against exactly the pre-batch state and overwrites its own
   * directories with identical rows. The stop/restart-across-a-
@@ -90,24 +91,27 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * shuffles at arrival time; the corpus-sized work (retrain +
   * reassignment) happens only in the maintenance window the gauge rows
   * call for. */
-object EmbeddingStream {
+object EmbeddingStream extends IndexTier {
+  import IndexTier.{MemDisk => memDisk, Sub}
 
   /** One streamed vector. */
   final case class VecIn(vec_id: Long, embedding: Array[Float])
 
-  private val VecsSchema =
-    "vec_id BIGINT, embedding ARRAY<FLOAT>, nsq DOUBLE, cluster BIGINT"
-  private val VhashSchema = "vec_id BIGINT, vhash BIGINT"
-  private val PairsSchema =
-    "id_a BIGINT, id_b BIGINT, cluster BIGINT, cosine DOUBLE"
-  private val GaugeSchema =
-    "batch_id BIGINT, n_ref BIGINT, n_new BIGINT, ref_fit_ppb BIGINT, " +
-    "new_fit_ppb BIGINT, drift_ppb BIGINT, ref_top_share_ppb BIGINT, " +
-    "new_top_share_ppb BIGINT, epoch INT, retrain BOOLEAN, " +
-    "hot_clusters BIGINT"
+  private val Vecs = Sub("vecs",
+    "vec_id BIGINT, embedding ARRAY<FLOAT>, nsq DOUBLE, cluster BIGINT",
+    Seq("vec_id"))
+  private val Vhash = Sub("vhash", "vec_id BIGINT, vhash BIGINT",
+    Seq("vec_id"))
+  protected val subs: Seq[Sub] = Seq(Vecs, Vhash,
+    Sub("pairs", "id_a BIGINT, id_b BIGINT, cluster BIGINT, cosine DOUBLE",
+      Seq("id_a", "id_b")),
+    Sub("gauge",
+      "batch_id BIGINT, n_ref BIGINT, n_new BIGINT, ref_fit_ppb BIGINT, " +
+      "new_fit_ppb BIGINT, drift_ppb BIGINT, ref_top_share_ppb BIGINT, " +
+      "new_top_share_ppb BIGINT, epoch INT, retrain BOOLEAN, " +
+      "hot_clusters BIGINT"))
+  protected val keptSub: Sub = Vecs
   private val EpochSchema = "epoch INT"
-
-  private val memDisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   private def assignedOf(vectors: DataFrame, cents: DataFrame): DataFrame =
     graft.ops.Similarity.assignToCentroids(
@@ -205,22 +209,15 @@ object EmbeddingStream {
       .foreach(graft.Snap.free(_))
   }
 
-  /** Consolidate every committed state surface below `upToBatch` — the
-    * [[DocumentStream.consolidate]] contract on the vector tier: called
-    * at the start of every K-th batch over exactly the checkpoint-
-    * committed directories. All four subs fold row-for-row (the vector
-    * pipeline's dedup is deep-history — "semantic dup of anything ever
-    * kept" — so no row ages out on a horizon; [[retire]] owns row
-    * retirement). `labels/` is already bounded at two snapshots;
-    * `epoch/`/`cents/`/`gref/` grow one directory per EPOCH, not per
-    * batch. */
+  /** Consolidate every committed state surface below `upToBatch`
+    * ([[IndexTier.foldSubs]]). All four subs fold row-for-row (the
+    * vector pipeline's dedup is deep-history — "semantic dup of anything
+    * ever kept" — so no row ages out on a horizon; [[retire]] owns row
+    * retirement). `epoch/`/`cents/`/`gref/` grow one directory per
+    * EPOCH, not per batch. */
   def consolidate(spark: SparkSession, root: String,
-      upToBatch: Long): Unit = {
-    BatchState.tieredFold(spark, root, "vecs", upToBatch, VecsSchema, identity)
-    BatchState.tieredFold(spark, root, "vhash", upToBatch, VhashSchema, identity)
-    BatchState.tieredFold(spark, root, "pairs", upToBatch, PairsSchema, identity)
-    BatchState.tieredFold(spark, root, "gauge", upToBatch, GaugeSchema, identity)
-  }
+      upToBatch: Long): Unit =
+    foldSubs(spark, root, upToBatch)
 
   /** The per-batch transaction — public so the spec can drive a single
     * batch directly. Deterministic given (state before `batchId`, batch
@@ -231,9 +228,7 @@ object EmbeddingStream {
       hotClusterCap: Int = 0, retrainDriftPpb: Long = RetrainDriftPpb,
       collapseSharePpb: Long = CollapseSharePpb): Unit = {
     val spark = batch.sparkSession
-    if (consolidateEvery > 0 && batchId > 0 &&
-        batchId % consolidateEvery == 0)
-      consolidate(spark, root, batchId)
+    if (foldDue(batchId, consolidateEvery)) consolidate(spark, root, batchId)
     if (batch.isEmpty) return
     val epoch = epochOf(spark, root, batchId)
     val cents = centsOf(spark, root, epoch)
@@ -247,7 +242,7 @@ object EmbeddingStream {
     // broadcasts back for the anti-join. Broadcasting the state itself
     // would ship the all-time hash set per batch (the DocumentStream
     // kept-endpoint argument).
-    val dupHashes = BatchState.state(spark, root, "vhash", batchId, VhashSchema)
+    val dupHashes = read(spark, root, Vhash, batchId)
       .join(broadcast(hashed.select(col("vhash")).distinct()), Seq("vhash"))
       .select(col("vhash")).distinct()
     val fresh = hashed.join(broadcast(dupHashes), Seq("vhash"), "left_anti")
@@ -311,7 +306,7 @@ object EmbeddingStream {
     val assignedCool = hotOpt
       .map(h => assigned.join(broadcast(h), Seq("cluster"), "left_anti"))
       .getOrElse(assigned)
-    val vecsState = BatchState.state(spark, root, "vecs", batchId, VecsSchema)
+    val vecsState = read(spark, root, Vecs, batchId)
     val pairs = graft.ops.Similarity
       .semanticDedupPairsBetween(assignedCool, vecsState, threshold)
       .unionByName(
@@ -320,22 +315,12 @@ object EmbeddingStream {
     BatchState.write(pairs, root, "pairs", batchId)
 
     // ── tier 4: incremental label merge over the previous snapshot ──
-    val prevId = BatchState.batchDirs(spark, root, "labels", batchId)
-      .map(_.split("batch=").last.toLong).max // -1 exists from init
-    val merged = graft.ops.Dedup.mergeClusterDelta(
-      spark.read.parquet(s"$root/labels/batch=$prevId"),
-      kept.select(col("vec_id").as("doc_id")),
+    mergeLabels(spark, root, batchId, kept.select(col("vec_id").as("doc_id")),
       pairs.select(col("id_a"), col("id_b")))
-    BatchState.write(merged, root, "labels", batchId)
-    val f = BatchState.fs(spark, root)
-    BatchState.batchDirs(spark, root, "labels", prevId)
-      .filter(!_.endsWith("batch=-1"))
-      .foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), true))
     // the batch's checkpoint blocks serve nothing once its state is on
     // disk — free them now instead of waiting for the ContextCleaner
     // (a long-lived session would otherwise pin one frame set per batch)
-    Seq(hashed, kept, assigned, pairs, merged)
-      .foreach(graft.Snap.free(_))
+    Seq(hashed, kept, assigned, pairs).foreach(graft.Snap.free(_))
     hotOpt.foreach(graft.Snap.free(_))
   }
 
@@ -366,10 +351,9 @@ object EmbeddingStream {
   def retrainEpoch(spark: SparkSession, root: String, newEpoch: Int,
       refDelta: DataFrame, nCentroids: Int = 32,
       lloydIters: Int = 2): Unit = {
-    Seq("vecs", "vhash", "pairs", "gauge")
-      .foreach(BatchState.recoverFold(spark, root, _))
-    val standing = BatchState.state(spark, root, "vecs", Long.MaxValue,
-      VecsSchema).select(col("vec_id"), col("embedding"))
+    recoverAll(spark, root)
+    val standing = assignedState(spark, root)
+      .select(col("vec_id"), col("embedding"))
     graft.ops.Similarity.trainCentroids(standing, nCentroids, lloydIters)
       .write.mode("overwrite").parquet(s"$root/cents/epoch=$newEpoch")
     val cents = centsOf(spark, root, newEpoch)
@@ -387,20 +371,12 @@ object EmbeddingStream {
       lastCommitted)
   }
 
-  /** RETROACTIVE DECONTAMINATION — [[FingerprintStream.decontaminate]]'s
-    * vector twin, completing the repair operator across all three
-    * runnable tiers: a root that ran UNCAPPED through an
-    * embedding-template flood (a mode-collapsed encoder, a re-posted
-    * viral embedding) has persisted the collapsed cluster's quadratic
-    * junk pairs and merged the family into a mega-cluster. This applies
-    * the occupancy rule retroactively over the STANDING assignment:
-    * clusters over `hotClusterCap` quarantine — every persisted pair
-    * touching one of their members deletes (pairs are cluster-local by
-    * construction, so under the fixed-quantizer contract "touching" and
-    * "within" coincide), the pair directories physically rewrite, and
-    * only the touched components' labels re-converge
-    * ([[graft.ops.Dedup.reconvergeClusterDelta]]). Run with the stream
-    * STOPPED at a committed checkpoint.
+  /** RETROACTIVE DECONTAMINATION on the vector tier — the shared
+    * [[IndexTier.repairFlood]] over the STANDING assignment, with no
+    * survivor test: clusters over `hotClusterCap` quarantine and every
+    * persisted pair touching one of their members drops (pairs are
+    * cluster-local by construction, so under the fixed-quantizer
+    * contract "touching" and "within" coincide).
     *
     * SEMANTICS: with the quantizer unrotated since the pairs were
     * committed (the fixed-centroid epoch contract), the post-repair
@@ -411,161 +387,58 @@ object EmbeddingStream {
     * touching a currently-over-cap cluster quarantine (the conservative
     * reading — exactness has no meaning for pairs generated under a
     * retired quantizer). `vecs/` is NOT rewritten: the vectors are real
-    * arrivals, retention owns their lifecycle, and the standing
-    * occupancy must stay visible to the gauge — the quarantine-not-
-    * deletion stance of the live cap. Idempotent; cost ∝ flood-touched
-    * components; the clean-root pass pays one occupancy count. Returns
-    * the one-row repair report. */
-  def decontaminate(spark: SparkSession, root: String, hotClusterCap: Int,
-      broadcastRowLimit: Long = 8L << 20): DataFrame = {
+    * arrivals and the standing occupancy must stay visible to the gauge.
+    * Returns the one-row repair report (hot_clusters, n_members,
+    * n_dropped). */
+  def decontaminate(spark: SparkSession, root: String,
+      hotClusterCap: Int): DataFrame = {
     import spark.implicits._
-    require(hotClusterCap > 0,
-      s"hotClusterCap must be positive: $hotClusterCap")
-    Seq("vecs", "vhash", "pairs", "gauge")
-      .foreach(BatchState.recoverFold(spark, root, _))
-    val assigned = assignedState(spark, root)
-      .select(col("vec_id"), col("cluster"))
-    val hot = assigned.groupBy(col("cluster"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > hotClusterCap)
-      .select(col("cluster"))
-      .localCheckpoint(true, memDisk) // tiny by construction
-    val nHot = hot.count()
-    val members = assigned.join(broadcast(hot), Seq("cluster"))
-      .select(col("vec_id")).distinct()
-      .localCheckpoint(true, memDisk)
-    val nMembers = members.count()
-    def mb(df: DataFrame): DataFrame =
-      if (nMembers <= broadcastRowLimit) broadcast(df) else df
-    val pairsState = livePairs(spark, root).select(col("id_a"), col("id_b"))
-    val dropped = pairsState
-      .join(mb(members.select(col("vec_id").as("id_a"))), Seq("id_a"),
-        "left_semi")
-      .unionByName(pairsState
-        .join(mb(members.select(col("vec_id").as("id_b"))), Seq("id_b"),
-          "left_semi")
-        .select(col("id_a"), col("id_b")))
-      .distinct()
-      .localCheckpoint(true, memDisk)
-    val nDropped = dropped.count()
-    // pair-sized set: its broadcast decision probes its own count (the
-    // [[FingerprintStream.decontaminate]] flood-clique argument)
-    def mbPairs(df: DataFrame): DataFrame =
-      if (nDropped <= broadcastRowLimit) broadcast(df) else df
-    if (nDropped > 0) {
-      BatchState.batchDirs(spark, root, "pairs", Long.MaxValue).foreach {
-        p => BatchState.rewriteDirPreservingUnit(spark, root, "pairs", p,
-          df => df.join(mbPairs(dropped), Seq("id_a", "id_b"), "left_anti"))
-      }
-      val newPairs = BatchState.state(spark, root, "pairs", Long.MaxValue,
-        PairsSchema).select(col("id_a"), col("id_b"))
-      val seeds = dropped.select(col("id_a").as("doc_id"))
-        .unionByName(dropped.select(col("id_b").as("doc_id")))
-        .distinct()
-      val repaired = graft.ops.Dedup.reconvergeClusterDelta(
-        labels(spark, root).select(col("doc_id"), col("cluster_id")),
-        newPairs, seeds)
-      val latest = BatchState.batchDirs(spark, root, "labels", Long.MaxValue)
-        .maxBy(_.split("batch=").last.toLong)
-      repaired.write.mode("overwrite").parquet(latest)
-      graft.Snap.free(repaired)
-    }
-    Seq(hot, members, dropped).foreach(graft.Snap.free(_))
+    val (nHot, nMembers, _, nDropped) = repairFlood(spark, root,
+      assignedState(spark, root).select(col("vec_id"), col("cluster")),
+      Seq("cluster"), hotClusterCap, None)
     Seq((nHot, nMembers, nDropped))
       .toDF("hot_clusters", "n_members", "n_dropped")
   }
 
-  /** RETENTION — [[DocumentStream.retire]] on the vector tier, with the
-    * same stopped-checkpoint contract: labels re-converge through the
-    * surviving pair edges ([[graft.ops.Dedup.retireClusterDelta]] — the
-    * PRE-prune pair state, since removal can split components), then
-    * every per-vector state surface drops the expired rows in place
-    * (sidecars preserved). A retired vector stops generating pairs
+  /** RETENTION — the shared [[IndexTier.retireWith]] over `vecs`,
+    * `vhash` and `pairs`: a retired vector stops generating pairs
     * IMMEDIATELY (its `vecs/` row is gone from the between-join) and a
     * re-sent identical vector is genuinely new again (its `vhash/` row
     * is gone). */
   def retire(spark: SparkSession, root: String,
-      expiredIds: DataFrame): Unit = {
-    Seq("vecs", "vhash", "pairs", "gauge")
-      .foreach(BatchState.recoverFold(spark, root, _))
-    val e = expiredIds
-      .select(col(graft.ops.Dedup.expiryKey(expiredIds, "vec_id"))
-        .as("doc_id")).distinct()
-      .localCheckpoint(true, memDisk)
-    val pairsState = BatchState.state(spark, root, "pairs", Long.MaxValue,
-      PairsSchema).select(col("id_a"), col("id_b"))
-    // retireClusterDelta returns its result already checkpointed
-    val retired = graft.ops.Dedup.retireClusterDelta(
-      labels(spark, root), pairsState, e)
-    val latest = BatchState.batchDirs(spark, root, "labels", Long.MaxValue)
-      .maxBy(_.split("batch=").last.toLong)
-    retired.write.mode("overwrite").parquet(latest)
-    def prune(sub: String, cols: Seq[String]): Unit =
-      BatchState.batchDirs(spark, root, sub, Long.MaxValue).foreach { p =>
-        BatchState.rewriteDirPreservingUnit(spark, root, sub, p,
-          df => cols.foldLeft(df)(
-            (acc, c) => graft.ops.Dedup.expireRows(acc, c, e)))
-      }
-    prune("vecs", Seq("vec_id"))
-    prune("vhash", Seq("vec_id"))
-    prune("pairs", Seq("id_a", "id_b"))
-    graft.Snap.free(e)
-    graft.Snap.free(retired)
-    ()
-  }
+      expiredIds: DataFrame): Unit =
+    retireWith(spark, root, expiredIds)
 
-  /** Start the pipeline on a streaming (vec_id, embedding) frame.
-    * `schedulerPool` names the FAIR pool every batch's jobs submit to
-    * (thread-local `spark.scheduler.pool`, set on the foreachBatch
-    * execution thread — the co-residency deployment shape, SCALE.md);
-    * the gauge thresholds are deployment-tunable with the
-    * oracle-pinned calibration as defaults. */
+  /** Start the pipeline on a streaming (vec_id, embedding) frame
+    * ([[IndexTier.startWith]]); the gauge thresholds are
+    * deployment-tunable with the oracle-pinned calibration as
+    * defaults. */
   def start(vectors: DataFrame, root: String, checkpoint: String,
       threshold: Double = 0.4, maxDelayMs: Long = 100L,
       consolidateEvery: Int = 0, hotClusterCap: Int = 0,
       retrainDriftPpb: Long = RetrainDriftPpb,
       collapseSharePpb: Long = CollapseSharePpb,
       schedulerPool: Option[String] = None): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(s"$maxDelayMs milliseconds"))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        schedulerPool.foreach(p => batch.sparkSession.sparkContext
-          .setLocalProperty("spark.scheduler.pool", p))
+    startWith(vectors, checkpoint, maxDelayMs, schedulerPool) {
+      (batch, batchId) =>
         processBatch(batch, batchId, root, threshold,
           consolidateEvery = consolidateEvery,
           hotClusterCap = hotClusterCap,
           retrainDriftPpb = retrainDriftPpb,
           collapseSharePpb = collapseSharePpb)
-      }
-      .start()
+    }
 
-  // ── served outputs (what a reader queries between batches) ──
+  // ── served outputs (what a reader queries between batches; labels,
+  // livePairs and gaugeRows come from [[IndexTier]]) ──
 
   def keptIds(spark: SparkSession, root: String): DataFrame =
-    BatchState.state(spark, root, "vecs", Long.MaxValue, VecsSchema)
-      .select(col("vec_id"))
+    assignedState(spark, root).select(col("vec_id"))
 
   /** The standing assigned corpus (vec_id, embedding, nsq, cluster) —
     * what an arrival batch's between-join reads, and what [[retrainEpoch]]
     * rebuilds from. */
   def assignedState(spark: SparkSession, root: String): DataFrame =
-    BatchState.state(spark, root, "vecs", Long.MaxValue, VecsSchema)
-
-  def livePairs(spark: SparkSession, root: String): DataFrame =
-    BatchState.state(spark, root, "pairs", Long.MaxValue, PairsSchema)
-
-  /** Health rows, one per non-empty batch — the pipeline's drift ledger
-    * (what an operator alerts on, and what decides [[retrainEpoch]]). */
-  def gaugeRows(spark: SparkSession, root: String): DataFrame =
-    BatchState.state(spark, root, "gauge", Long.MaxValue, GaugeSchema)
-
-  def labels(spark: SparkSession, root: String): DataFrame = {
-    val dirs = BatchState.batchDirs(spark, root, "labels", Long.MaxValue)
-    require(dirs.nonEmpty, s"no label snapshot under $root/labels")
-    spark.read.parquet(dirs.maxBy(_.split("batch=").last.toLong))
-  }
+    read(spark, root, Vecs)
 
   def currentEpoch(spark: SparkSession, root: String): Int =
     epochOf(spark, root, Long.MaxValue)
@@ -575,7 +448,7 @@ object EmbeddingStream {
     * not to have been consolidated past. */
   def pairsOfBatch(spark: SparkSession, root: String,
       batchId: Long): DataFrame =
-    spark.read.schema(
-        org.apache.spark.sql.types.StructType.fromDDL(PairsSchema))
+    spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
+        sub("pairs").schema))
       .parquet(s"$root/pairs/batch=$batchId")
 }

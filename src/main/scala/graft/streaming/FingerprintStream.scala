@@ -2,11 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** The RUNNABLE live FINGERPRINT (media) pipeline — the third tier over
-  * the shared [[BatchState]] machinery ([[DocumentStream]] is the text
-  * twin, [[EmbeddingStream]] the vector one): arriving media decode and
+/** The RUNNABLE live FINGERPRINT (media) pipeline — the media tier of
+  * the shared [[IndexTier]] lifecycle (with [[DocumentStream]] and
+  * [[EmbeddingStream]]): arriving media decode and
   * fingerprint per micro-batch, near-dup candidates band-join the
   * PERSISTED fingerprint index, and labels merge incrementally. Per
   * batch:
@@ -69,14 +69,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * index (no shuffle of either side), batch-sized label merge, 1-row
   * ledger aggregates. Nothing corpus-sized shuffles at arrival time;
   * retention is [[retire]]'s maintenance-window pass. */
-object FingerprintStream {
+object FingerprintStream extends IndexTier {
+  import IndexTier.{MemDisk => memDisk, Sub}
 
-  private val FpsSchema = "doc_id BIGINT, sh0 BIGINT, sh1 BIGINT"
-  private val PairsSchema = "id_a BIGINT, id_b BIGINT, hamming BIGINT"
-  private val GaugeSchema =
-    "batch_id BIGINT, n_arrived BIGINT, n_decoded BIGINT, " +
-    "n_quarantined BIGINT, n_pairs BIGINT, top_share_ppb BIGINT, " +
-    "hot_buckets BIGINT, quar_ppb BIGINT, alert BOOLEAN"
+  private val Fps = Sub("fps", "doc_id BIGINT, sh0 BIGINT, sh1 BIGINT",
+    Seq("doc_id"))
+  protected val subs: Seq[Sub] = Seq(Fps,
+    Sub("pairs", "id_a BIGINT, id_b BIGINT, hamming BIGINT",
+      Seq("id_a", "id_b")),
+    Sub("gauge",
+      "batch_id BIGINT, n_arrived BIGINT, n_decoded BIGINT, " +
+      "n_quarantined BIGINT, n_pairs BIGINT, top_share_ppb BIGINT, " +
+      "hot_buckets BIGINT, quar_ppb BIGINT, alert BOOLEAN"))
+  protected val keptSub: Sub = Fps
 
   /** Quarantine-rate alert threshold (integer parts-per-billion of the
     * batch's arrivals): a quarantine share above this marks the batch's
@@ -96,8 +101,6 @@ object FingerprintStream {
     * fixture and soak, a flood is most of it). */
   val AlertSharePpb = 400000000L
 
-  private val memDisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
   /** Initialize the standing state: the base corpus's fingerprint index,
     * pair table and labeling land as `batch=-1` (the same artifacts the
     * batch q_phash rows persist), so the first micro-batch already
@@ -112,18 +115,13 @@ object FingerprintStream {
       root, "labels", -1L)
   }
 
-  /** Consolidate every committed state surface below `upToBatch` — the
-    * shared [[BatchState.tieredFold]] contract. All three subs fold
-    * row-for-row (fingerprint dedup is deep-history; [[retire]] owns row
-    * retirement); `labels/` is already bounded at two snapshots. */
+  /** Consolidate every committed state surface below `upToBatch`
+    * ([[IndexTier.foldSubs]]). All three subs fold row-for-row
+    * (fingerprint dedup is deep-history; [[retire]] owns row
+    * retirement). */
   def consolidate(spark: SparkSession, root: String,
-      upToBatch: Long): Unit = {
-    BatchState.tieredFold(spark, root, "fps", upToBatch, FpsSchema, identity)
-    BatchState.tieredFold(spark, root, "pairs", upToBatch, PairsSchema,
-      identity)
-    BatchState.tieredFold(spark, root, "gauge", upToBatch, GaugeSchema,
-      identity)
-  }
+      upToBatch: Long): Unit =
+    foldSubs(spark, root, upToBatch)
 
   /** The per-batch transaction — public so the spec and soak can drive a
     * single batch directly. Deterministic given (state before `batchId`,
@@ -153,9 +151,7 @@ object FingerprintStream {
       alertSharePpb: Long = AlertSharePpb): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    if (consolidateEvery > 0 && batchId > 0 &&
-        batchId % consolidateEvery == 0)
-      consolidate(spark, root, batchId)
+    if (foldDue(batchId, consolidateEvery)) consolidate(spark, root, batchId)
     if (batch.isEmpty) return
 
     // ── tier 1: decode + fingerprint (the codec pass runs ONCE — the
@@ -186,7 +182,7 @@ object FingerprintStream {
     val cooled = hotOpt
       .map(h => bandedFp.join(broadcast(h), Seq("band", "bh"), "left_anti"))
       .getOrElse(bandedFp)
-    val fpsState = BatchState.state(spark, root, "fps", batchId, FpsSchema)
+    val fpsState = read(spark, root, Fps, batchId)
     val pairs = graft.ops.Dedup
       .hammingPairs128BetweenBanded(cooled, fpsState, maxHamming)
       .unionByName(
@@ -197,17 +193,8 @@ object FingerprintStream {
     BatchState.write(pairs, root, "pairs", batchId)
 
     // ── tier 3: incremental label merge over the previous snapshot ──
-    val prevId = BatchState.batchDirs(spark, root, "labels", batchId)
-      .map(_.split("batch=").last.toLong).max // -1 exists from init
-    val merged = graft.ops.Dedup.mergeClusterDelta(
-      spark.read.parquet(s"$root/labels/batch=$prevId"),
-      fp.select(col("doc_id")),
+    mergeLabels(spark, root, batchId, fp.select(col("doc_id")),
       pairs.select(col("id_a"), col("id_b")))
-    BatchState.write(merged, root, "labels", batchId)
-    val f = BatchState.fs(spark, root)
-    BatchState.batchDirs(spark, root, "labels", prevId)
-      .filter(!_.endsWith("batch=-1"))
-      .foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), true))
 
     // ── inline ledger: arrived / decoded / quarantined / pairs, plus
     // the defense's own accounting — hot_buckets (the cap intervening),
@@ -242,204 +229,60 @@ object FingerprintStream {
     // the batch's checkpoint blocks serve nothing once its state is on
     // disk — free them now instead of waiting for the ContextCleaner
     // (a long-lived session would otherwise pin one frame set per batch)
-    graft.Snap.free(hashed)
-    graft.Snap.free(bandedFp)
+    Seq(hashed, bandedFp, pairs).foreach(graft.Snap.free(_))
     hotOpt.foreach(graft.Snap.free(_))
-    graft.Snap.free(pairs)
-    graft.Snap.free(merged)
-    ()
   }
 
-  /** RETENTION — the [[EmbeddingStream.retire]] contract on the media
-    * tier (stream STOPPED at a committed checkpoint): labels re-converge
-    * through surviving pair edges
-    * ([[graft.ops.Dedup.retireClusterDelta]]), then `fps/` and `pairs/`
-    * drop the expired rows in place (sidecars preserved). A retired
-    * image stops generating candidates IMMEDIATELY (its index row is
-    * gone) and a re-sent copy is genuinely new again. */
+  /** RETENTION — the shared [[IndexTier.retireWith]] over `fps` and
+    * `pairs`: a retired image stops generating candidates IMMEDIATELY
+    * (its index row is gone) and a re-sent copy is genuinely new
+    * again. */
   def retire(spark: SparkSession, root: String,
-      expiredIds: DataFrame): Unit = {
-    Seq("fps", "pairs", "gauge")
-      .foreach(BatchState.recoverFold(spark, root, _))
-    val e = expiredIds
-      .select(col(graft.ops.Dedup.expiryKey(expiredIds, "doc_id"))
-        .as("doc_id")).distinct()
-      .localCheckpoint(true, memDisk)
-    val pairsState = BatchState.state(spark, root, "pairs", Long.MaxValue,
-      PairsSchema).select(col("id_a"), col("id_b"))
-    // retireClusterDelta returns its result already checkpointed
-    val retired = graft.ops.Dedup.retireClusterDelta(
-      labels(spark, root), pairsState, e)
-    val latest = BatchState.batchDirs(spark, root, "labels", Long.MaxValue)
-      .maxBy(_.split("batch=").last.toLong)
-    retired.write.mode("overwrite").parquet(latest)
-    def prune(sub: String, cols: Seq[String]): Unit =
-      BatchState.batchDirs(spark, root, sub, Long.MaxValue).foreach { p =>
-        BatchState.rewriteDirPreservingUnit(spark, root, sub, p,
-          df => cols.foldLeft(df)(
-            (acc, c) => graft.ops.Dedup.expireRows(acc, c, e)))
-      }
-    prune("fps", Seq("doc_id"))
-    prune("pairs", Seq("id_a", "id_b"))
-    graft.Snap.free(e)
-    graft.Snap.free(retired)
-    ()
-  }
+      expiredIds: DataFrame): Unit =
+    retireWith(spark, root, expiredIds)
 
-  /** RETROACTIVE DECONTAMINATION — the missing half of the flood story:
-    * the hot-bucket cap protects a correctly-configured pipeline at
-    * arrival, but a root that ran UNCAPPED through a template flood (or
-    * with the cap mis-set) has already persisted the damage — millions
-    * of junk pairs in `pairs/` and a flood mega-cluster in `labels/`.
-    * This applies the occupancy rule retroactively over the STANDING
-    * fingerprint index and repairs exactly the damaged state, at cost
-    * proportional to the flood-touched components — never a full
-    * rebuild. Run with the stream STOPPED at a committed checkpoint
-    * (the [[retire]] maintenance-window contract).
+  /** RETROACTIVE DECONTAMINATION on the media tier — the shared
+    * [[IndexTier.repairFlood]] over the STANDING fingerprint index's
+    * banding (the only corpus-linear pass: one map-side-combinable
+    * occupancy count over 4 narrow rows per doc). A suspect survives iff
+    * its endpoints still collide in a COOL band within `maxHamming`
+    * (recomputed over the touched docs' banding only — worst key cap²
+    * per bucket by construction).
     *
     * SEMANTICS: after the pass, the persisted pair state equals
     * [[graft.ops.Dedup.hammingPairs128Capped]] over the standing index
     * at `hotBucketCap` (the batch operator's GLOBAL-occupancy rule —
     * symmetric, unlike the live cap's per-arrival batch-side rule: a
     * standing index has no arrival axis left to cap on), and `labels/`
-    * equals the connected components of the repaired pairs. Both claims
-    * are gated hash-exact (q_fpstream_decontam_parity). The cap here is
-    * a CORPUS-level occupancy bound, not the per-batch arrival cap —
-    * the standing index legitimately accumulates, so callers size it to
-    * the largest organic fingerprint family they mean to keep pairing
-    * (the [[graft.ops.Dedup.hammingPairs128Capped]] calibration).
-    * Explicitly RECALL-BOUNDED, like every cap in the family: a family
-    * over the cap — flood or organically viral — loses its pairs.
-    *
-    * Steps, each bounded by the flood-touched state, never
-    * corpus-quadratic:
-    *  1. occupancy — ONE map-side-combinable count over the index's
-    *     4-rows-per-doc banding (the only corpus-linear pass; narrow
-    *     rows, no join); over-cap buckets are tiny and broadcast;
-    *  2. members = docs with a band row in a hot bucket (flood-sized);
-    *  3. suspects = persisted pairs touching a member — two semi-probe
-    *     passes over the pair state, no shuffle of it in the broadcast
-    *     regime;
-    *  4. survival: a suspect survives iff its endpoints still collide
-    *     in a COOL band (recomputed over the touched docs' banding
-    *     only — worst key cap² per bucket by construction); everything
-    *     else was only ever reachable through a hot bucket → dropped;
-    *  5. physical rewrite of the dropped pairs out of every `pairs/`
-    *     directory (unit sidecars preserved — the [[retire]] template);
-    *  6. label re-convergence restricted to the components the dropped
-    *     edges touched ([[graft.ops.Dedup.reconvergeClusterDelta]] —
-    *     splits handled, untouched labels pass through).
-    *
-    * `fps/` is deliberately NOT rewritten: the fingerprints are real
-    * arrivals, retention owns their lifecycle, and the standing
-    * occupancy must stay visible to detection — exactly the live cap's
-    * index-writes-stay-uncapped stance.
-    *
-    * Idempotent: a second pass finds the same hot set but no suspect
-    * survives the first pass's deletion test twice — it deletes nothing
-    * and leaves the state untouched (spec-pinned). A CLEAN root costs
-    * only step 1 (the occupancy scan) — the cost-∝-damage receipt in
-    * SCALE.md.
-    *
-    * Returns the one-row repair report
+    * equals the connected components of the repaired pairs — both gated
+    * hash-exact (q_fpstream_decontam_parity). The cap is a CORPUS-level
+    * occupancy bound: callers size it to the largest organic fingerprint
+    * family they mean to keep pairing. Explicitly RECALL-BOUNDED: a
+    * family over the cap — flood or organically viral — loses its pairs.
+    * `fps/` is NOT rewritten (the index-writes-stay-uncapped stance). A
+    * CLEAN root costs only the occupancy scan — the cost-∝-damage
+    * receipt in SCALE.md. Returns the one-row repair report
     * (hot_buckets, n_members, n_suspects, n_dropped). */
   def decontaminate(spark: SparkSession, root: String, hotBucketCap: Int,
-      maxHamming: Int = 3,
-      broadcastRowLimit: Long = 8L << 20): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     import spark.implicits._
-    require(hotBucketCap > 0, s"hotBucketCap must be positive: $hotBucketCap")
-    Seq("fps", "pairs", "gauge")
-      .foreach(BatchState.recoverFold(spark, root, _))
-    val banded = graft.ops.Dedup.hammingBanding128(
-        indexedFps(spark, root))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val hot = banded.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > hotBucketCap)
-      .select(col("band"), col("bh"))
-      .localCheckpoint(true, memDisk) // tiny by construction
-    val nHot = hot.count()
-    val members = banded.join(broadcast(hot), Seq("band", "bh"))
-      .select(col("doc_id")).distinct()
-      .localCheckpoint(true, memDisk)
-    val nMembers = members.count()
-    // the smallness regime, enforced like the retire: flood-sized sets
-    // broadcast; a flood approaching the corpus degrades to shuffled
-    // equi-joins (rebuild-class cost) instead of OOMing the executors
-    def mb(df: DataFrame): DataFrame =
-      if (nMembers <= broadcastRowLimit) broadcast(df) else df
-    val pairsState = livePairs(spark, root).select(col("id_a"), col("id_b"))
-    val suspects = pairsState
-      .join(mb(members.select(col("doc_id").as("id_a"))), Seq("id_a"),
-        "left_semi")
-      .unionByName(pairsState
-        .join(mb(members.select(col("doc_id").as("id_b"))), Seq("id_b"),
-          "left_semi")
-        .select(col("id_a"), col("id_b")))
-      .distinct()
-      .localCheckpoint(true, memDisk)
-    val nSuspects = suspects.count()
-    // survival test: regenerate pairs among the touched docs over COOL
-    // buckets only — a suspect absent from the regeneration had no path
-    // but a hot bucket, which is exactly the policy's deletion rule
-    val touched = suspects.select(col("id_a").as("doc_id"))
-      .unionByName(suspects.select(col("id_b").as("doc_id")))
-      .distinct()
-    val cooledT = banded
-      .join(broadcast(hot), Seq("band", "bh"), "left_anti")
-      .join(mb(touched), Seq("doc_id"), "left_semi")
-    val survivors = graft.ops.Dedup.hammingPairs128FromBanded(
-        cooledT, maxHamming, snapshotted = true)
-      .select(col("id_a"), col("id_b"))
-    val dropped = suspects
-      .join(survivors, Seq("id_a", "id_b"), "left_anti")
-      .localCheckpoint(true, memDisk)
-    val nDropped = dropped.count()
-    // the DROPPED set is PAIR-sized (a template flood's clique is
-    // quadratic in the flood — 33.6 M rows in the soak scenario), so
-    // its broadcast decision probes ITS OWN count, never the
-    // member count the doc-level sets key on: past the bound the
-    // per-directory prunes degrade to shuffled anti-joins instead of
-    // shipping a clique-sized hash relation to every executor
-    def mbPairs(df: DataFrame): DataFrame =
-      if (nDropped <= broadcastRowLimit) broadcast(df) else df
-    if (nDropped > 0) {
-      // physical rewrite: the dropped pairs leave every pairs/ directory
-      // (raw batches and consolidated units alike, sidecars preserved)
-      BatchState.batchDirs(spark, root, "pairs", Long.MaxValue).foreach {
-        p => BatchState.rewriteDirPreservingUnit(spark, root, "pairs", p,
-          df => df.join(mbPairs(dropped), Seq("id_a", "id_b"), "left_anti"))
-      }
-      // label repair restricted to the components the deletions touched
-      val newPairs = BatchState.state(spark, root, "pairs", Long.MaxValue,
-        PairsSchema).select(col("id_a"), col("id_b"))
-      val seeds = dropped.select(col("id_a").as("doc_id"))
-        .unionByName(dropped.select(col("id_b").as("doc_id")))
-        .distinct()
-      val repaired = graft.ops.Dedup.reconvergeClusterDelta(
-        labels(spark, root), newPairs, seeds)
-      val latest = BatchState.batchDirs(spark, root, "labels", Long.MaxValue)
-        .maxBy(_.split("batch=").last.toLong)
-      repaired.write.mode("overwrite").parquet(latest)
-      graft.Snap.free(repaired)
-    }
-    Seq(banded, hot, members, suspects, dropped)
-      .foreach(graft.Snap.free(_))
-    Seq((nHot, nMembers, nSuspects, nDropped))
-      .toDF("hot_buckets", "n_members", "n_suspects", "n_dropped")
+    val report = repairFlood(spark, root,
+      graft.ops.Dedup.hammingBanding128(indexedFps(spark, root))
+        .localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.DISK_ONLY),
+      Seq("band", "bh"), hotBucketCap, Some(cooled =>
+        graft.ops.Dedup.hammingPairs128FromBanded(
+            cooled, maxHamming, snapshotted = true)
+          .select(col("id_a"), col("id_b"))))
+    Seq(report).toDF("hot_buckets", "n_members", "n_suspects", "n_dropped")
   }
 
-  /** Start the pipeline on a streaming MediaRow frame.
-    *
-    * `schedulerPool` names the FAIR scheduler pool every batch's jobs
-    * submit to (`spark.scheduler.pool` is a thread-local property, so it
-    * must be set on the foreachBatch execution thread — which is exactly
-    * what this does, once per batch). The co-residency receipt
-    * (SCALE.md): three tiers sharing one SparkContext each in their own
-    * FAIR pool trim the media tier's queueing stretch vs default FIFO.
-    * The alert thresholds are deployment-tunable here and in
-    * [[processBatch]]; the defaults are the oracle-pinned calibration
+  /** Start the pipeline on a streaming MediaRow frame
+    * ([[IndexTier.startWith]]). The co-residency receipt (SCALE.md):
+    * three tiers sharing one SparkContext each in their own FAIR pool
+    * trim the media tier's queueing stretch vs default FIFO. The alert
+    * thresholds are deployment-tunable here and in [[processBatch]]; the
+    * defaults are the oracle-pinned calibration
     * ([[AlertQuarPpb]]/[[AlertSharePpb]]). */
   def start(media: DataFrame, root: String, checkpoint: String,
       maxHamming: Int = 3, maxDelayMs: Long = 100L,
@@ -447,36 +290,18 @@ object FingerprintStream {
       alertQuarPpb: Long = AlertQuarPpb,
       alertSharePpb: Long = AlertSharePpb,
       schedulerPool: Option[String] = None): StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(s"$maxDelayMs milliseconds"))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        schedulerPool.foreach(p => batch.sparkSession.sparkContext
-          .setLocalProperty("spark.scheduler.pool", p))
+    startWith(media, checkpoint, maxDelayMs, schedulerPool) {
+      (batch, batchId) =>
         processBatch(batch, batchId, root, maxHamming,
           consolidateEvery = consolidateEvery,
           hotBucketCap = hotBucketCap, alertQuarPpb = alertQuarPpb,
           alertSharePpb = alertSharePpb)
-      }
-      .start()
+    }
 
-  // ── served outputs (what a reader queries between batches) ──
+  // ── served outputs (what a reader queries between batches; labels,
+  // livePairs and gaugeRows come from [[IndexTier]]) ──
 
   /** The standing fingerprint index — what an arrival batch band-joins. */
   def indexedFps(spark: SparkSession, root: String): DataFrame =
-    BatchState.state(spark, root, "fps", Long.MaxValue, FpsSchema)
-
-  def livePairs(spark: SparkSession, root: String): DataFrame =
-    BatchState.state(spark, root, "pairs", Long.MaxValue, PairsSchema)
-
-  /** Ledger rows, one per non-empty batch (decode health + pair flow). */
-  def gaugeRows(spark: SparkSession, root: String): DataFrame =
-    BatchState.state(spark, root, "gauge", Long.MaxValue, GaugeSchema)
-
-  def labels(spark: SparkSession, root: String): DataFrame = {
-    val dirs = BatchState.batchDirs(spark, root, "labels", Long.MaxValue)
-    require(dirs.nonEmpty, s"no label snapshot under $root/labels")
-    spark.read.parquet(dirs.maxBy(_.split("batch=").last.toLong))
-  }
+    read(spark, root, Fps)
 }

@@ -272,6 +272,72 @@ object ParityCheck {
     docs.sortBy(_.doc_id)
   }
 
+  /** A fresh state root for one gate run — `target/<kind>/<fixture
+    * tag>`, emptied first (a gate, not a standing pipeline). */
+  private def freshRoot(spark: SparkSession, kind: String,
+      dir: String): String = {
+    val root = s"target/$kind/${graft.sources.ManagedTable.tag(dir)}"
+    BatchState.fs(spark, root)
+      .delete(new org.apache.hadoop.fs.Path(root), true)
+    root
+  }
+
+  /** `xs` in `n` id-ordered waves (the last one may be a remainder). */
+  private def wavesOf[A](xs: Seq[A], n: Int): Seq[Seq[A]] =
+    xs.grouped(math.max(1, xs.length / n)).toSeq
+
+  /** The restart gates' shared harness: drive `waves` through the query
+    * `start` builds over one MemoryStream, STOP after the second wave (a
+    * mid-run crash, simulated) and RESTART from the same checkpoint for
+    * the rest. */
+  private def runWithRestart[A: org.apache.spark.sql.Encoder](
+      spark: SparkSession, waves: Seq[Seq[A]])(
+      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery)
+      : Unit = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
+    var q = start(mem.toDF())
+    waves.take(2).foreach { w => mem.addData(w); q.processAllAvailable() }
+    q.stop()
+    q = start(mem.toDF())
+    try waves.drop(2).foreach { w =>
+      mem.addData(w); q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  /** A text gate's duplicate-flood fixture: the documents above the 3/5
+    * split arrive at one event per id-minute, and every `mod`-th arrival
+    * re-sends the corpus-minimum document's text byte for byte. Returns
+    * (split id, arrivals in id order, the rewritten documents table). */
+  private def dupFloodDocs(spark: SparkSession, dir: String, mod: Long,
+      harness: String): (Long, Array[DocumentStream.DocTsIn], DataFrame) = {
+    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val all = collectParityDocs(spark, dir, harness)
+    require(all.nonEmpty, s"no documents in $dir")
+    val splitId = (all.iterator.map(_.doc_id).max + 1L) * 3L / 5L
+    val dupText = all.minBy(_.doc_id).text
+    val arrDocs = all.filter(_.doc_id >= splitId).map(d =>
+      DocumentStream.DocTsIn(d.doc_id, t0Ms + d.doc_id * 60000L,
+        if (d.doc_id % mod == 0) dupText else d.text))
+    require(arrDocs.nonEmpty, "fixture too small to split")
+    val documents = graft.Tables.documents(spark, dir)
+      .withColumn("text",
+        when(col("doc_id") >= splitId && col("doc_id") % mod === 0,
+          lit(dupText)).otherwise(col("text")))
+    (splitId, arrDocs, documents)
+  }
+
+  /** Initialize a text gate's root from `history`: its MinHash pair
+    * table and their connected components as the standing state. */
+  private def initDocRoot(spark: SparkSession, root: String,
+      history: DataFrame): Unit = {
+    val histPairs = graft.ops.Dedup.minHashPairs(history)
+      .localCheckpoint(true)
+    DocumentStream.init(spark, root, history, histPairs,
+      graft.ops.Dedup.nearDupClusters(history, histPairs))
+    graft.Snap.free(histPairs)
+  }
+
   /** Streaming↔batch parity for the MinHash-LSH near-dup tier: the
     * documents table replays through [[StatefulOps.lshCandidatesStream]]
     * in doc_id-ordered micro-batches, and BOTH layers must match batch —
@@ -586,46 +652,15 @@ object ParityCheck {
       horizonMinutes: Int = 60, nBatches: Int = 4): DataFrame = {
     import spark.implicits._
     val horizonMs = horizonMinutes * 60000L
-    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-
-    val all = collectParityDocs(spark, dir, "restartPipelineParity")
-    require(all.nonEmpty, s"no documents in $dir")
-    val splitId = (all.iterator.map(_.doc_id).max + 1L) * 3L / 5L
-    val dupText = all.minBy(_.doc_id).text
-    val arrDocs = all.filter(_.doc_id >= splitId).map(d =>
-      DocumentStream.DocTsIn(d.doc_id, t0Ms + d.doc_id * 60000L,
-        if (d.doc_id % 11 == 0) dupText else d.text))
-    require(arrDocs.nonEmpty, "fixture too small to split")
-    val documents = graft.Tables.documents(spark, dir)
-      .withColumn("text",
-        when(col("doc_id") >= splitId && col("doc_id") % 11 === 0,
-          lit(dupText)).otherwise(col("text")))
+    val (splitId, arrDocs, documents) =
+      dupFloodDocs(spark, dir, 11L, "restartPipelineParity")
     val history = documents.filter(col("doc_id") < splitId)
 
-    // fresh state + checkpoint per run (a gate, not a standing pipeline)
-    val root = s"target/docstream_gate/${graft.sources.ManagedTable.tag(dir)}"
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
-    val histPairs0 = graft.ops.Dedup.minHashPairs(history)
-      .localCheckpoint(true)
-    DocumentStream.init(spark, s"$root/state", history, histPairs0,
-      graft.ops.Dedup.nearDupClusters(history, histPairs0))
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[DocumentStream.DocTsIn]
-    val waves = arrDocs.grouped(
-      math.max(1, arrDocs.length / nBatches)).toSeq
-    var q = DocumentStream.start(mem.toDF(), s"$root/state",
-      s"$root/ckpt", horizonMs, consolidateEvery = 2)
-    waves.take(2).foreach { w => mem.addData(w.toSeq); q.processAllAvailable() }
-    q.stop() // mid-replay crash, simulated
-    q = DocumentStream.start(mem.toDF(), s"$root/state",
-      s"$root/ckpt", horizonMs, consolidateEvery = 2)
-    try waves.drop(2).foreach { w =>
-      mem.addData(w.toSeq); q.processAllAvailable()
-    } finally q.stop()
+    val root = freshRoot(spark, "docstream_gate", dir)
+    initDocRoot(spark, s"$root/state", history)
+    runWithRestart(spark, wavesOf(arrDocs.toSeq, nBatches))(
+      DocumentStream.start(_, s"$root/state", s"$root/ckpt", horizonMs,
+        consolidateEvery = 2))
 
     val keptArr = DocumentStream.keptIds(spark, s"$root/state")
       .filter(col("doc_id") >= splitId).localCheckpoint(true)
@@ -655,8 +690,8 @@ object ParityCheck {
           nDropped > 0L)))
       .toDF("n_kept", "n_dropped", "n_pairs_live", "n_clusters",
         "n_only_live", "n_only_batch", "parity_ok")
-    Seq(keptArr, livePairs, liveLabels, keptBatch, livePairsB, batchLabels,
-      histPairs0).foreach(graft.Snap.free(_))
+    Seq(keptArr, livePairs, liveLabels, keptBatch, livePairsB, batchLabels)
+      .foreach(graft.Snap.free(_))
     result
   }
 
@@ -732,49 +767,15 @@ object ParityCheck {
       horizonMinutes: Int = 60, nBatches: Int = 4): String = {
     import spark.implicits._
     val horizonMs = horizonMinutes * 60000L
-    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val all = collectParityDocs(spark, dir, "cappedRestartParity")
-    require(all.nonEmpty, s"no documents in $dir")
-    val splitId = (all.iterator.map(_.doc_id).max + 1L) * 3L / 5L
-    val dupText = all.minBy(_.doc_id).text
-    val arrDocs = all.filter(_.doc_id >= splitId).map(d =>
-      DocumentStream.DocTsIn(d.doc_id, t0Ms + d.doc_id * 60000L,
-        if (d.doc_id % CappedFloodMod == 0) dupText else d.text))
-    require(arrDocs.nonEmpty, "fixture too small to split")
-    val documents = graft.Tables.documents(spark, dir)
-      .withColumn("text",
-        when(col("doc_id") >= splitId &&
-            col("doc_id") % CappedFloodMod === 0,
-          lit(dupText)).otherwise(col("text")))
+    val (splitId, arrDocs, documents) =
+      dupFloodDocs(spark, dir, CappedFloodMod, "cappedRestartParity")
     val history = documents.filter(col("doc_id") < splitId)
 
-    val root =
-      s"target/docstream_capped/${graft.sources.ManagedTable.tag(dir)}"
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
-    val histPairs0 = graft.ops.Dedup.minHashPairs(history)
-      .localCheckpoint(true)
-    DocumentStream.init(spark, s"$root/state", history, histPairs0,
-      graft.ops.Dedup.nearDupClusters(history, histPairs0))
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[DocumentStream.DocTsIn]
-    val waves = arrDocs.grouped(
-      math.max(1, arrDocs.length / nBatches)).toSeq
-    var q = DocumentStream.start(mem.toDF(), s"$root/state",
-      s"$root/ckpt", horizonMs, consolidateEvery = 2,
-      hotBucketCap = CappedHotBucketCap)
-    waves.take(2).foreach { w => mem.addData(w.toSeq); q.processAllAvailable() }
-    q.stop() // mid-replay crash, simulated
-    q = DocumentStream.start(mem.toDF(), s"$root/state",
-      s"$root/ckpt", horizonMs, consolidateEvery = 2,
-      hotBucketCap = CappedHotBucketCap)
-    try waves.drop(2).foreach { w =>
-      mem.addData(w.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    graft.Snap.free(histPairs0)
+    val root = freshRoot(spark, "docstream_capped", dir)
+    initDocRoot(spark, s"$root/state", history)
+    runWithRestart(spark, wavesOf(arrDocs.toSeq, nBatches))(
+      DocumentStream.start(_, s"$root/state", s"$root/ckpt", horizonMs,
+        consolidateEvery = 2, hotBucketCap = CappedHotBucketCap))
     root
   }
 
@@ -789,19 +790,10 @@ object ParityCheck {
   def cappedRestartParity(spark: SparkSession, dir: String, root: String,
       horizonMinutes: Int = 60, nBatches: Int = 4): DataFrame = {
     val horizonMs = horizonMinutes * 60000L
-    val all = collectParityDocs(spark, dir, "cappedRestartParity")
-    val splitId = (all.iterator.map(_.doc_id).max + 1L) * 3L / 5L
-    val dupText = all.minBy(_.doc_id).text
-    val nArr = all.count(_.doc_id >= splitId)
-    val nWaves = {
-      val chunk = math.max(1, nArr / nBatches)
-      (nArr + chunk - 1) / chunk
-    }
-    val documents = graft.Tables.documents(spark, dir)
-      .withColumn("text",
-        when(col("doc_id") >= splitId &&
-            col("doc_id") % CappedFloodMod === 0,
-          lit(dupText)).otherwise(col("text")))
+    val (splitId, arrDocs, documents) =
+      dupFloodDocs(spark, dir, CappedFloodMod, "cappedRestartParity")
+    val nArr = arrDocs.length
+    val nWaves = wavesOf(arrDocs.toSeq, nBatches).length
     val history = documents.filter(col("doc_id") < splitId)
 
     val keptArr = DocumentStream.keptIds(spark, s"$root/state")
@@ -900,11 +892,7 @@ object ParityCheck {
   def buildDecontamEmbeddingPipeline(spark: SparkSession,
       dir: String): String = {
     val (base, arrivals, h) = embDecontamArrivals(spark, dir)
-    val root =
-      s"target/embstream_decontam/${graft.sources.ManagedTable.tag(dir)}"
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(spark, "embstream_decontam", dir)
     EmbeddingStream.initFromCorpus(spark, s"$root/state", base,
       refDelta = arrivals)
     EmbeddingStream.processBatch(
@@ -1042,25 +1030,15 @@ object ParityCheck {
     val history = graft.Tables.documents(spark, dir)
       .filter(col("doc_id") < splitId)
 
-    val root =
-      s"target/docstream_decontam/${graft.sources.ManagedTable.tag(dir)}"
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
-    val histPairs0 = graft.ops.Dedup.minHashPairs(history)
-      .localCheckpoint(true)
-    DocumentStream.init(spark, s"$root/state", history, histPairs0,
-      graft.ops.Dedup.nearDupClusters(history, histPairs0))
-    val waves = arrDocs.grouped(
-      math.max(1, arrDocs.length / nBatches)).toSeq
-    waves.zipWithIndex.foreach { case (w, i) =>
+    val root = freshRoot(spark, "docstream_decontam", dir)
+    initDocRoot(spark, s"$root/state", history)
+    wavesOf(arrDocs.toSeq, nBatches).zipWithIndex.foreach { case (w, i) =>
       DocumentStream.processBatch(w.toSeq.toDF(), i.toLong, s"$root/state",
         horizonMs, hotBucketCap = 0) // UNCAPPED — the incident
     }
     val report = DocumentStream.decontaminate(spark, s"$root/state",
       decontamHotBucketCap(arrDocs.length.toLong), horizonMs)
     report.write.mode("overwrite").parquet(s"$root/report")
-    graft.Snap.free(histPairs0)
     root
   }
 
@@ -1161,6 +1139,19 @@ object ParityCheck {
         col("ph0").as("sh0"), col("ph1").as("sh1"))
   }
 
+  /** Initialize a media gate's root: the base fingerprint index, its
+    * pair table and their connected components as the standing state. */
+  private def initFpRoot(spark: SparkSession, dir: String, splitId: Long,
+      root: String): Unit = {
+    val baseFps = fpBaseFps(spark, dir, splitId).localCheckpoint(true)
+    val basePairs = graft.ops.Dedup.hammingPairs128(baseFps, 3)
+      .localCheckpoint(true)
+    FingerprintStream.init(spark, root, baseFps, basePairs,
+      graft.ops.Dedup.nearDupClusters(baseFps.select(col("doc_id")),
+        basePairs.select(col("id_a"), col("id_b"))))
+    Seq(baseFps, basePairs).foreach(graft.Snap.free(_))
+  }
+
   private def fpSplitId(spark: SparkSession, dir: String): Long = {
     val maxId = graft.Tables.documents(spark, dir)
       .agg(max(col("doc_id"))).head().getLong(0)
@@ -1176,37 +1167,12 @@ object ParityCheck {
       nBatches: Int = 4): String = {
     import spark.implicits._
     val splitId = fpSplitId(spark, dir)
-    val baseFps = fpBaseFps(spark, dir, splitId).localCheckpoint(true)
-    val basePairs = graft.ops.Dedup.hammingPairs128(baseFps, 3)
-      .localCheckpoint(true)
-    val baseLabels = graft.ops.Dedup.nearDupClusters(
-      baseFps.select(col("doc_id")),
-      basePairs.select(col("id_a"), col("id_b"))).localCheckpoint(true)
-    val arrMedia = fpArrivalMedia(spark, dir, splitId)
-
-    val root = s"target/fpstream_gate/${graft.sources.ManagedTable.tag(dir)}"
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
-    FingerprintStream.init(spark, s"$root/state", baseFps, basePairs,
-      baseLabels)
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[graft.ops.Multimodal.MediaRow]
-    val waves = arrMedia.grouped(
-      math.max(1, arrMedia.length / nBatches)).toSeq
-    var q = FingerprintStream.start(mem.toDF(), s"$root/state",
-      s"$root/ckpt", maxHamming = 3, consolidateEvery = 2)
-    waves.take(2).foreach { w => mem.addData(w); q.processAllAvailable() }
-    q.stop() // mid-replay crash, simulated
-    q = FingerprintStream.start(mem.toDF(), s"$root/state",
-      s"$root/ckpt", maxHamming = 3, consolidateEvery = 2)
-    try waves.drop(2).foreach { w =>
-      mem.addData(w); q.processAllAvailable()
-    } finally q.stop()
-    Seq(baseFps, basePairs, baseLabels)
-      .foreach(graft.Snap.free(_))
+    val root = freshRoot(spark, "fpstream_gate", dir)
+    initFpRoot(spark, dir, splitId, s"$root/state")
+    runWithRestart(spark,
+        wavesOf(fpArrivalMedia(spark, dir, splitId), nBatches))(
+      FingerprintStream.start(_, s"$root/state", s"$root/ckpt",
+        maxHamming = 3, consolidateEvery = 2))
     root
   }
 
@@ -1329,40 +1295,13 @@ object ParityCheck {
       nBatches: Int = 4): String = {
     import spark.implicits._
     val splitId = fpSplitId(spark, dir)
-    val baseFps = fpBaseFps(spark, dir, splitId).localCheckpoint(true)
-    val basePairs = graft.ops.Dedup.hammingPairs128(baseFps, 3)
-      .localCheckpoint(true)
-    val baseLabels = graft.ops.Dedup.nearDupClusters(
-      baseFps.select(col("doc_id")),
-      basePairs.select(col("id_a"), col("id_b"))).localCheckpoint(true)
-    val arrMedia = fpCappedArrivalMedia(spark, dir, splitId)
-
-    val root =
-      s"target/fpstream_capped/${graft.sources.ManagedTable.tag(dir)}"
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
-    FingerprintStream.init(spark, s"$root/state", baseFps, basePairs,
-      baseLabels)
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[graft.ops.Multimodal.MediaRow]
-    val waves = arrMedia.grouped(
-      math.max(1, arrMedia.length / nBatches)).toSeq
-    var q = FingerprintStream.start(mem.toDF(), s"$root/state",
-      s"$root/ckpt", maxHamming = 3, consolidateEvery = 2,
-      hotBucketCap = FpCappedHotBucketCap)
-    waves.take(2).foreach { w => mem.addData(w); q.processAllAvailable() }
-    q.stop() // mid-replay crash, simulated
-    q = FingerprintStream.start(mem.toDF(), s"$root/state",
-      s"$root/ckpt", maxHamming = 3, consolidateEvery = 2,
-      hotBucketCap = FpCappedHotBucketCap)
-    try waves.drop(2).foreach { w =>
-      mem.addData(w); q.processAllAvailable()
-    } finally q.stop()
-    Seq(baseFps, basePairs, baseLabels)
-      .foreach(graft.Snap.free(_))
+    val root = freshRoot(spark, "fpstream_capped", dir)
+    initFpRoot(spark, dir, splitId, s"$root/state")
+    runWithRestart(spark,
+        wavesOf(fpCappedArrivalMedia(spark, dir, splitId), nBatches))(
+      FingerprintStream.start(_, s"$root/state", s"$root/ckpt",
+        maxHamming = 3, consolidateEvery = 2,
+        hotBucketCap = FpCappedHotBucketCap))
     root
   }
 
@@ -1383,8 +1322,7 @@ object ParityCheck {
     val splitId = fpSplitId(spark, dir)
     val baseFps = fpBaseFps(spark, dir, splitId).localCheckpoint(true)
     val arrMedia = fpCappedArrivalMedia(spark, dir, splitId)
-    val waves = arrMedia.grouped(
-      math.max(1, arrMedia.length / nBatches)).toSeq
+    val waves = wavesOf(arrMedia, nBatches)
 
     val idxArr = FingerprintStream.indexedFps(spark, s"$root/state")
       .filter(col("doc_id") >= splitId)
@@ -1480,24 +1418,10 @@ object ParityCheck {
       nBatches: Int = 4): String = {
     import spark.implicits._
     val splitId = fpSplitId(spark, dir)
-    val baseFps = fpBaseFps(spark, dir, splitId).localCheckpoint(true)
-    val basePairs = graft.ops.Dedup.hammingPairs128(baseFps, 3)
-      .localCheckpoint(true)
-    val baseLabels = graft.ops.Dedup.nearDupClusters(
-      baseFps.select(col("doc_id")),
-      basePairs.select(col("id_a"), col("id_b"))).localCheckpoint(true)
-    val arrMedia = fpCappedArrivalMedia(spark, dir, splitId)
-
-    val root =
-      s"target/fpstream_decontam/${graft.sources.ManagedTable.tag(dir)}"
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
-    FingerprintStream.init(spark, s"$root/state", baseFps, basePairs,
-      baseLabels)
-    val waves = arrMedia.grouped(
-      math.max(1, arrMedia.length / nBatches)).toSeq
-    waves.zipWithIndex.foreach { case (w, i) =>
+    val root = freshRoot(spark, "fpstream_decontam", dir)
+    initFpRoot(spark, dir, splitId, s"$root/state")
+    wavesOf(fpCappedArrivalMedia(spark, dir, splitId), nBatches)
+        .zipWithIndex.foreach { case (w, i) =>
       FingerprintStream.processBatch(spark.createDataset(w).toDF(),
         i.toLong, s"$root/state", maxHamming = 3, consolidateEvery = 2,
         hotBucketCap = 0) // UNCAPPED — the incident under repair
@@ -1506,7 +1430,6 @@ object ParityCheck {
     val report = FingerprintStream.decontaminate(spark, s"$root/state",
       hotBucketCap = (nFps / 4).toInt)
     report.write.mode("overwrite").parquet(s"$root/report")
-    Seq(baseFps, basePairs, baseLabels).foreach(graft.Snap.free(_))
     root
   }
 
@@ -1702,11 +1625,7 @@ object ParityCheck {
       .as[EmbeddingStream.VecIn].collect().sortBy(_.vec_id)
     require(arrivals.nonEmpty, "fixture too small to split")
 
-    // fresh state + checkpoint per run (a gate, not a standing pipeline)
-    val root = s"target/embstream_gate/${graft.sources.ManagedTable.tag(dir)}"
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(spark, "embstream_gate", dir)
     // gauge reference: the earliest arrival slice (held-out,
     // in-distribution — parity doesn't depend on it, the health rows do)
     val refHi = splitId + math.max(1L, (maxId + 1L - splitId) / nBatches)
@@ -1714,20 +1633,9 @@ object ParityCheck {
       emb.filter(col("vec_id") >= splitId && col("vec_id") < refHi),
       threshold)
 
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[EmbeddingStream.VecIn]
-    val waves = arrivals.grouped(
-      math.max(1, arrivals.length / nBatches)).toSeq
-    var q = EmbeddingStream.start(mem.toDF(), s"$root/state",
-      s"$root/ckpt", threshold, consolidateEvery = 2)
-    waves.take(2).foreach { w => mem.addData(w.toSeq); q.processAllAvailable() }
-    q.stop() // mid-run crash, simulated
-    q = EmbeddingStream.start(mem.toDF(), s"$root/state",
-      s"$root/ckpt", threshold, consolidateEvery = 2)
-    try waves.drop(2).foreach { w =>
-      mem.addData(w.toSeq); q.processAllAvailable()
-    } finally q.stop()
+    val waves = wavesOf(arrivals.toSeq, nBatches)
+    runWithRestart(spark, waves)(EmbeddingStream.start(_, s"$root/state",
+      s"$root/ckpt", threshold, consolidateEvery = 2))
 
     val liveLabels = EmbeddingStream.labels(spark, s"$root/state")
       .localCheckpoint(true)

@@ -70,6 +70,9 @@ def main(sfdir: str, outdir: str) -> int:
         n_pass += 1
     no_oracle = sorted(set(p.split('/')[-1] for p in glob.glob(f"{outdir}/q_*")) - set(oracle))
     print(f"\n{n_pass} pass, {n_fail} fail; rows-only (no oracle): {no_oracle}")
+    if n_pass + n_fail == 0:
+        print("FAIL: compared nothing (empty oracle_sql.json)")
+        return 1
     return 1 if n_fail else 0
 
 
