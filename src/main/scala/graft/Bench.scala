@@ -68,8 +68,9 @@ object Bench {
     // still runs merely RELOCATES the build into the first timed sample
     // of the surviving row (visible as an inflated max there). For the
     // A/B to subtract a build, exclude the whole family: the per-root
-    // groups are the fpstream rows (fpStreamRoot), the fpstream_capped
-    // rows, the docstream rows, and the embstream/knn_ivf_epoch rows.
+    // groups are the fpstream rows (the fpstream_gate root), the
+    // fpstream_capped rows, the docstream rows, and the
+    // embstream/knn_ivf_epoch rows.
     val excluded = sys.env.get("SPARK_GRAFT_BENCH_EXCLUDE")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])

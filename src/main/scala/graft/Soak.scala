@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.ParityCheck
+
 /** Scale-soak harness: replicate the bench fixtures N× with disjoint key
   * spaces, run the headline queries at 1× and N×, and print one JSON line
   * per (scale, query) with the elapsed seconds — the evidence base for
@@ -17,8 +19,10 @@ import org.apache.spark.sql.functions._
   * physical shape the fixture ships — [[Tables.events]] probes it) so the
   * written parquet round-trips through the same adaptive loader.
   *
-  * Usage: `runMain graft.Soak [factor] [baseDir] [outDir]
-  * [all|linear|streaming|truegrowth]` — `linear` restricts to
+  * Usage: `runMain graft.Soak [factor] [baseDir] [outDir] [mode]` — the
+  * mode names one runner in [[modes]] (default `all`, the headline
+  * sweep [[headlineSoak]]); an unknown mode prints the known ones and
+  * exits 1 before a SparkSession starts. `linear` restricts the sweep to
   * [[linearHeadline]] (used at 100×, where the quadratic-OUTPUT dedup
   * tiers would measure answer size, not plans); `streaming` runs the
   * end-to-end ingest soak instead ([[streamingSoak]]: micro-batched
@@ -26,7 +30,10 @@ import org.apache.spark.sql.functions._
   * parity asserted at each step); `truegrowth` measures the dedup tiers
   * on freshly GENERATED corpora whose duplicate-family size stays
   * constant as n grows ([[trueGrowthSoak]]) — the regime replication
-  * cannot produce.
+  * cannot produce. The pipeline soaks build each tier's corpus and root
+  * through one per-tier fixture ([[longFixture]]) and split arrivals
+  * with [[evenWaves]]; every set comparison is
+  * [[graft.streaming.ParityCheck.diffCounts]].
   */
 object Soak {
 
@@ -444,9 +451,8 @@ object Soak {
     val nBase = Tables.documents(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/$tag"
-      trueGrowthDocuments(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      persisted(spark, trueGrowthDocuments(spark, baseDir, n),
+        s"$dir/documents.parquet")
       for (name <- queries) {
         val t0 = System.nanoTime()
         try {
@@ -476,10 +482,8 @@ object Soak {
     val nBase = Tables.documents(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/incrcc_$tag"
-      trueGrowthDocuments(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = persisted(spark, trueGrowthDocuments(spark, baseDir, n),
+        s"$dir/documents.parquet")
       val isDelta = col("doc_id") % 7 === 0 && col("doc_id") < nBase
       // UNTIMED prep — in production these are persisted artifacts: the
       // label table from the previous corpus version, the delta pairs
@@ -506,7 +510,7 @@ object Soak {
       full.write.format("noop").mode("overwrite").save()
       val rebuildSec = (System.nanoTime() - t1) / 1e9
       // timing is only evidence if the answers agree
-      val diff = merged.exceptAll(full).count() + full.exceptAll(merged).count()
+      val diff = setDiff(merged, full)
       println(f"""SOAK {"phase":"incrcc","scale":"$tag","docs":$n,"delta_docs":$nDelta,"merge_sec":$mergeSec%.2f,"rebuild_sec":$rebuildSec%.2f,"label_diff":$diff}""")
       require(diff == 0L, s"merged labels != rebuild at $tag: $diff")
 
@@ -546,79 +550,55 @@ object Soak {
     * standing invariant) before any timing is trusted. */
   def docStreamSoak(spark: SparkSession, factor: Int, baseDir: String,
       outDir: String, nWaves: Int = 8): Unit = {
-    import spark.implicits._
     import graft.streaming.DocumentStream
-    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
     val nBase = Tables.documents(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/docstream_$tag"
-      freshDir(spark, dir)
-      trueGrowthDocuments(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-      val splitId = n * 3L / 5L
-      val history = docs.filter(col("doc_id") < splitId)
-      // CONSTANT arrival stream regardless of corpus scale: the last
-      // nBase·2/5 ids play the arrivals (minute-spaced event times)
-      val arrivals = docs.filter(col("doc_id") >= n - nBase * 2L / 5L)
-        .select(col("doc_id"),
-          (lit(t0Ms) + (col("doc_id") - splitId) * 60000L).as("ts_ms"),
-          col("text"))
-        .as[DocumentStream.DocTsIn].collect().sortBy(_.doc_id)
-      val tInit0 = System.nanoTime()
-      val histPairs = graft.ops.Dedup.minHashPairs(history)
-        .localCheckpoint(true)
-      DocumentStream.init(spark, s"$dir/state", history, histPairs,
-        graft.ops.Dedup.nearDupClusters(history, histPairs))
-      val initSec = (System.nanoTime() - tInit0) / 1e9
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[DocumentStream.DocTsIn]
-      val q = DocumentStream.start(mem.toDF(), s"$dir/state",
-        s"$dir/ckpt", horizonMs = 3600000L)
-      val waves = arrivals.grouped(
-        math.max(1, arrivals.length / nWaves)).toSeq
-      val waveSecs = waves.map { w =>
-        val t = System.nanoTime()
-        mem.addData(w.toSeq); q.processAllAvailable()
-        (System.nanoTime() - t) / 1e9
-      }
-      q.stop()
-      val medianWave = waveSecs.sorted.apply(waveSecs.length / 2)
+      val root = s"$dir/state"
+      val fx = longFixture(spark, "doc", n, nBase, baseDir, dir, root,
+        freshDir(spark, dir), nWaves, consolidateEvery = 0)
+      val waveSecs = streamWaves(fx, s"$dir/ckpt")
       // invariant before timing is trusted
-      val diff = DocumentStream.labelDiff(spark, s"$dir/state")
-      val keptRows = DocumentStream.keptIds(spark, s"$dir/state").count()
+      val diff = DocumentStream.labelDiff(spark, root)
+      val keptRows = DocumentStream.keptIds(spark, root).count()
       // TTL: the oldest half of the standing history expires, PLUS every
       // 5th arrival — arrivals are what hold band state, so the retire
       // receipt can show CANDIDATE GENERATION dropping to the surviving
       // corpus's (history-only expiry would leave bands untouched and
       // the candidate probe vacuous)
-      val expired = history.filter(col("doc_id") < splitId / 2)
+      val expired = fx.corpus.filter(col("doc_id") < fx.splitId / 2 ||
+          (col("doc_id") >= fx.arrFrom && col("doc_id") % 5 === 0))
         .select(col("doc_id"))
-        .unionByName(docs.filter(col("doc_id") >= n - nBase * 2L / 5L &&
-          col("doc_id") % 5 === 0).select(col("doc_id")))
       // candidate-economics probe: the LAST wave's banding against the
       // standing band state, before vs after the retire — retired docs
       // must stop generating candidates immediately, not at age-out
+      val lastWave = fx.wave(fx.waves - 1)
       val probe = graft.ops.Dedup.minHashBanded(
-          waves.last.toSeq.toDF()
-            .select(col("doc_id"), col("text")))
+          lastWave.select(col("doc_id"), col("text")))
         .select(col("band"), col("bh"))
         .localCheckpoint(true)
       def candLegs(): Long = probe.join(
-        DocumentStream.bandState(spark, s"$dir/state")
+        DocumentStream.bandState(spark, root)
           .select(col("band"), col("bh")), Seq("band", "bh")).count()
       val candPre = candLegs()
-      val tR = System.nanoTime()
-      DocumentStream.retire(spark, s"$dir/state", expired,
-        highWaterMs = Some(arrivals.map(_.ts_ms).max))
-      val retireSec = (System.nanoTime() - tR) / 1e9
+      // event time grows with doc_id: the last wave holds the high water
+      val highWater = lastWave.agg(max(col("ts_ms"))).head().getLong(0)
+      val retireSec = timed(DocumentStream.retire(spark, root, expired,
+        highWaterMs = Some(highWater)))
       val candPost = candLegs()
-      val keptAfter = DocumentStream.keptIds(spark, s"$dir/state").count()
-      println(f"""SOAK {"phase":"docstream","scale":"$tag","docs":$n,"history":${splitId},"arrivals":${arrivals.length},"waves":${waveSecs.length},"init_sec":$initSec%.2f,"median_wave_sec":$medianWave%.2f,"max_wave_sec":${waveSecs.max}%.2f,"label_diff":$diff,"kept_rows":$keptRows,"retire_sec":$retireSec%.2f,"kept_after_retire":$keptAfter,"cand_legs_pre_retire":$candPre,"cand_legs_post_retire":$candPost}""")
+      val keptAfter = DocumentStream.keptIds(spark, root).count()
+      println(f"""SOAK {"phase":"docstream","scale":"$tag",${fx.head},"arrivals":${fx.arrivals},"waves":${waveSecs.length},"init_sec":${fx.initSec}%.2f,"median_wave_sec":${medSec(waveSecs)}%.2f,"max_wave_sec":${waveSecs.max}%.2f,"label_diff":$diff,"kept_rows":$keptRows,"retire_sec":$retireSec%.2f,"kept_after_retire":$keptAfter,"cand_legs_pre_retire":$candPre,"cand_legs_post_retire":$candPost}""")
       require(diff == 0L, s"labels != CC at $tag: $diff")
     }
+  }
+
+  /** Stream a fixture's waves through its tier's checkpointed query
+    * (`ckpt`), one micro-batch each; returns the per-wave seconds. */
+  private def streamWaves(fx: LongFixture, ckpt: String): Seq[Double] = {
+    val (q, addWave) = fx.feed(ckpt)
+    try (0 until fx.waves).map { i =>
+      timed { addWave(i); q.processAllAvailable() }
+    } finally q.stop()
   }
 
   /** Median of 5 timed runs after one untimed warm-up (the warm-up
@@ -660,6 +640,25 @@ object Soak {
     f""""median_batch_sec":${medSec(xs)}%.2f,"p99_batch_sec":${p99Sec(xs)}%.2f,"first_third_median":${medSec(xs.take(third))}%.2f,"last_third_median":${medSec(xs.takeRight(third))}%.2f"""
   }
 
+  /** `corpus` written to `path` (spread over the session's parallelism)
+    * and read back — every soak measures against the persisted corpus,
+    * so generating it never lands in a timed phase. */
+  private def persisted(spark: SparkSession, corpus: DataFrame,
+      path: String): DataFrame = {
+    corpus.repartition(spark.sparkContext.defaultParallelism)
+      .write.mode("overwrite").parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** The multiset difference of `a` and `b` in both directions, columns
+    * matched by position (exceptAll's rule) and counted by
+    * [[ParityCheck.diffCounts]] — 0 when the answers agree. */
+  private def setDiff(a: DataFrame, b: DataFrame): Long = {
+    val (onlyA, onlyB, _, _) =
+      ParityCheck.diffCounts(a, b.toDF(a.columns.toSeq: _*))
+    onlyA + onlyB
+  }
+
   /** A fresh output directory (emptied first) and its file system. */
   private def freshDir(spark: SparkSession,
       dir: String): org.apache.hadoop.fs.FileSystem = {
@@ -685,12 +684,29 @@ object Soak {
         col("ph0").as("sh0"), col("ph1").as("sh1"))
   }
 
-  /** One tier's long-horizon fixture at one scale: its SOAK fields ahead
-    * of "arrivals", the arrival count, the wave count and a runner for
-    * wave i, the subs whose directory counts print, the trailing byte
-    * field, and whether the line carries label_diff. */
+  /** `xs` in exactly min(n, |xs|) consecutive waves whose sizes differ
+    * by at most one — a soak runs the batch count it asks for. */
+  private[graft] def evenWaves[A](xs: Seq[A], n: Int): Seq[Seq[A]] = {
+    require(n > 0, s"wave count must be positive: $n")
+    val k = math.min(n, xs.length)
+    (0 until k).map(i => xs.slice((i.toLong * xs.length / k).toInt,
+      ((i + 1).toLong * xs.length / k).toInt))
+  }
+
+  /** One tier's true-growth fixture at one scale, its root initialized:
+    * the SOAK fields ahead of "arrivals", the corpus with its split and
+    * first arrival id, the arrival count, the init seconds, the wave
+    * count with wave i as a frame, a runner of wave i through
+    * `processBatch`, a feed (the tier's checkpointed query over a memory
+    * stream, plus an adder of wave i), the subs whose directory counts
+    * print, the trailing byte field, and whether the line carries
+    * label_diff. */
   private final case class LongFixture(tier: graft.streaming.IndexTier,
-      head: String, arrivals: Int, waves: Int, runBatch: Int => Unit,
+      head: String, corpus: DataFrame, splitId: Long, arrFrom: Long,
+      arrivals: Int, initSec: Double, waves: Int, wave: Int => DataFrame,
+      runBatch: Int => Unit,
+      feed: String => (org.apache.spark.sql.streaming.StreamingQuery,
+        Int => Unit),
       dirSubs: Seq[String], tail: () => String, printsDiff: Boolean)
 
   private def longFixture(spark: SparkSession, tier: String, n: Long,
@@ -700,19 +716,17 @@ object Soak {
     import spark.implicits._
     import graft.ops.{Dedup, Multimodal}
     import graft.streaming.{DocumentStream, EmbeddingStream, FingerprintStream}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val splitId = n * 3L / 5L
     // CONSTANT arrival stream regardless of corpus scale (the live-
     // serving regime): the last nBase·2/5 ids arrive
     val arrFrom = n - nBase * 2L / 5L
-    def wavesOf[A](xs: Seq[A]): Seq[Seq[A]] =
-      xs.grouped(math.max(1, xs.length / nBatches)).toSeq
     tier match {
       case "doc" =>
         val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-        trueGrowthDocuments(spark, baseDir, n)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
+        val docs = persisted(spark, trueGrowthDocuments(spark, baseDir, n),
+          s"$dir/documents.parquet")
         val history = docs.filter(col("doc_id") < splitId)
         // minute-spaced event times
         val arrivals = docs.filter(col("doc_id") >= arrFrom)
@@ -720,55 +734,72 @@ object Soak {
             (lit(t0Ms) + (col("doc_id") - splitId) * 60000L).as("ts_ms"),
             col("text"))
           .as[DocumentStream.DocTsIn].collect().sortBy(_.doc_id).toSeq
-        val histPairs = Dedup.minHashPairs(history).localCheckpoint(true)
-        DocumentStream.init(spark, root, history, histPairs,
-          Dedup.nearDupClusters(history, histPairs))
-        val waves = wavesOf(arrivals)
+        val initSec = timed {
+          val histPairs = Dedup.minHashPairs(history).localCheckpoint(true)
+          DocumentStream.init(spark, root, history, histPairs,
+            Dedup.nearDupClusters(history, histPairs))
+        }
+        val waves = evenWaves(arrivals, nBatches)
+        val wave = (i: Int) => waves(i).toDF()
         LongFixture(DocumentStream, s""""docs":$n,"history":$splitId""",
-          arrivals.length, waves.length,
-          i => DocumentStream.processBatch(waves(i).toDF(), i.toLong, root,
+          docs, splitId, arrFrom, arrivals.length, initSec, waves.length,
+          wave, i => DocumentStream.processBatch(wave(i), i.toLong, root,
             3600000L, consolidateEvery = consolidateEvery),
+          ckpt => {
+            val mem = MemoryStream[DocumentStream.DocTsIn]
+            (DocumentStream.start(mem.toDF(), root, ckpt, 3600000L,
+              consolidateEvery = consolidateEvery), i => mem.addData(waves(i)))
+          },
           Seq("hist", "kept", "pairs", "hw", "bands"),
           () => s""","hist_bytes":${dirBytes(fsys, s"$root/hist")}""",
           printsDiff = true)
       case "fp" =>
         val docs = mediaDocs(spark, 0L, n)
-        val baseFps = trueGrowthFps(spark, docs.filter(col("doc_id") < splitId))
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        val basePairs = Dedup.hammingPairs128(baseFps, 3)
-          .localCheckpoint(true)
-        FingerprintStream.init(spark, root, baseFps, basePairs,
-          Dedup.nearDupClusters(baseFps.select(col("doc_id")),
-            basePairs.select(col("id_a"), col("id_b"))))
+        val initSec = timed {
+          val baseFps = trueGrowthFps(spark,
+              docs.filter(col("doc_id") < splitId))
+            .localCheckpoint(true,
+              org.apache.spark.storage.StorageLevel.DISK_ONLY)
+          val basePairs = Dedup.hammingPairs128(baseFps, 3)
+            .localCheckpoint(true)
+          FingerprintStream.init(spark, root, baseFps, basePairs,
+            Dedup.nearDupClusters(baseFps.select(col("doc_id")),
+              basePairs.select(col("id_a"), col("id_b"))))
+        }
         val arrivals = Multimodal.imagePngMediaTrueGrowth(spark,
             docs.filter(col("doc_id") >= arrFrom))
           .collect().sortBy(_.media_id).toSeq
-        val waves = wavesOf(arrivals)
+        val waves = evenWaves(arrivals, nBatches)
+        val wave = (i: Int) => spark.createDataset(waves(i)).toDF()
         LongFixture(FingerprintStream, s""""docs":$n,"images":${n / 3}""",
-          arrivals.length, waves.length,
-          i => FingerprintStream.processBatch(
-            spark.createDataset(waves(i)).toDF(), i.toLong, root,
+          docs, splitId, arrFrom, arrivals.length, initSec, waves.length,
+          wave, i => FingerprintStream.processBatch(wave(i), i.toLong, root,
             maxHamming = 3, consolidateEvery = consolidateEvery),
+          _ => throw new UnsupportedOperationException(
+            "no soak streams the media tier through its query"),
           Seq("fps", "pairs", "gauge"), () => "", printsDiff = false)
       case "emb" =>
-        trueGrowthEmbeddings(spark, baseDir, n)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        val emb = persisted(spark, trueGrowthEmbeddings(spark, baseDir, n),
+          s"$dir/embeddings.parquet")
         val arrFrame = emb.filter(col("vec_id") >= arrFrom)
           .select(col("vec_id"), col("embedding"))
         val arrivals = arrFrame.as[EmbeddingStream.VecIn]
           .collect().sortBy(_.vec_id).toSeq
-        EmbeddingStream.initFromCorpus(spark, root,
+        val initSec = timed(EmbeddingStream.initFromCorpus(spark, root,
           emb.filter(col("vec_id") < splitId), refDelta = arrFrame,
-          threshold = 0.4)
-        val waves = wavesOf(arrivals)
+          threshold = 0.4))
+        val waves = evenWaves(arrivals, nBatches)
+        val wave = (i: Int) =>
+          waves(i).toDF().select(col("vec_id"), col("embedding"))
         LongFixture(EmbeddingStream, s""""vectors":$n,"base":$splitId""",
-          arrivals.length, waves.length,
-          i => EmbeddingStream.processBatch(
-            waves(i).toDF().select(col("vec_id"), col("embedding")),
-            i.toLong, root, 0.4, consolidateEvery = consolidateEvery),
+          emb, splitId, arrFrom, arrivals.length, initSec, waves.length,
+          wave, i => EmbeddingStream.processBatch(wave(i), i.toLong, root,
+            0.4, consolidateEvery = consolidateEvery),
+          ckpt => {
+            val mem = MemoryStream[EmbeddingStream.VecIn]
+            (EmbeddingStream.start(mem.toDF(), root, ckpt, 0.4,
+              consolidateEvery = consolidateEvery), i => mem.addData(waves(i)))
+          },
           Seq("vecs", "vhash", "pairs", "gauge"),
           () => s""","vecs_bytes":${dirBytes(fsys, s"$root/vecs")}""",
           printsDiff = true)
@@ -861,10 +892,8 @@ object Soak {
           "the whole run stays horizon-resident")
         val n = math.max(Tables.documents(spark, baseDir).count(),
           organicNeeded * 5L / 2L + 10L)
-        trueGrowthDocuments(spark, baseDir, n)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
+        val docs = persisted(spark, trueGrowthDocuments(spark, baseDir, n),
+          s"$dir/documents.parquet")
         val splitId = n * 3L / 5L
         val history = docs.filter(col("doc_id") < splitId)
         val organicPool = docs.filter(col("doc_id") >= splitId)
@@ -909,11 +938,8 @@ object Soak {
       case "emb" =>
         val n = math.max(Tables.embeddings(spark, baseDir).count(),
           organicNeeded * 5L / 2L + 10L)
-        trueGrowthEmbeddings(spark, baseDir, n)
-          .select(col("vec_id"), col("embedding"))
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        val emb = persisted(spark, trueGrowthEmbeddings(spark, baseDir, n)
+          .select(col("vec_id"), col("embedding")), s"$dir/embeddings.parquet")
         val splitId = n * 3L / 5L
         val organicPool = emb.filter(col("vec_id") >= splitId)
           .orderBy(col("vec_id")).limit(organicNeeded)
@@ -1070,39 +1096,15 @@ object Soak {
       outDir: String, cap: Int = 16): Unit = {
     import graft.ops.Dedup
     val template = graft.OracleSql.CappedFloodTemplate
-    val nBase = Tables.documents(spark, baseDir).count()
-    for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
-      val dir = s"$outDir/capflood_$tag"
-      freshDir(spark, dir)
-      trueGrowthDocuments(spark, baseDir, n)
+    capReceipt(spark, "capflood", Tables.documents(spark, baseDir).count(),
+        factor, outDir, cap) { (n, dir) =>
+      val docs = persisted(spark, trueGrowthDocuments(spark, baseDir, n)
         .withColumn("text", when(col("doc_id") % 11 === 0,
-          lit(template)).otherwise(col("text")))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+          lit(template)).otherwise(col("text"))), s"$dir/documents.parquet")
       val flood = n / 11 + (if (n % 11 > 0) 1 else 0)
-      // each frame materializes ONCE (timed through the eager snapshot);
-      // the counts AND the subset invariant read the cached rows — the
-      // deliberately-quadratic uncapped flood join must not be re-paid
-      // for a bookkeeping check
-      def run(f: () => org.apache.spark.sql.DataFrame)
-          : (org.apache.spark.sql.DataFrame, Long, Double) = {
-        val t = System.nanoTime()
-        val df = f().localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        val c = df.count()
-        (df, c, (System.nanoTime() - t) / 1e9)
-      }
-      val (uncappedDf, uncapped, uncappedSec) =
-        run(() => Dedup.minHashPairs(docs))
-      val (cappedDf, capped, cappedSec) =
-        run(() => Dedup.minHashPairsCapped(docs, cap = cap))
-      // subset invariant before timing is trusted
-      val diff = cappedDf.select(col("id_a"), col("id_b"))
-        .exceptAll(uncappedDf.select(col("id_a"), col("id_b")))
-        .count()
-      require(diff == 0L, s"capped must be a subset of uncapped: $diff")
-      println(f"""SOAK {"phase":"capflood","scale":"$tag","docs":$n,"flood_docs":$flood,"cap":$cap,"uncapped_pairs":$uncapped,"uncapped_sec":$uncappedSec%.2f,"capped_pairs":$capped,"capped_sec":$cappedSec%.2f,"flood_pairs_expected":${flood * (flood - 1) / 2}}""")
+      (s""""docs":$n,"flood_docs":$flood""", flood,
+        () => Dedup.minHashPairs(docs),
+        () => Dedup.minHashPairsCapped(docs, cap = cap))
     }
   }
 
@@ -1119,46 +1121,61 @@ object Soak {
   def semCapFloodSoak(spark: SparkSession, factor: Int, baseDir: String,
       outDir: String, cap: Int = 64): Unit = {
     import graft.ops.Similarity
-    val nBase = Tables.embeddings(spark, baseDir).count()
-    for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
-      val dir = s"$outDir/semcapflood_$tag"
-      freshDir(spark, dir)
+    capReceipt(spark, "semcapflood", Tables.embeddings(spark, baseDir).count(),
+        factor, outDir, cap) { (n, dir) =>
       val raw = trueGrowthEmbeddings(spark, baseDir, n)
       val tpl = broadcast(raw.orderBy(col("vec_id")).limit(1)
         .select(col("embedding").as("tpl_emb")))
-      raw.crossJoin(tpl).select(col("vec_id"),
+      val emb = persisted(spark, raw.crossJoin(tpl).select(col("vec_id"),
           when(col("vec_id") % 5 === 0, col("tpl_emb"))
-            .otherwise(col("embedding")).as("embedding"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+            .otherwise(col("embedding")).as("embedding")),
+        s"$dir/embeddings.parquet")
       val flood = n / 5 + (if (n % 5 > 0) 1 else 0)
-      def run(f: () => org.apache.spark.sql.DataFrame)
-          : (org.apache.spark.sql.DataFrame, Long, Double) = {
-        val t = System.nanoTime()
-        val df = f().localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        val c = df.count()
-        (df, c, (System.nanoTime() - t) / 1e9)
-      }
       // n/k stays constant across scales (the semanticDedupPairs
       // contract: cluster count scales with the corpus so per-cluster
       // work is bounded) — a FIXED k at growing n would push every
       // organic cluster over the cap and the receipt would measure the
       // miscalibration, not the flood
       val k = math.max(32L, n / 16L).toInt
-      val (uncappedDf, uncapped, uncappedSec) =
-        run(() => Similarity.semanticDedupPairs(emb, 0.4, nCentroids = k))
-      val (cappedDf, capped, cappedSec) =
-        run(() => Similarity.semanticDedupPairsCapped(emb, 0.4,
+      (s""""vectors":$n,"ncentroids":$k,"flood_vecs":$flood""", flood,
+        () => Similarity.semanticDedupPairs(emb, 0.4, nCentroids = k),
+        () => Similarity.semanticDedupPairsCapped(emb, 0.4,
           nCentroids = k, cap = cap))
-      val diff = cappedDf.select(col("id_a"), col("id_b"))
-        .exceptAll(uncappedDf.select(col("id_a"), col("id_b")))
-        .count()
-      require(diff == 0L, s"capped must be a subset of uncapped: $diff")
-      println(f"""SOAK {"phase":"semcapflood","scale":"$tag","vectors":$n,"ncentroids":$k,"flood_vecs":$flood,"cap":$cap,"uncapped_pairs":$uncapped,"uncapped_sec":$uncappedSec%.2f,"capped_pairs":$capped,"capped_sec":$cappedSec%.2f,"flood_pairs_expected":${flood * (flood - 1) / 2}}""")
     }
   }
+
+  /** The capped-vs-plain scale receipt both cap soaks print. Per scale
+    * (×1 and ×factor of `nBase`) `fixture(n, dir)` writes the flooded
+    * corpus and returns the SOAK fields ahead of "cap", the flood size
+    * and the two pair operators. Each frame materializes ONCE (timed
+    * through the eager snapshot); the counts AND the subset invariant
+    * read the cached rows — the deliberately-quadratic uncapped flood
+    * join must not be re-paid for a bookkeeping check. Capped ⊆
+    * uncapped is asserted before timing is trusted. */
+  private def capReceipt(spark: SparkSession, phase: String, nBase: Long,
+      factor: Int, outDir: String, cap: Int)(
+      fixture: (Long, String) => (String, Long, () => DataFrame,
+        () => DataFrame)): Unit =
+    for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
+      val dir = s"$outDir/${phase}_$tag"
+      freshDir(spark, dir)
+      val (fields, flood, uncappedOp, cappedOp) = fixture(n, dir)
+      def run(f: () => DataFrame): (DataFrame, Long, Double) = {
+        val t = System.nanoTime()
+        val df = f().localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        val c = df.count()
+        (df, c, (System.nanoTime() - t) / 1e9)
+      }
+      val (uncappedDf, uncapped, uncappedSec) = run(uncappedOp)
+      val (cappedDf, capped, cappedSec) = run(cappedOp)
+      val (diff, _, _, _) = ParityCheck.diffCounts(
+        cappedDf.select(col("id_a"), col("id_b")),
+        uncappedDf.select(col("id_a"), col("id_b")))
+      require(diff == 0L, s"capped must be a subset of uncapped: $diff")
+      println(f"""SOAK {"phase":"$phase","scale":"$tag",$fields,"cap":$cap,"uncapped_pairs":$uncapped,"uncapped_sec":$uncappedSec%.2f,"capped_pairs":$capped,"capped_sec":$cappedSec%.2f,"flood_pairs_expected":${flood * (flood - 1) / 2}}""")
+      Seq(uncappedDf, cappedDf).foreach(graft.Snap.free(_))
+    }
 
   /** `fpdecontam` mode: the retroactive-decontamination cost receipt —
     * the missing half of the flood story the caps alone leave open. The
@@ -1202,11 +1219,11 @@ object Soak {
       .select(col("id_a"), col("id_b"))
     val pc = FingerprintStream.livePairs(spark, s"$dir/capped")
       .select(col("id_a"), col("id_b"))
-    val pDiff = pu.exceptAll(pc).count() + pc.exceptAll(pu).count()
+    val pDiff = setDiff(pu, pc)
     require(pDiff == 0L, s"repaired pairs != capped pairs: $pDiff")
     val lu = FingerprintStream.labels(spark, s"$dir/uncapped")
     val lc = FingerprintStream.labels(spark, s"$dir/capped")
-    val lDiff = lu.exceptAll(lc).count() + lc.exceptAll(lu).count()
+    val lDiff = setDiff(lu, lc)
     require(lDiff == 0L, s"repaired labels != capped labels: $lDiff")
     println("""SOAK {"phase":"fpdecontam","parity":"repaired uncapped == capped (pairs+labels)"}""")
   }
@@ -1316,10 +1333,9 @@ object Soak {
     for ((tag, mult) <- Seq("true1x" -> 1, s"true${factor}x" -> factor)) {
       val nBase = nFix * mult
       val dir = s"$outDir/bandhealth_$tag"
-      trueGrowthDocuments(spark, baseDir, nBase + 2 * (nBase / 8))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = persisted(spark,
+        trueGrowthDocuments(spark, baseDir, nBase + 2 * (nBase / 8)),
+        s"$dir/documents.parquet")
       val base = docs.filter(col("doc_id") < nBase)
       val refB = docs.filter(col("doc_id") >= nBase &&
         col("doc_id") < nBase + nBase / 8)
@@ -1360,10 +1376,8 @@ object Soak {
     val nBase = Tables.documents(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/retrw_$tag"
-      trueGrowthDocuments(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = persisted(spark, trueGrowthDocuments(spark, baseDir, n),
+        s"$dir/documents.parquet")
       val baseSec = med5(
         graft.ops.Search.bm25TopKIndexed(spark, dir, docs, terms).collect())
       val antijoin = Seq(11L, 3L, 2L).map { m =>
@@ -1406,10 +1420,8 @@ object Soak {
     val nBase = Tables.documents(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/mhrw_$tag"
-      trueGrowthDocuments(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = persisted(spark, trueGrowthDocuments(spark, baseDir, n),
+        s"$dir/documents.parquet")
       val base = docs.filter(col("doc_id") % 7 =!= 0)
       val delta = docs.filter(col("doc_id") % 7 === 0)
       val baseSec = med5(graft.ops.Dedup
@@ -1448,10 +1460,8 @@ object Soak {
     val nBase = Tables.documents(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/containab_$tag"
-      trueGrowthDocuments(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = persisted(spark, trueGrowthDocuments(spark, baseDir, n),
+        s"$dir/documents.parquet")
       def run(name: String, snap: Boolean): Long = {
         val t0 = System.nanoTime()
         graft.ops.Dedup.shingleContainment(docs, 3, 50000000L, snapshot = snap)
@@ -1464,8 +1474,9 @@ object Soak {
       run("warm", snap = true) // JIT/page-cache warm pass, not compared
       val a = run("snapshot", snap = true)
       val b = run("recompute", snap = false)
-      val diff = spark.read.parquet(s"$dir/snapshot.parquet")
-        .exceptAll(spark.read.parquet(s"$dir/recompute.parquet")).count()
+      val (diff, _, _, _) = ParityCheck.diffCounts(
+        spark.read.parquet(s"$dir/snapshot.parquet"),
+        spark.read.parquet(s"$dir/recompute.parquet"))
       require(a == b && diff == 0L, s"containment variants disagree: $a vs $b, diff $diff")
     }
   }
@@ -1497,10 +1508,8 @@ object Soak {
     val nBase = Tables.documents(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/retirecc_$tag"
-      trueGrowthDocuments(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = persisted(spark, trueGrowthDocuments(spark, baseDir, n),
+        s"$dir/documents.parquet")
       // UNTIMED prep — in production these are the standing persisted
       // artifacts every label reader already depends on
       graft.ops.Dedup.minHashPairs(docs)
@@ -1525,8 +1534,7 @@ object Soak {
       rebuilt.write.format("noop").mode("overwrite").save()
       val rebuildSec = (System.nanoTime() - t1) / 1e9
       // timing is only evidence if the answers agree
-      val diff = retired.exceptAll(rebuilt).count() +
-        rebuilt.exceptAll(retired).count()
+      val diff = setDiff(retired, rebuilt)
       println(f"""SOAK {"phase":"retirecc","scale":"$tag","docs":$n,"expired_docs":$nExp,"retire_sec":$retireSec%.2f,"rebuild_sec":$rebuildSec%.2f,"label_diff":$diff}""")
       require(diff == 0L, s"retired labels != rebuild at $tag: $diff")
 
@@ -1561,11 +1569,7 @@ object Soak {
       val docs = mediaDocs(spark, 0L, n)
       val runs: Seq[(String, () => DataFrame)] = Seq(
         "q_phash_pairs" -> (() => Dedup.hammingPairs128(
-          Multimodal.pHashes(Multimodal.imagePngMediaTrueGrowth(spark, docs))
-            .filter(_.decoded).toDF()
-            .select(col("media_id").as("doc_id"),
-              col("ph0").as("sh0"), col("ph1").as("sh1")),
-          maxHamming = 3)),
+          trueGrowthFps(spark, docs), maxHamming = 3)),
         "q_audio_fp_pairs" -> (() => Dedup.hammingPairs128(
           Multimodal.audioFingerprints(Multimodal.audioWavMediaTrueGrowth(spark, docs))
             .filter(_.decoded).toDF()
@@ -1656,44 +1660,20 @@ object Soak {
     * [[graft.streaming.BatchState]]). */
   def embStreamSoak(spark: SparkSession, factor: Int, baseDir: String,
       outDir: String, nWaves: Int = 8): Unit = {
-    import spark.implicits._
     import graft.ops.Similarity
     import graft.streaming.EmbeddingStream
     val threshold = 0.4
     val nBase = Tables.embeddings(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/embstream_$tag"
-      freshDir(spark, dir)
-      trueGrowthEmbeddings(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val splitId = n * 3L / 5L
-      val base = emb.filter(col("vec_id") < splitId)
-      // CONSTANT arrival stream regardless of corpus scale
-      val arrFrame = emb.filter(col("vec_id") >= n - nBase * 2L / 5L)
-        .select(col("vec_id"), col("embedding"))
-      val arrivals = arrFrame.as[EmbeddingStream.VecIn]
-        .collect().sortBy(_.vec_id)
       val root = s"$dir/state"
-      val tInit0 = System.nanoTime()
-      EmbeddingStream.initFromCorpus(spark, root, base,
-        refDelta = arrFrame, threshold = threshold)
-      val initSec = (System.nanoTime() - tInit0) / 1e9
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EmbeddingStream.VecIn]
-      val q = EmbeddingStream.start(mem.toDF(), root, s"$dir/ckpt",
-        threshold, consolidateEvery = 4)
-      val waves = arrivals.grouped(
-        math.max(1, arrivals.length / nWaves)).toSeq
-      val waveSecs = waves.map { w =>
-        val t = System.nanoTime()
-        mem.addData(w.toSeq); q.processAllAvailable()
-        (System.nanoTime() - t) / 1e9
-      }
-      q.stop()
-      val medianWave = waveSecs.sorted.apply(waveSecs.length / 2)
+      val fx = longFixture(spark, "emb", n, nBase, baseDir, dir, root,
+        freshDir(spark, dir), nWaves, consolidateEvery = 4)
+      val (emb, splitId) = (fx.corpus, fx.splitId)
+      val base = emb.filter(col("vec_id") < splitId)
+      val arrFrame = emb.filter(col("vec_id") >= fx.arrFrom)
+        .select(col("vec_id"), col("embedding"))
+      val waveSecs = streamWaves(fx, s"$dir/ckpt")
       // invariant before timing is trusted
       val diff = EmbeddingStream.labelDiff(spark, root)
 
@@ -1731,9 +1711,8 @@ object Soak {
           transform(col("embedding"), (x, i) =>
             when(i % 2 === 0, (abs(x) + lit(eps)).cast("float"))
               .otherwise(x)).as("embedding"))
-      val lastWaveDf = waves.last.toSeq.toDF()
-        .select(col("vec_id"), col("embedding")).localCheckpoint(true)
-      val arrN = arrivals.length.toLong
+      val lastWaveDf = fx.wave(fx.waves - 1).localCheckpoint(true)
+      val arrN = fx.arrivals.toLong
       val corpusN = splitId + arrN
       val copies = math.max(2L, corpusN / (2L * arrN)).toInt
       // fresh-id stride for synthetic batches: must exceed the batch
@@ -1741,7 +1720,7 @@ object Soak {
       // the same vec_id lands twice in standing state (which would
       // corrupt the labels == CC invariant at arrN > 1M)
       val stride = math.max(1000000L, 2L * arrN)
-      val bFire = waves.length.toLong + 4L // past any replay ids
+      val bFire = fx.waves.toLong + 4L // past any replay ids
       // accumulation batches: shifted half-orthant samples drawn from
       // DISTINCT source vectors (base slices cycled by copy) so the
       // accumulated mode has real diversity, each under fresh ids
@@ -1787,10 +1766,9 @@ object Soak {
 
       // ── retire leg: cluster-probe economics across expiry ──
       val keptRows = EmbeddingStream.keptIds(spark, root).count()
-      val expired = base.filter(col("vec_id") < splitId / 2)
+      val expired = emb.filter(col("vec_id") < splitId / 2 ||
+          (col("vec_id") >= fx.arrFrom && col("vec_id") % 5 === 0))
         .select(col("vec_id"))
-        .unionByName(emb.filter(col("vec_id") >= n - nBase * 2L / 5L &&
-          col("vec_id") % 5 === 0).select(col("vec_id")))
       val probe = Similarity.assignToCentroids(lastWaveDf,
           spark.read.parquet(s"$root/cents/epoch=1"))
         .select(col("cluster").cast("long").as("cluster"))
@@ -1799,13 +1777,11 @@ object Soak {
         EmbeddingStream.assignedState(spark, root).select(col("cluster")),
         Seq("cluster")).count()
       val legsPre = probeLegs()
-      val tR = System.nanoTime()
-      EmbeddingStream.retire(spark, root, expired)
-      val retireSec = (System.nanoTime() - tR) / 1e9
+      val retireSec = timed(EmbeddingStream.retire(spark, root, expired))
       val legsPost = probeLegs()
       val diffAfter = EmbeddingStream.labelDiff(spark, root)
       val keptAfter = EmbeddingStream.keptIds(spark, root).count()
-      println(f"""SOAK {"phase":"embstream","scale":"$tag","vectors":$n,"base":$splitId,"arrivals":${arrivals.length},"waves":${waveSecs.length},"init_sec":$initSec%.2f,"median_wave_sec":$medianWave%.2f,"max_wave_sec":${waveSecs.max}%.2f,"label_diff":$diff,"shift_batch_sec":$shiftBatchSec%.2f,"retrain_sec":$retrainSec%.2f,"post_epoch_batch_sec":$postEpochBatchSec%.2f,"kept_rows":$keptRows,"retire_sec":$retireSec%.2f,"kept_after_retire":$keptAfter,"label_diff_after_retire":$diffAfter,"probe_legs_pre_retire":$legsPre,"probe_legs_post_retire":$legsPost}""")
+      println(f"""SOAK {"phase":"embstream","scale":"$tag",${fx.head},"arrivals":${fx.arrivals},"waves":${waveSecs.length},"init_sec":${fx.initSec}%.2f,"median_wave_sec":${medSec(waveSecs)}%.2f,"max_wave_sec":${waveSecs.max}%.2f,"label_diff":$diff,"shift_batch_sec":$shiftBatchSec%.2f,"retrain_sec":$retrainSec%.2f,"post_epoch_batch_sec":$postEpochBatchSec%.2f,"kept_rows":$keptRows,"retire_sec":$retireSec%.2f,"kept_after_retire":$keptAfter,"label_diff_after_retire":$diffAfter,"probe_legs_pre_retire":$legsPre,"probe_legs_post_retire":$legsPost}""")
       require(diff == 0L && diffAfter == 0L,
         s"labels != CC at $tag: $diff before retire, $diffAfter after")
     }
@@ -1829,20 +1805,15 @@ object Soak {
   def incrServeSoak(spark: SparkSession, factor: Int, baseDir: String,
       outDir: String): Unit = {
     import spark.implicits._
-    import graft.ops.{Dedup, Multimodal, Search}
+    import graft.ops.{Dedup, Search}
     val nBase = Tables.documents(spark, baseDir).count()
     for ((tag, n) <- Seq("true1x" -> nBase, s"true${factor}x" -> nBase * factor)) {
       val dir = s"$outDir/incrserve_$tag"
 
       // ── pHash pairs: constant image delta vs persisted fingerprint index ──
-      val media = spark.range(n).select(col("id").as("doc_id"),
-        concat(lit("src"), pmod(col("id"), lit(8L))).as("source"))
+      val media = mediaDocs(spark, 0L, n)
       val isDelta = col("doc_id") % 7 === 0 && col("doc_id") < nBase
-      def hashes(d: DataFrame): DataFrame =
-        Multimodal.pHashes(Multimodal.imagePngMediaTrueGrowth(spark, d))
-          .filter(_.decoded).toDF()
-          .select(col("media_id").as("doc_id"),
-            col("ph0").as("sh0"), col("ph1").as("sh1"))
+      def hashes(d: DataFrame): DataFrame = trueGrowthFps(spark, d)
       // UNTIMED prep — the live pipeline persists its fingerprint index
       hashes(media.filter(!isDelta))
         .write.mode("overwrite").parquet(s"$dir/phash_index.parquet")
@@ -1863,15 +1834,12 @@ object Soak {
       val touching = spark.read.parquet(s"$dir/full_pairs.parquet")
         .filter((col("id_a") % 7 === 0 && col("id_a") < nBase) ||
           (col("id_b") % 7 === 0 && col("id_b") < nBase))
-      val pairDiff = incrPairs.exceptAll(touching).count() +
-        touching.exceptAll(incrPairs).count()
+      val pairDiff = setDiff(incrPairs, touching)
       println(f"""SOAK {"phase":"incrpairs","scale":"$tag","docs":$n,"delta_docs":$nDelta,"incr_sec":$incrSec%.2f,"rebuild_sec":$rebuildSec%.2f,"pair_diff":$pairDiff}""")
 
       // ── BM25: constant doc delta over the persisted base inverted index ──
-      trueGrowthDocuments(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = persisted(spark, trueGrowthDocuments(spark, baseDir, n),
+        s"$dir/documents.parquet")
       val isDeltaDoc = col("doc_id") % 7 === 0 && col("doc_id") < nBase
       // query terms: the corpus' 3 most frequent [a-z]+ tokens —
       // deterministic (the generator is hash arithmetic), nonempty
@@ -1901,8 +1869,7 @@ object Soak {
       val scanBmSec = (System.nanoTime() - t4) / 1e9
       val served = incrServe()
       val scanned = Search.bm25TopK(docs, terms)
-      val bmDiff = served.exceptAll(scanned).count() +
-        scanned.exceptAll(served).count()
+      val bmDiff = setDiff(served, scanned)
       println(f"""SOAK {"phase":"incrbm25","scale":"$tag","docs":$n,"delta_docs":$nDelta,"terms":"${terms.mkString(" ")}","incr_sec":$incrBmSec%.2f,"rebuild_sec":$rebuildBmSec%.2f,"scan_sec":$scanBmSec%.2f,"row_diff":$bmDiff}""")
 
       // ── DSIR importance weights: a constant arrival batch scores
@@ -1927,8 +1894,7 @@ object Soak {
       val incrDsir = spark.read.parquet(s"$dir/incr_dsir.parquet")
       val fullDsir = Sampling.importanceWeights(docs)
         .filter(isDeltaDoc)
-      val dsirDiff = incrDsir.exceptAll(fullDsir).count() +
-        fullDsir.exceptAll(incrDsir).count()
+      val dsirDiff = setDiff(incrDsir, fullDsir)
       println(f"""SOAK {"phase":"incrdsir","scale":"$tag","docs":$n,"delta_docs":$nDelta,"rows":${incrDsir.count()},"incr_sec":$incrDsirSec%.2f,"rebuild_sec":$rebuildDsirSec%.2f,"row_diff":$dsirDiff}""")
 
       // ── text MinHash: constant doc delta vs the persisted base
@@ -1952,8 +1918,7 @@ object Soak {
       val touchingMh = spark.read.parquet(s"$dir/full_mh.parquet")
         .filter((col("id_a") % 7 === 0 && col("id_a") < nBase) ||
           (col("id_b") % 7 === 0 && col("id_b") < nBase))
-      val mhDiff = incrMh.exceptAll(touchingMh).count() +
-        touchingMh.exceptAll(incrMh).count()
+      val mhDiff = setDiff(incrMh, touchingMh)
       println(f"""SOAK {"phase":"incrminhash","scale":"$tag","docs":$n,"delta_docs":$nDelta,"pairs":${incrMh.count()},"incr_sec":$incrMhSec%.2f,"rebuild_sec":$rebuildMhSec%.2f,"pair_diff":$mhDiff}""")
 
       // ── SemDeDup: constant vector delta over the persisted base-trained
@@ -1963,10 +1928,8 @@ object Soak {
       // re-trains and re-pairs everything at Σ|cluster|² ──
       import graft.ops.Similarity
       val k = (32L * (n / nBase)).toInt
-      trueGrowthEmbeddings(spark, baseDir, n)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+      val vecs = persisted(spark, trueGrowthEmbeddings(spark, baseDir, n),
+        s"$dir/embeddings.parquet")
       val isDeltaVec = col("vec_id") % 7 === 0 && col("vec_id") < nBase
       val baseVecs = vecs.filter(!isDeltaVec)
       val deltaVecs = vecs.filter(isDeltaVec)
@@ -2003,8 +1966,7 @@ object Soak {
         .select(col("id_a"), col("id_b"),
           col("cluster").cast("long").as("cluster"), col("cosine"))
       val incrSem = spark.read.parquet(s"$dir/incr_sem.parquet")
-      val semDiff = incrSem.exceptAll(expected).count() +
-        expected.exceptAll(incrSem).count()
+      val semDiff = setDiff(incrSem, expected)
       val semPairs = incrSem.count()
       println(f"""SOAK {"phase":"incrsemdedup","scale":"$tag","docs":$n,"delta_docs":$nDelta,"centroids":$k,"pairs":$semPairs,"incr_sec":$incrSemSec%.2f,"rebuild_sec":$rebuildSemSec%.2f,"pair_diff":$semDiff}""")
     }
@@ -2030,10 +1992,9 @@ object Soak {
     val nBase = Tables.embeddings(spark, baseDir).count() * factor
     val dir = s"$outDir/ivfdrift"
     // base corpus + two held-out arrival batches, all one generator
-    val all = trueGrowthEmbeddings(spark, baseDir, nBase + 2 * (nBase / 8))
-    all.repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+    val vecs = persisted(spark,
+      trueGrowthEmbeddings(spark, baseDir, nBase + 2 * (nBase / 8)),
+      s"$dir/embeddings.parquet")
     val base = vecs.filter(col("vec_id") < nBase)
     val refBatch = vecs.filter(col("vec_id") >= nBase &&
       col("vec_id") < nBase + nBase / 8)
@@ -2062,151 +2023,63 @@ object Soak {
           .otherwise(lit(0.0f)))))
   }
 
-  def main(args: Array[String]): Unit = {
-    val factor = args.headOption.map(_.toInt).getOrElse(10)
-    val baseDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val outDir = args.lift(2).getOrElse("target/scale")
-    val streaming = args.lift(3).contains("streaming")
-    // SPARK_GRAFT_SOAK_QUERIES=q_a,q_b narrows a run to specific rows —
-    // re-measuring one family's scale curve without paying the full sweep
-    val queries = sys.env.get("SPARK_GRAFT_SOAK_QUERIES")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-      .getOrElse(if (args.lift(3).contains("linear")) linearHeadline else headline)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      .config("spark.sql.files.openCostInBytes", s"${512 * 1024}")
-      // FAIR so the coresidency soak's per-tier pools share the
-      // executor pool; every other mode is single-threaded (one job at
-      // a time), where FAIR == FIFO
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** A soak mode's runner: (session, factor, base dir, out dir). */
+  private type Mode = (SparkSession, Int, String, String) => Unit
 
-    if (streaming) {
-      streamingSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("lshttl")) {
-      lshTtlSoak(spark, factor, baseDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("incrcc")) {
-      incrCcSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("incrserve")) {
-      incrServeSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("ivfdrift")) {
-      ivfDriftSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("retirecc")) {
-      retireCcSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("containab")) {
-      containAbSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("bandhealth")) {
-      bandHealthSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("retirerewrite")) {
-      retireRewriteSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("mhrewrite")) {
-      mhRewriteSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    val floodPerBatch = sys.env.get("SPARK_GRAFT_FLOOD_PER_BATCH")
-      .map(_.toInt)
-    val longTier = Map("docstreamlong" -> "doc", "fpstreamlong" -> "fp",
-      "embstreamlong" -> "emb")
-    val floodTier = Map("docstreamflood" -> "doc", "fpstreamflood" -> "fp",
-      "embstreamflood" -> "emb")
-    val mode = args.lift(3).getOrElse("")
-    if (longTier.contains(mode)) {
-      // SPARK_GRAFT_CONSOLIDATE_EVERY=0 runs the COUNTERFACTUAL (no
-      // consolidation — one directory per batch forever) so the slope
-      // the fold prevents is measured, not argued
-      streamLongSoak(spark, longTier(mode), factor, baseDir, outDir,
-        nBatches = if (mode == "fpstreamlong") 60 else 120,
-        consolidateEvery = sys.env.get("SPARK_GRAFT_CONSOLIDATE_EVERY")
-          .map(_.toInt).getOrElse(16))
-      spark.stop()
-      return
-    }
-    if (floodTier.contains(mode)) {
-      streamFloodSoak(spark, floodTier(mode), baseDir, outDir, floodPerBatch)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("docstream")) {
-      docStreamSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("capflood")) {
-      capFloodSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("semcapflood")) {
-      semCapFloodSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("fpdecontam")) {
-      fpDecontamSoak(spark, baseDir, outDir, floodPerBatch)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("coresidency")) {
-      coResidencySoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("embstream")) {
-      embStreamSoak(spark, factor, baseDir, outDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("truegrowthmedia")) {
-      trueGrowthMediaSoak(spark, factor, baseDir)
-      spark.stop()
-      return
-    }
-    if (args.lift(3).contains("truegrowth")) {
-      trueGrowthSoak(spark, factor, baseDir, outDir,
-        sys.env.get("SPARK_GRAFT_SOAK_QUERIES")
-          .map(_.split(",").toSeq.filter(_.nonEmpty))
-          .getOrElse(Seq("q_dedup_minhash", "q_dedup_clusters")))
-      spark.stop()
-      return
-    }
+  private def envInt(name: String): Option[Int] = sys.env.get(name).map(_.toInt)
 
-    // ── build the N× fixture set ──
+  /** SPARK_GRAFT_SOAK_QUERIES=q_a,q_b narrows a query sweep to specific
+    * rows — re-measuring one family's scale curve without paying the
+    * full sweep. */
+  private def soakQueries(default: Seq[String]): Seq[String] =
+    sys.env.get("SPARK_GRAFT_SOAK_QUERIES")
+      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(default)
+
+  /** Every mode [[main]] runs, by name. The long modes' batch counts and
+    * SPARK_GRAFT_CONSOLIDATE_EVERY (0 runs the COUNTERFACTUAL — no
+    * consolidation, one directory per batch forever — so the slope the
+    * fold prevents is measured, not argued), and the flood modes'
+    * SPARK_GRAFT_FLOOD_PER_BATCH, are read here. */
+  private val modes: Map[String, Mode] = Map[String, Mode](
+    ("all", headlineSoak(_, _, _, _, soakQueries(headline))),
+    ("linear", headlineSoak(_, _, _, _, soakQueries(linearHeadline))),
+    ("streaming", streamingSoak),
+    ("truegrowth", trueGrowthSoak(_, _, _, _,
+      soakQueries(Seq("q_dedup_minhash", "q_dedup_clusters")))),
+    ("truegrowthmedia", (s, f, b, _) => trueGrowthMediaSoak(s, f, b)),
+    ("lshttl", (s, f, b, _) => lshTtlSoak(s, f, b)),
+    ("incrcc", incrCcSoak),
+    ("incrserve", incrServeSoak),
+    ("ivfdrift", ivfDriftSoak),
+    ("retirecc", retireCcSoak),
+    ("containab", containAbSoak),
+    ("bandhealth", bandHealthSoak),
+    ("retirerewrite", retireRewriteSoak),
+    ("mhrewrite", mhRewriteSoak),
+    ("docstream", docStreamSoak(_, _, _, _)),
+    ("embstream", embStreamSoak(_, _, _, _)),
+    ("capflood", capFloodSoak(_, _, _, _)),
+    ("semcapflood", semCapFloodSoak(_, _, _, _)),
+    ("coresidency", coResidencySoak(_, _, _, _)),
+    ("fpdecontam", (s, _, b, o) =>
+      fpDecontamSoak(s, b, o, envInt("SPARK_GRAFT_FLOOD_PER_BATCH")))
+  ) ++ Seq("doc", "fp", "emb").flatMap(tier => Seq[(String, Mode)](
+    (s"${tier}streamlong", streamLongSoak(_, tier, _, _, _,
+      nBatches = if (tier == "fp") 60 else 120,
+      consolidateEvery = envInt("SPARK_GRAFT_CONSOLIDATE_EVERY").getOrElse(16))),
+    (s"${tier}streamflood", (s, _, b, o) => streamFloodSoak(s, tier, b, o,
+      envInt("SPARK_GRAFT_FLOOD_PER_BATCH")))))
+
+  /** The runner of soak mode `name`, or the message naming every known
+    * mode. */
+  private[graft] def modeRunner(name: String): Either[String, Mode] =
+    modes.get(name).toRight(s"unknown soak mode '$name'; known modes: " +
+      modes.keys.toSeq.sorted.mkString(", "))
+
+  /** The 1×/N× headline sweep: replicate the fixtures `factor`× into
+    * `outDir`, then time `queries` on the base and the replicated set. */
+  def headlineSoak(spark: SparkSession, factor: Int, baseDir: String,
+      outDir: String, queries: Seq[String]): Unit = {
     for (t <- Seq("region", "nation")) // dims: single copy
       spark.read.parquet(s"$baseDir/$t.parquet")
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
@@ -2231,6 +2104,35 @@ object Soak {
 
     run("1x", baseDir)   // warm + baseline
     run(s"${factor}x", outDir)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val factor = args.headOption.map(_.toInt).getOrElse(10)
+    val baseDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    val outDir = args.lift(2).getOrElse("target/scale")
+    // an unknown mode fails before any Spark work instead of falling
+    // through to a sweep nobody asked for
+    val run = modeRunner(args.lift(3).getOrElse("all")) match {
+      case Right(r) => r
+      case Left(msg) => System.err.println(msg); sys.exit(1)
+    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
+      .config("spark.sql.files.openCostInBytes", s"${512 * 1024}")
+      // FAIR so the coresidency soak's per-tier pools share the
+      // executor pool; every other mode is single-threaded (one job at
+      // a time), where FAIR == FIFO
+      .config("spark.scheduler.mode", "FAIR")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    run(spark, factor, baseDir, outDir)
     spark.stop()
   }
 }

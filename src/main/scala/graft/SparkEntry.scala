@@ -54,104 +54,50 @@ object SparkEntry {
         col("ph0").as("sh0"), col("ph1").as("sh1"))
   }
 
-  /** The runnable vector pipeline's epoch-handoff lifecycle, built ONCE
-    * per JVM (ManagedTable.once — a standing pipeline's state is built
-    * once, then SERVED): init on the base corpus → d0 arrives → the
-    * SHIFTED d1 arrives and its committed gauge row must FIRE (require —
-    * a quiet gauge fails both rows that read this state) → maintenance
-    * window retrains to epoch 1 re-anchored on the post-shift
-    * distribution → d2 arrives under the new quantizer. Serves
-    * q_embstream_epoch_handoff (d2's pair ledger) and q_embstream_gauge
-    * (d1's health row). */
-  private def embStreamEpochRoot(s: SparkSession, dir: String): String =
-    graft.sources.ManagedTable.once(
-        s"${s.sparkContext.applicationId}/embstream_epoch/$dir") {
-      import graft.streaming.EmbeddingStream
-      val (base, d0, d1, d2) = epochShiftSplits(s, dir)
-      val r =
-        s"target/embstream_epoch/${graft.sources.ManagedTable.tag(dir)}"
-      new org.apache.hadoop.fs.Path(r)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(r), true)
-      EmbeddingStream.initFromCorpus(s, r, base, refDelta = d0)
-      def vecs(df: DataFrame) = df.select(col("vec_id"), col("embedding"))
-      EmbeddingStream.processBatch(vecs(d0), 0L, r)
-      EmbeddingStream.processBatch(vecs(d1), 1L, r)
-      val g = EmbeddingStream.gaugeRows(s, r)
-        .filter(col("batch_id") === 1L).head()
-      require(g.getAs[Boolean]("retrain"),
-        s"the in-pipeline gauge must fire on the shifted batch: $g")
-      EmbeddingStream.retrainEpoch(s, r, 1, refDelta = d1)
-      EmbeddingStream.processBatch(vecs(d2), 2L, r)
-      r
-    }
+  /** The runnable vector pipeline's epoch-handoff lifecycle: init on the
+    * base corpus → d0 arrives → the SHIFTED d1 arrives and its committed
+    * gauge row must FIRE (require — a quiet gauge fails both rows that
+    * read this state) → maintenance window retrains to epoch 1
+    * re-anchored on the post-shift distribution → d2 arrives under the
+    * new quantizer. Serves q_embstream_epoch_handoff (d2's pair ledger)
+    * and q_embstream_gauge (d1's health row). */
+  private def buildEmbStreamEpoch(s: SparkSession, dir: String): String = {
+    import graft.streaming.EmbeddingStream
+    val (base, d0, d1, d2) = epochShiftSplits(s, dir)
+    val r = s"target/embstream_epoch/${graft.sources.ManagedTable.tag(dir)}"
+    new org.apache.hadoop.fs.Path(r)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(r), true)
+    EmbeddingStream.initFromCorpus(s, r, base, refDelta = d0)
+    def vecs(df: DataFrame) = df.select(col("vec_id"), col("embedding"))
+    EmbeddingStream.processBatch(vecs(d0), 0L, r)
+    EmbeddingStream.processBatch(vecs(d1), 1L, r)
+    val g = EmbeddingStream.gaugeRows(s, r)
+      .filter(col("batch_id") === 1L).head()
+    require(g.getAs[Boolean]("retrain"),
+      s"the in-pipeline gauge must fire on the shifted batch: $g")
+    EmbeddingStream.retrainEpoch(s, r, 1, refDelta = d1)
+    EmbeddingStream.processBatch(vecs(d2), 2L, r)
+    r
+  }
 
-  /** The CAPPED runnable document pipeline's scenario state, built ONCE
-    * per JVM ([[graft.streaming.ParityCheck.buildCappedPipeline]] —
-    * flood-mod-3 duplicate traffic, `hotBucketCap` on, restart straddling
-    * a consolidation). Serves q_docstream_capped_parity (final state vs
-    * the capped batch twin) and q_docstream_gauge (the last batch's
-    * inline health-ledger row). */
-  private def docStreamCappedRoot(s: SparkSession, dir: String): String =
+  /** The state root of runnable-pipeline gate `kind` over `dir`, built
+    * ONCE per JVM (ManagedTable.once — a standing pipeline's state is
+    * built once, then SERVED by every row that reads it) by its
+    * [[graft.streaming.ParityCheck]] builder, which names those rows. */
+  private def gateRoot(s: SparkSession, dir: String, kind: String): String =
     graft.sources.ManagedTable.once(
-        s"${s.sparkContext.applicationId}/docstream_capped/$dir") {
-      graft.streaming.ParityCheck.buildCappedPipeline(s, dir)
-    }
-
-  /** The media pipeline's gate state, built once per JVM
-    * ([[graft.streaming.ParityCheck.buildFingerprintPipeline]]) — serves
-    * q_fpstream_restart_parity and q_fpstream_gauge. */
-  private def fpStreamRoot(s: SparkSession, dir: String): String =
-    graft.sources.ManagedTable.once(
-        s"${s.sparkContext.applicationId}/fpstream_gate/$dir") {
-      graft.streaming.ParityCheck.buildFingerprintPipeline(s, dir)
-    }
-
-  /** The CAPPED media pipeline's gate state, built once per JVM
-    * ([[graft.streaming.ParityCheck.buildCappedFingerprintPipeline]] —
-    * a DECODABLE template-image flood with `hotBucketCap` on, restart
-    * straddling a consolidation) — serves q_fpstream_capped_parity and
-    * q_fpstream_capped_gauge. */
-  private def fpStreamCappedRoot(s: SparkSession, dir: String): String =
-    graft.sources.ManagedTable.once(
-        s"${s.sparkContext.applicationId}/fpstream_capped/$dir") {
-      graft.streaming.ParityCheck.buildCappedFingerprintPipeline(s, dir)
-    }
-
-  /** The media DECONTAMINATION gate's state, built once per JVM
-    * ([[graft.streaming.ParityCheck.buildDecontamFingerprintPipeline]] —
-    * the template flood run UNCAPPED, then
-    * [[graft.streaming.FingerprintStream.decontaminate]] — the shared
-    * [[graft.streaming.IndexTier.repairFlood]] — report
-    * persisted) — serves q_fpstream_decontam_parity. */
-  private def fpStreamDecontamRoot(s: SparkSession, dir: String): String =
-    graft.sources.ManagedTable.once(
-        s"${s.sparkContext.applicationId}/fpstream_decontam/$dir") {
-      graft.streaming.ParityCheck.buildDecontamFingerprintPipeline(s, dir)
-    }
-
-  /** The TEXT decontamination gate's state, built once per JVM
-    * ([[graft.streaming.ParityCheck.buildDecontamPipeline]] — a NEAR-dup
-    * template flood the exact tier cannot stop, run uncapped, then
-    * [[graft.streaming.DocumentStream.decontaminate]], the same shared
-    * repair) — serves
-    * q_docstream_decontam_parity. */
-  private def docStreamDecontamRoot(s: SparkSession, dir: String): String =
-    graft.sources.ManagedTable.once(
-        s"${s.sparkContext.applicationId}/docstream_decontam/$dir") {
-      graft.streaming.ParityCheck.buildDecontamPipeline(s, dir)
-    }
-
-  /** The VECTOR decontamination gate's state, built once per JVM
-    * ([[graft.streaming.ParityCheck.buildDecontamEmbeddingPipeline]] —
-    * a sign-flip mode-collapse flood run uncapped, then
-    * [[graft.streaming.EmbeddingStream.decontaminate]] (the shared
-    * repair without a survivor test) at the derived
-    * corpus cap) — serves q_embstream_decontam_parity. */
-  private def embStreamDecontamRoot(s: SparkSession, dir: String): String =
-    graft.sources.ManagedTable.once(
-        s"${s.sparkContext.applicationId}/embstream_decontam/$dir") {
-      graft.streaming.ParityCheck.buildDecontamEmbeddingPipeline(s, dir)
+        s"${s.sparkContext.applicationId}/$kind/$dir") {
+      import graft.streaming.ParityCheck._
+      kind match {
+        case "embstream_epoch" => buildEmbStreamEpoch(s, dir)
+        case "docstream_capped" => buildCappedPipeline(s, dir)
+        case "docstream_decontam" => buildDecontamPipeline(s, dir)
+        case "fpstream_gate" => buildFingerprintPipeline(s, dir)
+        case "fpstream_capped" => buildCappedFingerprintPipeline(s, dir)
+        case "fpstream_decontam" => buildDecontamFingerprintPipeline(s, dir)
+        case "embstream_decontam" => buildDecontamEmbeddingPipeline(s, dir)
+      }
     }
 
   /** One-time month-partitioned copy of the events fixture written through
@@ -687,7 +633,7 @@ object SparkEntry {
     // inline health ledger must show the cap intervening per batch
     "q_docstream_capped_parity" -> ((s, dir) =>
       streaming.ParityCheck.cappedRestartParity(s, dir,
-        docStreamCappedRoot(s, dir))),
+        gateRoot(s, dir, "docstream_capped"))),
 
     // the capped pipeline's committed health-ledger row for the LAST
     // batch: arrived/admitted counts, hottest-bucket share + candidate
@@ -695,7 +641,7 @@ object SparkEntry {
     // hash-checked against the independent DuckDB replica of the
     // per-wave occupancy cut
     "q_docstream_gauge" -> ((s, dir) => {
-      val root = docStreamCappedRoot(s, dir)
+      val root = gateRoot(s, dir, "docstream_capped")
       val g = graft.streaming.DocumentStream.gaugeRows(s, s"$root/state")
       g.join(g.agg(max(col("batch_id")).as("batch_id")), Seq("batch_id"))
         .select(col("n_arrived"), col("n_admitted"),
@@ -720,14 +666,14 @@ object SparkEntry {
     // closed-form texture oracle without decoding a pixel
     "q_fpstream_restart_parity" -> ((s, dir) =>
       streaming.ParityCheck.fingerprintRestartParity(s, dir,
-        fpStreamRoot(s, dir))),
+        gateRoot(s, dir, "fpstream_gate"))),
 
     // the media pipeline's committed ledger row for the LAST batch
     // (decode health + pair flow + the defense columns: hot_buckets,
     // quar_ppb, alert) — hash-checked against the closed-form per-wave
     // replica (no pixel decoded on the oracle side)
     "q_fpstream_gauge" -> ((s, dir) => {
-      val root = fpStreamRoot(s, dir)
+      val root = gateRoot(s, dir, "fpstream_gate")
       val g = graft.streaming.FingerprintStream.gaugeRows(s, s"$root/state")
       g.join(g.agg(max(col("batch_id")).as("batch_id")), Seq("batch_id"))
         .select(col("n_arrived"), col("n_decoded"),
@@ -741,7 +687,7 @@ object SparkEntry {
     // ledger row — the "corrupted upstream batch pages someone" receipt,
     // restated closed-form from the id classes
     "q_fpstream_alerts" -> ((s, dir) => {
-      val root = fpStreamRoot(s, dir)
+      val root = gateRoot(s, dir, "fpstream_gate")
       graft.streaming.FingerprintStream.gaugeRows(s, s"$root/state")
         .agg(count(lit(1)).as("n_batches"),
           sum(col("n_quarantined")).as("quar_total"),
@@ -757,7 +703,7 @@ object SparkEntry {
     // texture oracle)
     "q_fpstream_capped_parity" -> ((s, dir) =>
       streaming.ParityCheck.fpCappedRestartParity(s, dir,
-        fpStreamCappedRoot(s, dir))),
+        gateRoot(s, dir, "fpstream_capped"))),
 
     // RETROACTIVE DECONTAMINATION, media tier: the same template flood
     // run UNCAPPED (junk pairs persisted, flood mega-cluster), then
@@ -768,7 +714,7 @@ object SparkEntry {
     // rebuild). Counts restated closed-form by the texture oracle.
     "q_fpstream_decontam_parity" -> ((s, dir) =>
       streaming.ParityCheck.fpDecontamParity(s, dir,
-        fpStreamDecontamRoot(s, dir))),
+        gateRoot(s, dir, "fpstream_decontam"))),
 
     // RETROACTIVE DECONTAMINATION, text tier: a NEAR-dup template flood
     // (kept by the exact tier — the traffic byte-dedup cannot stop) run
@@ -777,7 +723,7 @@ object SparkEntry {
     // MinHash replica restates every count with the same suffix rewrite
     "q_docstream_decontam_parity" -> ((s, dir) =>
       streaming.ParityCheck.docDecontamParity(s, dir,
-        docStreamDecontamRoot(s, dir))),
+        gateRoot(s, dir, "docstream_decontam"))),
 
     // RETROACTIVE DECONTAMINATION, vector tier: a sign-flip mode-collapse
     // flood (distinct bytes — the exact tier keeps it; exactly
@@ -788,14 +734,14 @@ object SparkEntry {
     // restates every count under the same rewrite
     "q_embstream_decontam_parity" -> ((s, dir) =>
       streaming.ParityCheck.embDecontamParity(s, dir,
-        embStreamDecontamRoot(s, dir))),
+        gateRoot(s, dir, "embstream_decontam"))),
 
     // the capped media run's WHOLE-LEDGER verdict: batches, arrivals,
     // cap interventions (hot bucket count), alert count, committed
     // pairs, quarantines — the "defense actually fired" receipt on the
     // media tier, restated closed-form per wave by the texture oracle
     "q_fpstream_capped_gauge" -> ((s, dir) => {
-      val root = fpStreamCappedRoot(s, dir)
+      val root = gateRoot(s, dir, "fpstream_capped")
       graft.streaming.FingerprintStream.gaugeRows(s, s"$root/state")
         .agg(count(lit(1)).as("n_batches"),
           sum(col("n_arrived")).as("arrived_total"),
@@ -1405,7 +1351,7 @@ object SparkEntry {
     // epoch row, so the two harnesses pin the same handoff truth
     "q_embstream_epoch_handoff" -> ((s, dir) =>
       graft.streaming.EmbeddingStream
-        .pairsOfBatch(s, embStreamEpochRoot(s, dir), 2L)
+        .pairsOfBatch(s, gateRoot(s, dir, "embstream_epoch"), 2L)
         .orderBy(col("id_a"), col("id_b"))),
 
     // the same pipeline's committed GAUGE-LEDGER row for the shifted
@@ -1414,7 +1360,7 @@ object SparkEntry {
     // independent DuckDB replica of the handoff scenario
     "q_embstream_gauge" -> ((s, dir) =>
       graft.streaming.EmbeddingStream
-        .gaugeRows(s, embStreamEpochRoot(s, dir))
+        .gaugeRows(s, gateRoot(s, dir, "embstream_epoch"))
         .filter(col("batch_id") === 1L)
         .select(col("n_ref"), col("n_new"), col("ref_fit_ppb"),
           col("new_fit_ppb"), col("drift_ppb"), col("ref_top_share_ppb"),

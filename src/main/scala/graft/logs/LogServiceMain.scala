@@ -16,10 +16,6 @@ import org.apache.spark.sql.SparkSession
   *    default here is 127.0.0.1:8081 (loopback unless told otherwise)
   *  - `LOG_TABLE_PATH` (default `target/log_service/table` — the
   *    DATABASE_URL analogue, main.go:28)
-  *  - `LOG_INGEST_DIR` (optional): when set, a Structured Streaming
-  *    file source ALSO watches this directory for wire-shaped JSON
-  *    (RFC3339 ts string + attrs map — [[LogSchema.wireSchema]]) and
-  *    runs it through [[graft.streaming.LogStream.ingest]]
   *  - `INGEST_MAX_DELAY_MS` (default 100; main.go:30)
   *
   * The write path is always up: `POST /v1/batchwrite` carries the
@@ -59,7 +55,6 @@ object LogServiceMain {
   def main(args: Array[String]): Unit = {
     val (httpHost, httpPort) = bindAddress(sys.env)
     val tablePath = sys.env.getOrElse("LOG_TABLE_PATH", "target/log_service/table")
-    val ingestDir = sys.env.get("LOG_INGEST_DIR").filter(_.nonEmpty)
     val maxDelayMs = sys.env.getOrElse("INGEST_MAX_DELAY_MS", "100").toLong
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
@@ -87,13 +82,6 @@ object LogServiceMain {
     val writeStream = graft.streaming.LogStream.ingest(
       writeSource.toDF(), tablePath, s"$tablePath/_checkpoint_rpc", maxDelayMs)
 
-    val fileStream = ingestDir.map { dir =>
-      new java.io.File(dir).mkdirs()
-      graft.streaming.LogStream.ingest(
-        spark.readStream.schema(LogSchema.wireSchema).json(dir),
-        tablePath, s"$tablePath/_checkpoint", maxDelayMs)
-    }
-
     val sink: Seq[LogEntryMsg] => Long = entries =>
       graft.streaming.LogStream.batchWrite(writeSource, entries).written
     val server = new LogHttpServer(
@@ -105,15 +93,13 @@ object LogServiceMain {
     val (grpcHost, grpcPort) = grpcAddress(sys.env)
     val grpc = new GrpcServer(sink, grpcPort, grpcHost).start()
     System.err.println(s"[log-service] http on $httpHost:${server.port}, " +
-      s"grpc on $grpcHost:${grpc.port}, table $tablePath" +
-      ingestDir.fold("")(d => s", ingesting $d"))
+      s"grpc on $grpcHost:${grpc.port}, table $tablePath")
 
     val done = new java.util.concurrent.CountDownLatch(1)
     sys.addShutdownHook {
       server.stop()
       grpc.stop()
       writeStream.stop()
-      fileStream.foreach(_.stop())
       spark.stop()
       done.countDown()
     }

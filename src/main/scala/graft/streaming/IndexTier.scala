@@ -60,7 +60,7 @@ trait IndexTier {
 
   protected def sub(name: String): Sub = subs.find(_.name == name).get
 
-  private def idCol: String = keptSub.ids.head
+  private[streaming] def idCol: String = keptSub.ids.head
 
   protected def read(spark: SparkSession, root: String, s: Sub,
       before: Long = Long.MaxValue): DataFrame =
@@ -262,6 +262,11 @@ trait IndexTier {
   def labels(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(latestLabelDir(spark, root))
 
+  /** The kept state — every row of [[keptSub]]. */
+  private[streaming] def keptState(spark: SparkSession,
+      root: String): DataFrame =
+    read(spark, root, keptSub)
+
   /** The persisted pair state — the standing corpus's `batch=-1` table
     * plus every batch's verified pairs. */
   def livePairs(spark: SparkSession, root: String): DataFrame =
@@ -276,7 +281,7 @@ trait IndexTier {
     * multiset difference in both directions — 0 on a healthy root. */
   def labelDiff(spark: SparkSession, root: String): Long = {
     val cc = graft.ops.Dedup.nearDupClusters(
-      read(spark, root, keptSub).select(col(idCol).as("doc_id")),
+      keptState(spark, root).select(col(idCol).as("doc_id")),
       pairIds(spark, root))
     val (onlyLabels, onlyCc, _, _) = ParityCheck.diffCounts(
       labels(spark, root).select(col("doc_id"), col("cluster_id")), cc)

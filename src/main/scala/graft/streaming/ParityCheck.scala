@@ -2,8 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 /** Streaming↔batch parity as a REGISTERED correctness row (not just a
   * spec): the stateful streaming operator must produce, row for row, the
@@ -19,16 +21,87 @@ import org.apache.spark.sql.functions._
   * with two far-future sentinel events so the event-time watermark passes
   * every open session's gap deadline and forces final emission — the same
   * end-of-stream flush a real pipeline gets from its next day of data.
+  *
+  * Shared by every gate: [[replay]] drives a stateful operator into a
+  * memory table, and every set comparison is [[diffCounts]]. The eight
+  * runnable-pipeline gates (text restart/capped/decontam, media
+  * restart/capped/decontam, vector restart/decontam) differ only in their
+  * fixture, their batch twin and their row-specific columns: each root is
+  * built by [[buildGate]] (fresh root → init → either [[restarted]], the
+  * stop-and-restart replay through the tier's `start`, or [[repaired]],
+  * uncapped `processBatch` waves then the tier's repair), and each served
+  * state is compared with its twin by [[compareServed]].
   */
 object ParityCheck {
 
   private val SentinelUser = -1L
 
+  /** Event-time origin of the document gates: doc i arrives at T0 + i
+    * minutes, so a time horizon is an id-distance predicate. */
+  private val T0Ms = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+
+  /** The events fixture as [[StatefulOps.EventIn]] rows in (ts, event_id)
+    * order — what every event-stream gate replays. */
+  private def eventsIn(spark: SparkSession,
+      dir: String): Array[StatefulOps.EventIn] = {
+    import spark.implicits._
+    val events = graft.Tables.events(spark, dir)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+        col("value"))
+      .as[StatefulOps.EventIn]
+      .collect()
+      .sortBy(e => (e.ts.getTime, e.event_id))
+    require(events.nonEmpty, s"no events in $dir")
+    events
+  }
+
+  /** Replay `waves` through the query `op` builds over one MemoryStream
+    * into the append-mode memory table `tbl` — one micro-batch per wave,
+    * `after` run once each has been processed — and return the table. */
+  private def replay[A: Encoder](spark: SparkSession, tbl: String,
+      waves: Seq[Seq[A]], after: Seq[A] => Unit = (_: Seq[A]) => ())(
+      op: Dataset[A] => DataFrame): DataFrame = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
+    try spark.catalog.dropTempView(tbl) catch { case _: Exception => () }
+    val q = op(mem.toDS())
+      .writeStream.format("memory").queryName(tbl).outputMode("append").start()
+    try waves.foreach { w =>
+      mem.addData(w); q.processAllAvailable(); after(w)
+    } finally q.stop()
+    spark.table(tbl)
+  }
+
+  /** A one-row verdict frame: non-nullable BIGINT / BOOLEAN columns in
+    * the given order. */
+  private def oneRow(spark: SparkSession, fields: (String, Any)*): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.singletonList(Row.fromSeq(fields.map(_._2))),
+      StructType(fields.map { case (name, v) =>
+        StructField(name, v match {
+          case _: Long => LongType
+          case _: Boolean => BooleanType
+        }, nullable = false)
+      }))
+
+  /** The set-parity verdict of a streamed frame against its batch twin:
+    * (n_batch, n_stream, n_only_batch, n_only_stream, `extra`…,
+    * parity_ok), where parity_ok also requires `extraOk`. */
+  private def setParity(spark: SparkSession, batch: DataFrame,
+      streamed: DataFrame, extra: Seq[(String, Long)] = Nil,
+      extraOk: Boolean = true): DataFrame = {
+    val (onlyBatch, onlyStream, nBatch, nStream) = diffCounts(batch, streamed)
+    oneRow(spark, Seq("n_batch" -> nBatch, "n_stream" -> nStream,
+        "n_only_batch" -> onlyBatch, "n_only_stream" -> onlyStream) ++
+      extra :+ ("parity_ok" -> (extraOk && nBatch == nStream &&
+        onlyBatch == 0L && onlyStream == 0L)): _*)
+  }
+
   /** Feed `dir`'s events through [[StatefulOps.sessionize]] via a
     * MemoryStream (4 chronological micro-batches — boundaries must not
     * matter, that is part of what is verified), then compare the emitted
-    * sessions with [[graft.analytics.Analytics.sessionize]] as SETS
-    * (exceptAll both ways, so duplicate rows can't hide).
+    * sessions with [[graft.analytics.Analytics.sessionize]] as multisets
+    * ([[diffCounts]] both ways, so duplicate rows can't hide).
     *
     * Output: one row (n_batch, n_stream, n_only_batch, n_only_stream,
     * parity_ok). The oracle recomputes n_batch with its own sessionize
@@ -37,58 +110,28 @@ object ParityCheck {
   def sessionizeParity(spark: SparkSession, dir: String,
       gapMinutes: Int = 30, nBatches: Int = 4): DataFrame = {
     import spark.implicits._
-
-    val events = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .as[StatefulOps.EventIn]
-      .collect()
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    require(events.nonEmpty, s"no events in $dir")
+    val events = eventsIn(spark, dir)
     val maxTs = events.last.ts.getTime
     val yearMs = 365L * 24 * 3600 * 1000
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StatefulOps.EventIn]
-    val tbl = "parity_sessionize"
-    try spark.catalog.dropTempView(tbl) catch { case _: Exception => () }
-    val q = StatefulOps.sessionize(mem.toDS(), gapMinutes)
-      .writeStream.format("memory").queryName(tbl).outputMode("append").start()
-    try {
-      // chronological chunks: each batch's min ts is >= the previous
-      // batch's max, so nothing ever falls behind the watermark mid-replay
-      val batchSize = math.max(1, events.length / nBatches)
-      events.grouped(batchSize).foreach { b =>
-        mem.addData(b.toSeq); q.processAllAvailable()
-      }
-      // two sentinel generations: the first advances the watermark past
-      // every real session's gap deadline, the second triggers the timeout
-      // sweep under that watermark (timeouts fire in the batch AFTER the
-      // watermark moves)
-      Seq(1L, 2L).foreach { g =>
-        mem.addData(Seq(StatefulOps.EventIn(-g, new Timestamp(maxTs + g * yearMs),
-          SentinelUser, "sentinel", 0.0)))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val streamed = spark.table(tbl)
+    // chronological chunks: each batch's min ts is >= the previous
+    // batch's max, so nothing ever falls behind the watermark mid-replay;
+    // then two sentinel generations: the first advances the watermark
+    // past every real session's gap deadline, the second triggers the
+    // timeout sweep under that watermark (timeouts fire in the batch
+    // AFTER the watermark moves)
+    val sentinels = Seq(1L, 2L).map(g => Seq(StatefulOps.EventIn(-g,
+      new Timestamp(maxTs + g * yearMs), SentinelUser, "sentinel", 0.0)))
+    val cols = Seq("user_id", "session_start", "session_end", "n_events")
+      .map(col)
+    val streamed = replay(spark, "parity_sessionize",
+        wavesOf(events.toSeq, nBatches) ++ sentinels)(
+        StatefulOps.sessionize(_, gapMinutes).toDF())
       .filter(col("user_id") =!= SentinelUser)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"))
+      .select(cols: _*)
     val batch = graft.analytics.Analytics.sessionize(
         graft.Tables.events(spark, dir), gapMinutes)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"))
-
-    val nBatch = batch.count()
-    val nStream = streamed.count()
-    val onlyBatch = batch.exceptAll(streamed).count()
-    val onlyStream = streamed.exceptAll(batch).count()
-    spark.createDataFrame(Seq(
-      (nBatch, nStream, onlyBatch, onlyStream,
-        nBatch == nStream && onlyBatch == 0L && onlyStream == 0L)))
-      .toDF("n_batch", "n_stream", "n_only_batch", "n_only_stream", "parity_ok")
+      .select(cols: _*)
+    setParity(spark, batch, streamed)
   }
 
   /** Same contract for [[StatefulOps.dedupStream]] vs batch
@@ -103,36 +146,20 @@ object ParityCheck {
   def dedupParity(spark: SparkSession, dir: String,
       nBatches: Int = 4): DataFrame = {
     import spark.implicits._
-
-    val events = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .as[StatefulOps.EventIn]
-      .collect()
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    require(events.nonEmpty, s"no events in $dir")
-    val batchSize = math.max(1, events.length / nBatches)
-    val chunks = events.grouped(batchSize).toVector
+    val chunks = wavesOf(eventsIn(spark, dir).toSeq, nBatches).toVector
     val fed: Vector[Seq[StatefulOps.EventIn]] = chunks.zipWithIndex.map {
       case (b, i) =>
-        val replayed = if (i == 0) Seq.empty else chunks(i - 1).takeRight(3).toSeq
+        val replayed = if (i == 0) Seq.empty else chunks(i - 1).takeRight(3)
         replayed ++ b.flatMap(e =>
-          if (e.event_id % 50 == 0) Seq(e, e) else Seq(e)).toSeq
+          if (e.event_id % 50 == 0) Seq(e, e) else Seq(e))
     }
 
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StatefulOps.EventIn]
-    val tbl = "parity_dedup"
-    try spark.catalog.dropTempView(tbl) catch { case _: Exception => () }
-    val q = StatefulOps.dedupStream(mem.toDF())
-      .writeStream.format("memory").queryName(tbl).outputMode("append").start()
-    try fed.foreach { b => mem.addData(b); q.processAllAvailable() }
-    finally q.stop()
-
-    // materialized before exceptAll: the Deduplicate-under-RewriteExceptAll
-    // plan trips ATTRIBUTE_NOT_FOUND binding in Spark 4.1 (both legs are
-    // harness-sized — this is the driver-orchestrated check, not a query)
-    val streamed = spark.table(tbl)
+    // both legs materialized (harness-sized — this is the
+    // driver-orchestrated check, not a query): the streamed Deduplicate
+    // plan under a set rewrite tripped ATTRIBUTE_NOT_FOUND binding in
+    // Spark 4.1
+    val streamed = replay(spark, "parity_dedup", fed)(
+        ds => StatefulOps.dedupStream(ds.toDF()))
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
       .localCheckpoint(true)
@@ -140,15 +167,7 @@ object ParityCheck {
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .dropDuplicates("user_id", "event_id")
       .localCheckpoint(true)
-
-    val nBatch = batch.count()
-    val nStream = streamed.count()
-    val onlyBatch = batch.exceptAll(streamed).count()
-    val onlyStream = streamed.exceptAll(batch).count()
-    spark.createDataFrame(Seq(
-      (nBatch, nStream, onlyBatch, onlyStream,
-        nBatch == nStream && onlyBatch == 0L && onlyStream == 0L)))
-      .toDF("n_batch", "n_stream", "n_only_batch", "n_only_stream", "parity_ok")
+    setParity(spark, batch, streamed)
   }
 
   /** Same contract for [[StatefulOps.funnelStream]] vs
@@ -164,34 +183,15 @@ object ParityCheck {
       nBatches: Int = 4): DataFrame = {
     import spark.implicits._
     val steps = Seq("signup", "view", "purchase")
-
-    val events = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .as[StatefulOps.EventIn]
-      .collect()
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    require(events.nonEmpty, s"no events in $dir")
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StatefulOps.EventIn]
-    val tbl = "parity_funnel"
-    try spark.catalog.dropTempView(tbl) catch { case _: Exception => () }
-    val q = StatefulOps.funnelStream(mem.toDS(), steps, horizonHours = 6)
-      .writeStream.format("memory").queryName(tbl).outputMode("append").start()
-    try {
-      val batchSize = math.max(1, events.length / nBatches)
-      events.grouped(batchSize).foreach { b =>
-        mem.addData(b.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val nStream = spark.table(tbl).count()
+    val nStream = replay(spark, "parity_funnel",
+        wavesOf(eventsIn(spark, dir).toSeq, nBatches))(
+        StatefulOps.funnelStream(_, steps, horizonHours = 6).toDF())
+      .count()
     val nBatch = graft.analytics.Behavior.funnelCounts(
         graft.Tables.events(spark, dir), steps, horizonHours = 6)
       .collect().last.getAs[Long]("n_users")
-    spark.createDataFrame(Seq((nBatch, nStream, nBatch == nStream)))
-      .toDF("n_batch", "n_stream", "parity_ok")
+    oneRow(spark, "n_batch" -> nBatch, "n_stream" -> nStream,
+      "parity_ok" -> (nBatch == nStream))
   }
 
   /** Same contract for [[StatefulOps.counterIncreaseStream]] vs
@@ -206,44 +206,16 @@ object ParityCheck {
   def counterIncreaseParity(spark: SparkSession, dir: String,
       nBatches: Int = 4): DataFrame = {
     import spark.implicits._
-
-    val events = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .as[StatefulOps.EventIn]
-      .collect()
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    require(events.nonEmpty, s"no events in $dir")
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StatefulOps.EventIn]
-    val tbl = "parity_counter"
-    try spark.catalog.dropTempView(tbl) catch { case _: Exception => () }
-    val q = StatefulOps.counterIncreaseStream(mem.toDS(), idleHours = 24 * 365)
-      .writeStream.format("memory").queryName(tbl).outputMode("append").start()
-    try {
-      val batchSize = math.max(1, events.length / nBatches)
-      events.grouped(batchSize).foreach { b =>
-        mem.addData(b.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val streamed = spark.table(tbl)
+    val streamed = replay(spark, "parity_counter",
+        wavesOf(eventsIn(spark, dir).toSeq, nBatches))(
+        StatefulOps.counterIncreaseStream(_, idleHours = 24 * 365).toDF())
       .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("hr"))
       .agg(sum(col("increase_cents")).as("increase_cents"))
       .select(col("user_id"), col("hr"), col("increase_cents"))
     val batch = graft.analytics.TimeSeries.counterIncrease(
         graft.Tables.events(spark, dir))
       .select(col("user_id"), col("hr"), col("increase_cents"))
-
-    val nBatch = batch.count()
-    val nStream = streamed.count()
-    val onlyBatch = batch.exceptAll(streamed).count()
-    val onlyStream = streamed.exceptAll(batch).count()
-    spark.createDataFrame(Seq(
-      (nBatch, nStream, onlyBatch, onlyStream,
-        nBatch == nStream && onlyBatch == 0L && onlyStream == 0L)))
-      .toDF("n_batch", "n_stream", "n_only_batch", "n_only_stream", "parity_ok")
+    setParity(spark, batch, streamed)
   }
 
   /** The largest fixture the minhash parity harnesses will replay: they
@@ -272,6 +244,19 @@ object ParityCheck {
     docs.sortBy(_.doc_id)
   }
 
+  /** Candidate pairs (id_a < id_b, distinct) of a band-signature frame's
+    * self-join on (band, bh). */
+  private def bandCandidates(banded: DataFrame): DataFrame =
+    banded.select(col("band"), col("bh"), col("doc_id").as("id_a"))
+      .join(banded.select(col("band"), col("bh"), col("doc_id").as("id_b")),
+        Seq("band", "bh"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b")).distinct()
+
+  /** Pairs whose ids (event minutes) lie within `horizonMs`. */
+  private def withinHorizon(pairs: DataFrame, horizonMs: Long): DataFrame =
+    pairs.filter(abs(col("id_a") - col("id_b")) * 60000L <= horizonMs)
+
   /** A fresh state root for one gate run — `target/<kind>/<fixture
     * tag>`, emptied first (a gate, not a standing pipeline). */
   private def freshRoot(spark: SparkSession, kind: String,
@@ -290,10 +275,9 @@ object ParityCheck {
     * `start` builds over one MemoryStream, STOP after the second wave (a
     * mid-run crash, simulated) and RESTART from the same checkpoint for
     * the rest. */
-  private def runWithRestart[A: org.apache.spark.sql.Encoder](
+  private def runWithRestart[A: Encoder](
       spark: SparkSession, waves: Seq[Seq[A]])(
-      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery)
-      : Unit = {
+      start: DataFrame => StreamingQuery): Unit = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
     var q = start(mem.toDF())
@@ -305,21 +289,116 @@ object ParityCheck {
     } finally q.stop()
   }
 
+  /** A runnable gate's state root: a [[freshRoot]] of `kind`, `init` on
+    * `<root>/state`, then `drive` over the root. */
+  private def buildGate(spark: SparkSession, dir: String, kind: String,
+      init: String => Unit)(drive: String => Unit): String = {
+    val root = freshRoot(spark, kind, dir)
+    init(s"$root/state")
+    drive(root)
+    root
+  }
+
+  /** Drive a gate's `waves` through the tier query `start` builds over
+    * (input, state root, checkpoint), stopped and restarted after the
+    * second wave ([[runWithRestart]]). */
+  private def restarted[A: Encoder](spark: SparkSession, waves: Seq[Seq[A]])(
+      start: (DataFrame, String, String) => StreamingQuery): String => Unit =
+    root => runWithRestart(spark, waves)(
+      start(_, s"$root/state", s"$root/ckpt"))
+
+  /** Drive a gate's `batches` through the tier's `processBatch` (batch
+    * ids 0, 1, …), then run `repair` on the state and persist its
+    * one-row report to `<root>/report` — the builder runs once per JVM
+    * and the repair mutates the root, so the gate reads the FIRST pass's
+    * counts (a second pass is a no-op by the idempotence contract). */
+  private def repaired(batches: Seq[DataFrame])(
+      process: (DataFrame, Long, String) => Unit)(
+      repair: String => DataFrame): String => Unit = root => {
+    batches.zipWithIndex.foreach { case (b, i) =>
+      process(b, i.toLong, s"$root/state")
+    }
+    repair(s"$root/state").write.mode("overwrite").parquet(s"$root/report")
+  }
+
+  /** One surface's comparison: rows only in the served state, rows only
+    * in the twin, and the served row count. */
+  private final case class Diff(onlyLive: Long, onlyTwin: Long, n: Long) {
+    def agree: Boolean = onlyLive == 0L && onlyTwin == 0L
+  }
+
+  /** A runnable gate's served state against its batch twin: kept state
+    * over the arrival slice, arrival-slice pairs, labels, and the served
+    * cluster count. */
+  private final case class Served(kept: Diff, pairs: Diff, labels: Diff,
+      nClusters: Long) {
+    def agree: Boolean = kept.agree && pairs.agree && labels.agree
+  }
+
+  /** Compare the served state of `tier` at `<root>/state` with its batch
+    * twin through [[diffCounts]]: the kept state with id ≥ `splitId` in
+    * the columns of `twinKept` (not compared when None), the (id_a, id_b)
+    * pairs matching `pairSlice`, and the latest labels; plus the served
+    * cluster count. Frees every snapshot it takes and the twin's frames. */
+  private def compareServed(spark: SparkSession, tier: IndexTier,
+      root: String, splitId: Long, pairSlice: Column,
+      twinKept: Option[DataFrame], twinPairs: DataFrame,
+      twinLabels: DataFrame): Served = {
+    val state = s"$root/state"
+    def diff(live: DataFrame, twin: DataFrame): Diff = {
+      val (onlyLive, onlyTwin, n, _) = diffCounts(live, twin)
+      Diff(onlyLive, onlyTwin, n)
+    }
+    val kept = twinKept.map(t => tier.keptState(spark, state)
+      .filter(col(tier.idCol) >= splitId)
+      .select(t.columns.toSeq.map(col): _*).localCheckpoint(true))
+    // the pair state also carries the standing corpus's batch=-1 table
+    // (retire's raw material); the live-pair surface is the arrival slice
+    val pairs = tier.livePairs(spark, state).filter(pairSlice)
+      .select(col("id_a"), col("id_b")).localCheckpoint(true)
+    val labels = tier.labels(spark, state).localCheckpoint(true)
+    val served = Served(
+      kept.zip(twinKept).map { case (l, t) => diff(l, t) }
+        .getOrElse(Diff(0L, 0L, 0L)),
+      diff(pairs, twinPairs), diff(labels, twinLabels),
+      labels.select(col("cluster_id")).distinct().count())
+    (kept.toSeq ++ twinKept ++ Seq(pairs, labels, twinPairs, twinLabels))
+      .foreach(graft.Snap.free(_))
+    served
+  }
+
+  /** A decontamination gate's row: post-repair pair/label state vs the
+    * twin, the persisted report's `n_dropped` and `hotCol`, and a verdict
+    * that also requires real repair work (dropped pairs, hot keys) and
+    * surviving pairs. */
+  private def repairVerdict(spark: SparkSession, root: String, s: Served,
+      hotCol: String): DataFrame = {
+    val report = spark.read.parquet(s"$root/report").head()
+    val hot = report.getAs[Long](hotCol)
+    val nDropped = report.getAs[Long]("n_dropped")
+    oneRow(spark, "n_pairs_after" -> s.pairs.n, "n_dropped" -> nDropped,
+      hotCol -> hot, "n_clusters" -> s.nClusters,
+      "n_only_live" -> (s.pairs.onlyLive + s.labels.onlyLive),
+      "n_only_batch" -> (s.pairs.onlyTwin + s.labels.onlyTwin),
+      "parity_ok" -> (s.agree && nDropped > 0L && hot > 0L &&
+        s.pairs.n > 0L))
+  }
+
   /** A text gate's duplicate-flood fixture: the documents above the 3/5
     * split arrive at one event per id-minute, and every `mod`-th arrival
     * re-sends the corpus-minimum document's text byte for byte. Returns
     * (split id, arrivals in id order, the rewritten documents table). */
   private def dupFloodDocs(spark: SparkSession, dir: String, mod: Long,
       harness: String): (Long, Array[DocumentStream.DocTsIn], DataFrame) = {
-    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
     val all = collectParityDocs(spark, dir, harness)
     require(all.nonEmpty, s"no documents in $dir")
     val splitId = (all.iterator.map(_.doc_id).max + 1L) * 3L / 5L
     val dupText = all.minBy(_.doc_id).text
     val arrDocs = all.filter(_.doc_id >= splitId).map(d =>
-      DocumentStream.DocTsIn(d.doc_id, t0Ms + d.doc_id * 60000L,
+      DocumentStream.DocTsIn(d.doc_id, T0Ms + d.doc_id * 60000L,
         if (d.doc_id % mod == 0) dupText else d.text))
-    require(arrDocs.nonEmpty, "fixture too small to split")
+    require(arrDocs.nonEmpty && arrDocs.length < all.length,
+      "fixture too small to split into history + arrivals")
     val documents = graft.Tables.documents(spark, dir)
       .withColumn("text",
         when(col("doc_id") >= splitId && col("doc_id") % mod === 0,
@@ -357,52 +436,25 @@ object ParityCheck {
   def minhashParity(spark: SparkSession, dir: String,
       nBatches: Int = 4): DataFrame = {
     import spark.implicits._
-
     val docs = collectParityDocs(spark, dir, "minhashParity")
     require(docs.nonEmpty, s"no documents in $dir")
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StatefulOps.DocIn]
-    val tbl = "parity_minhash"
-    try spark.catalog.dropTempView(tbl) catch { case _: Exception => () }
-    val banded = graft.ops.Dedup.minHashBanded(mem.toDF())
-      .as[StatefulOps.BandIn]
-    val q = StatefulOps.lshCandidatesStream(banded)
-      .writeStream.format("memory").queryName(tbl).outputMode("append").start()
-    try {
-      val batchSize = math.max(1, docs.length / nBatches)
-      docs.grouped(batchSize).foreach { b =>
-        mem.addData(b.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
+    val emitted = replay(spark, "parity_minhash",
+        wavesOf(docs.toSeq, nBatches))(ds => StatefulOps.lshCandidatesStream(
+        graft.ops.Dedup.minHashBanded(ds.toDF()).as[StatefulOps.BandIn]).toDF())
 
     val documents = graft.Tables.documents(spark, dir)
     // a pair may emerge from several band buckets → distinct, like batch
-    val streamCand = spark.table(tbl)
+    val streamCand = emitted
       .select(col("id_a"), col("id_b")).distinct().localCheckpoint(true)
-    val bandedBatch = graft.ops.Dedup.minHashBanded(documents)
-    val batchCand = bandedBatch
-      .select(col("band"), col("bh"), col("doc_id").as("id_a"))
-      .join(bandedBatch.select(col("band"), col("bh"), col("doc_id").as("id_b")),
-        Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct().localCheckpoint(true)
-    val candAgree = batchCand.exceptAll(streamCand).count() == 0L &&
-      streamCand.exceptAll(batchCand).count() == 0L
+    val batchCand = bandCandidates(graft.ops.Dedup.minHashBanded(documents))
+      .localCheckpoint(true)
+    val (cOnlyB, cOnlyS, _, _) = diffCounts(batchCand, streamCand)
 
     val streamed = graft.ops.Dedup.jaccardVerify(streamCand, documents)
       .select(col("id_a"), col("id_b")).localCheckpoint(true)
     val batch = graft.ops.Dedup.minHashPairs(documents)
       .select(col("id_a"), col("id_b")).localCheckpoint(true)
-
-    val nBatch = batch.count()
-    val nStream = streamed.count()
-    val onlyBatch = batch.exceptAll(streamed).count()
-    val onlyStream = streamed.exceptAll(batch).count()
-    spark.createDataFrame(Seq(
-      (nBatch, nStream, onlyBatch, onlyStream,
-        candAgree && nBatch == nStream && onlyBatch == 0L && onlyStream == 0L)))
-      .toDF("n_batch", "n_stream", "n_only_batch", "n_only_stream", "parity_ok")
+    setParity(spark, batch, streamed, extraOk = cOnlyB == 0L && cOnlyS == 0L)
   }
 
   /** Streaming↔batch parity for the BOUNDED-HORIZON MinHash-LSH tier
@@ -443,6 +495,17 @@ object ParityCheck {
         (d.doc_id / 8, graft.functions.SimHash64.mix64(d.doc_id))),
       requireLate = true)
 
+  /** The documents' MinHash band rows with each doc at T0 + doc_id
+    * minutes — the TTL stream's input shape. */
+  private def bandedAtT0(spark: SparkSession,
+      docs: DataFrame): Dataset[StatefulOps.BandTsIn] = {
+    import spark.implicits._
+    graft.ops.Dedup.minHashBanded(docs)
+      .withColumn("ts", timestamp_millis(lit(T0Ms) + col("doc_id") * 60000L))
+      .select(col("doc_id"), col("ts"), col("band"), col("bh"))
+      .as[StatefulOps.BandTsIn]
+  }
+
   /** The live-pipeline BATCH TWIN — the all-at-once truth every composed
     * text gate pins against, defined ONCE so the hand-driven gate
     * ([[livePipelineParity]]), the runnable-pipeline gate
@@ -465,9 +528,8 @@ object ParityCheck {
       .select(col("id_a"), col("id_b")).localCheckpoint(true)
     val histPairs = allPairs
       .filter(col("id_a") < splitId && col("id_b") < splitId)
-    val livePairsB = allPairs
-      .filter(col("id_a") >= splitId && col("id_b") >= splitId)
-      .filter(abs(col("id_a") - col("id_b")) * 60000L <= horizonMs)
+    val livePairsB = withinHorizon(allPairs
+        .filter(col("id_a") >= splitId && col("id_b") >= splitId), horizonMs)
       .join(keptBatch.select(col("doc_id").as("id_a")), "id_a")
       .join(keptBatch.select(col("doc_id").as("id_b")), "id_b")
       .select(col("id_a"), col("id_b")).localCheckpoint(true)
@@ -518,24 +580,12 @@ object ParityCheck {
       horizonMinutes: Int = 60, nBatches: Int = 4): DataFrame = {
     import spark.implicits._
     val horizonMs = horizonMinutes * 60000L
-    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-
-    val all = collectParityDocs(spark, dir, "livePipelineParity")
-    require(all.nonEmpty, s"no documents in $dir")
-    val splitId = (all.iterator.map(_.doc_id).max + 1L) * 3L / 5L
-    val dupText = all.minBy(_.doc_id).text
-    val (histDocs, arrDocsRaw) = all.partition(_.doc_id < splitId)
-    require(histDocs.nonEmpty && arrDocsRaw.nonEmpty,
-      "fixture too small to split into history + arrivals")
-    val arrDocs = arrDocsRaw.map(d =>
-      if (d.doc_id % 11 == 0) d.copy(text = dupText) else d)
 
     // the corpus AS THE PIPELINE SEES IT: history untouched, duplicate
     // arrivals substituted — every batch-twin frame reads this
-    val documents = graft.Tables.documents(spark, dir)
-      .withColumn("text",
-        when(col("doc_id") >= splitId && col("doc_id") % 11 === 0,
-          lit(dupText)).otherwise(col("text")))
+    val (splitId, arrTs, documents) =
+      dupFloodDocs(spark, dir, 11L, "livePipelineParity")
+    val arrDocs = arrTs.map(d => StatefulOps.DocIn(d.doc_id, d.text))
     val history = documents.filter(col("doc_id") < splitId)
 
     // pre-existing labeling over history — what a previous corpus
@@ -543,43 +593,31 @@ object ParityCheck {
     val baseLabels = graft.ops.Dedup.nearDupClusters(history,
       graft.ops.Dedup.minHashPairs(history)).localCheckpoint(true)
 
-    // ── tier 1 (exact) + tier 2 (stream LSH) over the SAME waves ──
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StatefulOps.DocIn]
-    val tbl = "parity_live_pipeline"
-    try spark.catalog.dropTempView(tbl) catch { case _: Exception => () }
-    val banded = graft.ops.Dedup.minHashBanded(mem.toDF())
-      .withColumn("ts", timestamp_millis(lit(t0Ms) + col("doc_id") * 60000L))
-      .select(col("doc_id"), col("ts"), col("band"), col("bh"))
-      .as[StatefulOps.BandTsIn]
-    val q = StatefulOps.lshCandidatesStreamTtl(banded, horizonMs)
-      .writeStream.format("memory").queryName(tbl).outputMode("append").start()
-
+    // ── tier 1 (exact) + tier 2 (stream LSH) over the SAME waves: the
+    // near-dup tier sees the raw wave, then the exact tier screens it
+    // against history (bloom) and within the wave ──
     var histTexts = history.select(col("doc_id"), col("text"))
     val keptIds = Seq.newBuilder[Long]
-    try {
-      val batchSize = math.max(1, arrDocs.length / nBatches)
-      arrDocs.grouped(batchSize).foreach { wave =>
-        // near-dup tier sees the raw wave
-        mem.addData(wave.toSeq); q.processAllAvailable()
-        // exact tier: bloom-screened against history, then within-wave
-        val waveDf = wave.toSeq.toDF("doc_id", "text")
-        val surv = graft.ops.Dedup.historyDedupBloom(spark, waveDf, histTexts)
-          .groupBy(col("text_hash")).agg(min(col("doc_id")).as("doc_id"))
-          .select(col("doc_id"))
-        val survIds = surv.collect().map(_.getLong(0)) // wave-bounded
-        keptIds ++= survIds
-        val prevHist = histTexts
-        histTexts = histTexts.unionByName(
-          waveDf.filter(col("doc_id").isin(survIds: _*))).localCheckpoint(true)
-        graft.Snap.free(prevHist) // superseded snapshot
-      }
-    } finally q.stop()
+    val emitted = replay(spark, "parity_live_pipeline",
+        wavesOf(arrDocs.toSeq, nBatches), after = (wave: Seq[StatefulOps.DocIn]) => {
+          val waveDf = wave.toDF("doc_id", "text")
+          val survIds = graft.ops.Dedup
+            .historyDedupBloom(spark, waveDf, histTexts)
+            .groupBy(col("text_hash")).agg(min(col("doc_id")).as("doc_id"))
+            .select(col("doc_id"))
+            .collect().map(_.getLong(0)) // wave-bounded
+          keptIds ++= survIds
+          val prevHist = histTexts
+          histTexts = histTexts.unionByName(
+            waveDf.filter(col("doc_id").isin(survIds: _*))).localCheckpoint(true)
+          graft.Snap.free(prevHist) // superseded snapshot
+        })(ds => StatefulOps.lshCandidatesStreamTtl(
+          bandedAtT0(spark, ds.toDF()), horizonMs).toDF())
 
     val keptArr = keptIds.result().toDF("doc_id").localCheckpoint(true)
 
     // verified live pairs, restricted to kept endpoints
-    val streamCand = spark.table(tbl)
+    val streamCand = emitted
       .select(col("id_a"), col("id_b")).distinct().localCheckpoint(true)
     val livePairs = graft.ops.Dedup.jaccardVerify(streamCand, documents)
       .join(keptArr.select(col("doc_id").as("id_a")), "id_a")
@@ -591,37 +629,26 @@ object ParityCheck {
       livePairs) // returned checkpointed (mergeClusterDelta contract)
 
     // ── batch twin, computed all-at-once (the SHARED definition) ──
-    val arrivals = documents.filter(col("doc_id") >= splitId)
     val (keptBatch, twinPairs, batchLabels) =
       livePipelineBatchTwin(documents, history, splitId, horizonMs)
 
     // candidate-set parity: streamed candidates vs the horizon-restricted
     // band join over arrivals (pre-verify, pre-keep — tier 2's raw truth)
-    val bandedBatch = graft.ops.Dedup.minHashBanded(arrivals)
-    val batchCand = bandedBatch
-      .select(col("band"), col("bh"), col("doc_id").as("id_a"))
-      .join(bandedBatch.select(col("band"), col("bh"), col("doc_id").as("id_b")),
-        Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(abs(col("id_a") - col("id_b")) * 60000L <= horizonMs)
-      .select(col("id_a"), col("id_b")).distinct().localCheckpoint(true)
+    val batchCand = withinHorizon(bandCandidates(graft.ops.Dedup.minHashBanded(
+        documents.filter(col("doc_id") >= splitId))), horizonMs)
+      .localCheckpoint(true)
     val (cOnlyB, cOnlyS, _, _) = diffCounts(batchCand, streamCand)
-    val candAgree = cOnlyB == 0L && cOnlyS == 0L
-
     val (kOnlyL, kOnlyB, nKeptArr, _) = diffCounts(keptArr, keptBatch)
-    val survAgree = kOnlyL == 0L && kOnlyB == 0L
-
     val (onlyLive, onlyBatch, nKept, _) =
       diffCounts(liveLabels, batchLabels)
     val nDropped = arrDocs.length.toLong - nKeptArr
-    val nPairsLive = livePairs.count()
-    val nClusters = liveLabels.select(col("cluster_id")).distinct().count()
-    val result = spark.createDataFrame(Seq(
-      (nKept, nDropped, nPairsLive, nClusters, onlyLive, onlyBatch,
-        candAgree && survAgree && onlyLive == 0L && onlyBatch == 0L &&
-          nDropped > 0L))) // the exact tier must actually have fired
-      .toDF("n_kept", "n_dropped", "n_pairs_live", "n_clusters",
-        "n_only_live", "n_only_batch", "parity_ok")
+    val result = oneRow(spark, "n_kept" -> nKept, "n_dropped" -> nDropped,
+      "n_pairs_live" -> livePairs.count(),
+      "n_clusters" -> liveLabels.select(col("cluster_id")).distinct().count(),
+      "n_only_live" -> onlyLive, "n_only_batch" -> onlyBatch,
+      "parity_ok" -> (cOnlyB == 0L && cOnlyS == 0L && kOnlyL == 0L &&
+        kOnlyB == 0L && onlyLive == 0L && onlyBatch == 0L &&
+        nDropped > 0L)) // the exact tier must actually have fired
     Seq(histTexts, keptArr, streamCand, livePairs, liveLabels, batchCand,
       keptBatch, twinPairs, batchLabels, baseLabels)
       .foreach(graft.Snap.free(_))
@@ -655,44 +682,22 @@ object ParityCheck {
     val (splitId, arrDocs, documents) =
       dupFloodDocs(spark, dir, 11L, "restartPipelineParity")
     val history = documents.filter(col("doc_id") < splitId)
+    val root = buildGate(spark, dir, "docstream_gate",
+        initDocRoot(spark, _, history))(
+      restarted(spark, wavesOf(arrDocs.toSeq, nBatches))(
+        DocumentStream.start(_, _, _, horizonMs, consolidateEvery = 2)))
 
-    val root = freshRoot(spark, "docstream_gate", dir)
-    initDocRoot(spark, s"$root/state", history)
-    runWithRestart(spark, wavesOf(arrDocs.toSeq, nBatches))(
-      DocumentStream.start(_, s"$root/state", s"$root/ckpt", horizonMs,
-        consolidateEvery = 2))
-
-    val keptArr = DocumentStream.keptIds(spark, s"$root/state")
-      .filter(col("doc_id") >= splitId).localCheckpoint(true)
-    // the pairs STATE also carries the standing corpus's batch=-1 table
-    // (retire's raw material); the live-pair surface is the arrival slice
-    val livePairs = DocumentStream.livePairs(spark, s"$root/state")
-      .filter(col("id_a") >= splitId)
-      .localCheckpoint(true)
-    val liveLabels = DocumentStream.labels(spark, s"$root/state")
-      .localCheckpoint(true)
-
-    // ── batch twin: the SHARED definition (cannot drift from the
-    // hand-driven gate's) ──
+    // batch twin: the SHARED definition (cannot drift from the
+    // hand-driven gate's)
     val (keptBatch, livePairsB, batchLabels) =
       livePipelineBatchTwin(documents, history, splitId, horizonMs)
-
-    val (kOnlyL, kOnlyB, nKeptArr, _) = diffCounts(keptArr, keptBatch)
-    val (pOnlyL, pOnlyB, nPairsLive, _) = diffCounts(livePairs, livePairsB)
-    val (onlyLive, onlyBatch, nKept, _) = diffCounts(liveLabels, batchLabels)
-    val survAgree = kOnlyL == 0L && kOnlyB == 0L
-    val pairsAgree = pOnlyL == 0L && pOnlyB == 0L
-    val nDropped = arrDocs.length.toLong - nKeptArr
-    val nClusters = liveLabels.select(col("cluster_id")).distinct().count()
-    val result = spark.createDataFrame(Seq(
-      (nKept, nDropped, nPairsLive, nClusters, onlyLive, onlyBatch,
-        survAgree && pairsAgree && onlyLive == 0L && onlyBatch == 0L &&
-          nDropped > 0L)))
-      .toDF("n_kept", "n_dropped", "n_pairs_live", "n_clusters",
-        "n_only_live", "n_only_batch", "parity_ok")
-    Seq(keptArr, livePairs, liveLabels, keptBatch, livePairsB, batchLabels)
-      .foreach(graft.Snap.free(_))
-    result
+    val s = compareServed(spark, DocumentStream, root, splitId,
+      col("id_a") >= splitId, Some(keptBatch), livePairsB, batchLabels)
+    val nDropped = arrDocs.length.toLong - s.kept.n
+    oneRow(spark, "n_kept" -> s.labels.n, "n_dropped" -> nDropped,
+      "n_pairs_live" -> s.pairs.n, "n_clusters" -> s.nClusters,
+      "n_only_live" -> s.labels.onlyLive, "n_only_batch" -> s.labels.onlyTwin,
+      "parity_ok" -> (s.agree && nDropped > 0L))
   }
 
   /** The CAPPED gate's scenario constants, shared with its DuckDB
@@ -734,13 +739,9 @@ object ParityCheck {
     val hot = bandedArr.groupBy(col("band"), col("bh"))
       .agg(count(lit(1)).as("occ")).filter(col("occ") > cap)
       .select(col("band"), col("bh"))
-    val cool = bandedArr.join(broadcast(hot), Seq("band", "bh"), "left_anti")
-    val cand = cool.select(col("band"), col("bh"), col("doc_id").as("id_a"))
-      .join(cool.select(col("band"), col("bh"), col("doc_id").as("id_b")),
-        Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-      .filter(abs(col("id_a") - col("id_b")) * 60000L <= horizonMs)
+    val cand = withinHorizon(bandCandidates(
+        bandedArr.join(broadcast(hot), Seq("band", "bh"), "left_anti")),
+        horizonMs)
       .join(keptBatch.select(col("doc_id").as("id_a")), "id_a")
       .join(keptBatch.select(col("doc_id").as("id_b")), "id_b")
       .select(col("id_a"), col("id_b"))
@@ -766,17 +767,13 @@ object ParityCheck {
   def buildCappedPipeline(spark: SparkSession, dir: String,
       horizonMinutes: Int = 60, nBatches: Int = 4): String = {
     import spark.implicits._
-    val horizonMs = horizonMinutes * 60000L
     val (splitId, arrDocs, documents) =
       dupFloodDocs(spark, dir, CappedFloodMod, "cappedRestartParity")
-    val history = documents.filter(col("doc_id") < splitId)
-
-    val root = freshRoot(spark, "docstream_capped", dir)
-    initDocRoot(spark, s"$root/state", history)
-    runWithRestart(spark, wavesOf(arrDocs.toSeq, nBatches))(
-      DocumentStream.start(_, s"$root/state", s"$root/ckpt", horizonMs,
-        consolidateEvery = 2, hotBucketCap = CappedHotBucketCap))
-    root
+    buildGate(spark, dir, "docstream_capped", initDocRoot(spark, _,
+        documents.filter(col("doc_id") < splitId)))(
+      restarted(spark, wavesOf(arrDocs.toSeq, nBatches))(
+        DocumentStream.start(_, _, _, horizonMinutes * 60000L,
+          consolidateEvery = 2, hotBucketCap = CappedHotBucketCap)))
   }
 
   /** The CAPPED runnable pipeline gated end to end over the state
@@ -789,47 +786,23 @@ object ParityCheck {
     * replica with the same global occupancy cut + recursive closure). */
   def cappedRestartParity(spark: SparkSession, dir: String, root: String,
       horizonMinutes: Int = 60, nBatches: Int = 4): DataFrame = {
-    val horizonMs = horizonMinutes * 60000L
     val (splitId, arrDocs, documents) =
       dupFloodDocs(spark, dir, CappedFloodMod, "cappedRestartParity")
-    val nArr = arrDocs.length
     val nWaves = wavesOf(arrDocs.toSeq, nBatches).length
-    val history = documents.filter(col("doc_id") < splitId)
-
-    val keptArr = DocumentStream.keptIds(spark, s"$root/state")
-      .filter(col("doc_id") >= splitId).localCheckpoint(true)
-    val livePairs = DocumentStream.livePairs(spark, s"$root/state")
-      .filter(col("id_a") >= splitId)
-      .localCheckpoint(true)
-    val liveLabels = DocumentStream.labels(spark, s"$root/state")
-      .localCheckpoint(true)
-    val gauges = DocumentStream.gaugeRows(spark, s"$root/state")
-      .localCheckpoint(true)
-
-    val (keptBatch, livePairsB, batchLabels) =
-      cappedPipelineBatchTwin(documents, history, splitId, horizonMs,
-        CappedHotBucketCap)
-
-    // single-pass set comparisons: one aggregated job per state surface
-    // instead of two exceptAll traversals + separate counts
-    val (kOnlyL, kOnlyB, nKeptArr, _) = diffCounts(keptArr, keptBatch)
-    val (pOnlyL, pOnlyB, nPairsLive, _) = diffCounts(livePairs, livePairsB)
-    val (onlyLive, onlyBatch, nKept, _) = diffCounts(liveLabels, batchLabels)
-    val survAgree = kOnlyL == 0L && kOnlyB == 0L
-    val pairsAgree = pOnlyL == 0L && pOnlyB == 0L
-    val nDropped = nArr.toLong - nKeptArr
-    val nClusters = liveLabels.select(col("cluster_id")).distinct().count()
-    val nHotBatches = gauges.filter(col("hot_buckets") > 0).count()
-    val result = spark.createDataFrame(Seq(
-      (nKept, nDropped, nPairsLive, nClusters, nHotBatches, onlyLive,
-        onlyBatch,
-        survAgree && pairsAgree && onlyLive == 0L && onlyBatch == 0L &&
-          nDropped > 0L && nHotBatches == nWaves.toLong)))
-      .toDF("n_kept", "n_dropped", "n_pairs_live", "n_clusters",
-        "n_hot_batches", "n_only_live", "n_only_batch", "parity_ok")
-    Seq(keptArr, livePairs, liveLabels, gauges, keptBatch, livePairsB,
-      batchLabels).foreach(graft.Snap.free(_))
-    result
+    val (keptBatch, livePairsB, batchLabels) = cappedPipelineBatchTwin(
+      documents, documents.filter(col("doc_id") < splitId), splitId,
+      horizonMinutes * 60000L, CappedHotBucketCap)
+    val s = compareServed(spark, DocumentStream, root, splitId,
+      col("id_a") >= splitId, Some(keptBatch), livePairsB, batchLabels)
+    val nDropped = arrDocs.length.toLong - s.kept.n
+    val nHotBatches = DocumentStream.gaugeRows(spark, s"$root/state")
+      .filter(col("hot_buckets") > 0).count()
+    oneRow(spark, "n_kept" -> s.labels.n, "n_dropped" -> nDropped,
+      "n_pairs_live" -> s.pairs.n, "n_clusters" -> s.nClusters,
+      "n_hot_batches" -> nHotBatches, "n_only_live" -> s.labels.onlyLive,
+      "n_only_batch" -> s.labels.onlyTwin,
+      "parity_ok" -> (s.agree && nDropped > 0L &&
+        nHotBatches == nWaves.toLong))
   }
 
   /** The VECTOR decontamination fixture: every [[EmbDecontamFloodMod]]-th
@@ -887,21 +860,16 @@ object ParityCheck {
   /** Build the VECTOR decontamination gate's state: the sign-flip flood
     * run UNCAPPED through one [[EmbeddingStream.processBatch]] over the
     * corpus-initialized root (junk pairs persisted, flood mega-cluster),
-    * then [[EmbeddingStream.decontaminate]] at the derived corpus cap;
-    * report persisted to `$root/report`. */
+    * then [[EmbeddingStream.decontaminate]] at the derived corpus cap. */
   def buildDecontamEmbeddingPipeline(spark: SparkSession,
       dir: String): String = {
     val (base, arrivals, h) = embDecontamArrivals(spark, dir)
-    val root = freshRoot(spark, "embstream_decontam", dir)
-    EmbeddingStream.initFromCorpus(spark, s"$root/state", base,
-      refDelta = arrivals)
-    EmbeddingStream.processBatch(
-      arrivals.select(col("vec_id"), col("embedding")), 0L,
-      s"$root/state") // UNCAPPED — the incident
-    val report = EmbeddingStream.decontaminate(spark, s"$root/state",
-      embDecontamCap(spark, s"$root/state", h))
-    report.write.mode("overwrite").parquet(s"$root/report")
-    root
+    buildGate(spark, dir, "embstream_decontam",
+        EmbeddingStream.initFromCorpus(spark, _, base, refDelta = arrivals))(
+      repaired(Seq(arrivals.select(col("vec_id"), col("embedding"))))(
+        EmbeddingStream.processBatch(_, _, _))( // UNCAPPED — the incident
+        state => EmbeddingStream.decontaminate(spark, state,
+          embDecontamCap(spark, state, h))))
   }
 
   /** The VECTOR decontamination gate: post-repair pair/label state must
@@ -912,11 +880,10 @@ object ParityCheck {
     * same sign-flip rewrite. */
   def embDecontamParity(spark: SparkSession, dir: String,
       root: String): DataFrame = {
-    val emb = graft.Tables.embeddings(spark, dir)
-    val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
-    val h = (maxId + 1L) * 3L / 5L
+    val maxId = graft.Tables.embeddings(spark, dir)
+      .agg(max(col("vec_id"))).head().getLong(0)
     val stateRoot = s"$root/state"
-    val cap = embDecontamCap(spark, stateRoot, h)
+    val cap = embDecontamCap(spark, stateRoot, (maxId + 1L) * 3L / 5L)
     val assigned = EmbeddingStream.assignedState(spark, stateRoot)
       .localCheckpoint(true)
     val hot = assigned.groupBy(col("cluster"))
@@ -929,26 +896,10 @@ object ParityCheck {
     val twinLabels = graft.ops.Dedup.nearDupClusters(
       assigned.select(col("vec_id").as("doc_id")), twinPairs)
       .localCheckpoint(true)
-    val livePairs = EmbeddingStream.livePairs(spark, stateRoot)
-      .select(col("id_a"), col("id_b")).localCheckpoint(true)
-    val liveLabels = EmbeddingStream.labels(spark, stateRoot)
-      .localCheckpoint(true)
-    val report = spark.read.parquet(s"$root/report").head()
-    val hotClusters = report.getAs[Long]("hot_clusters")
-    val nDropped = report.getAs[Long]("n_dropped")
-    val (pOnlyL, pOnlyB, nPairsAfter, _) = diffCounts(livePairs, twinPairs)
-    val (lOnlyL, lOnlyB, _, _) = diffCounts(liveLabels, twinLabels)
-    val nClusters = liveLabels.select(col("cluster_id")).distinct().count()
-    val result = spark.createDataFrame(Seq(
-      (nPairsAfter, nDropped, hotClusters, nClusters,
-        pOnlyL + lOnlyL, pOnlyB + lOnlyB,
-        pOnlyL == 0L && pOnlyB == 0L && lOnlyL == 0L && lOnlyB == 0L &&
-          nDropped > 0L && hotClusters > 0L && nPairsAfter > 0L)))
-      .toDF("n_pairs_after", "n_dropped", "hot_clusters", "n_clusters",
-        "n_only_live", "n_only_batch", "parity_ok")
-    Seq(assigned, twinPairs, twinLabels, livePairs, liveLabels)
-      .foreach(graft.Snap.free(_))
-    result
+    val s = compareServed(spark, EmbeddingStream, root, 0L, lit(true), None,
+      twinPairs, twinLabels)
+    graft.Snap.free(assigned)
+    repairVerdict(spark, root, s, "hot_clusters")
   }
 
   /** The TEXT decontamination fixture's flood rewrite: every
@@ -978,22 +929,42 @@ object ParityCheck {
   private[streaming] val DecontamOrganicBase =
     graft.OracleSql.DecontamOrganicBase
 
-  /** The planted pair's doc ids: first two non-flood arrivals. */
-  private def decontamOrganicIds(allIds: Seq[Long],
-      splitId: Long): (Long, Long) = {
-    val org = allIds.filter(id =>
+  /** The decontamination corpus: the near-dup template flood on every
+    * [[CappedFloodMod]]-th arrival plus the planted organic pair on the
+    * first two non-flood arrivals. Returns (split id, arrivals in id
+    * order at one event per id-minute, the rewritten documents table). */
+  private def decontamDocs(spark: SparkSession, dir: String)
+      : (Long, Array[DocumentStream.DocTsIn], DataFrame) = {
+    val all = collectParityDocs(spark, dir, "decontamParity")
+    require(all.nonEmpty, s"no documents in $dir")
+    val splitId = (all.iterator.map(_.doc_id).max + 1L) * 3L / 5L
+    val org = all.map(_.doc_id).filter(id =>
       id >= splitId && id % CappedFloodMod != 0).sorted
     require(org.length >= 2, "fixture too small for the organic pair")
-    (org(0), org(1))
+    val (o1, o2) = (org(0), org(1))
+    val arrDocs = all.filter(_.doc_id >= splitId).map { d =>
+      val text =
+        if (d.doc_id % CappedFloodMod == 0) decontamFloodText(d.doc_id)
+        else if (d.doc_id == o1) s"$DecontamOrganicBase version one"
+        else if (d.doc_id == o2) s"$DecontamOrganicBase version two"
+        else d.text
+      DocumentStream.DocTsIn(d.doc_id, T0Ms + d.doc_id * 60000L, text)
+    }
+    require(arrDocs.exists(_.doc_id % CappedFloodMod == 0),
+      "decontam scenario vacuous: no flood arrival")
+    val documents = graft.Tables.documents(spark, dir)
+      .withColumn("text",
+        when(col("doc_id") >= splitId &&
+            col("doc_id") % CappedFloodMod === 0,
+          concat(lit(s"${graft.OracleSql.CappedFloodTemplate} v"),
+            col("doc_id").cast("string")))
+        .when(col("doc_id") === o1,
+          lit(s"$DecontamOrganicBase version one"))
+        .when(col("doc_id") === o2,
+          lit(s"$DecontamOrganicBase version two"))
+        .otherwise(col("text")))
+    (splitId, arrDocs, documents)
   }
-
-  private def decontamText(docId: Long, orig: String, splitId: Long,
-      o1: Long, o2: Long): String =
-    if (docId % CappedFloodMod == 0 && docId >= splitId)
-      decontamFloodText(docId)
-    else if (docId == o1) s"$DecontamOrganicBase version one"
-    else if (docId == o2) s"$DecontamOrganicBase version two"
-    else orig
 
   /** The decontamination gate's corpus-level cap: scaled to the arrival
     * count so the flood family (every 3rd arrival — a third of the
@@ -1006,40 +977,24 @@ object ParityCheck {
   /** Build the TEXT decontamination gate's state: the near-dup template
     * flood run UNCAPPED through [[DocumentStream.processBatch]] (junk
     * pairs persisted, mega-cluster in the labels), then
-    * [[DocumentStream.decontaminate]] at [[decontamHotBucketCap]]; the
-    * repair report persists to `$root/report`. No consolidation: the
-    * band TTL fold would age early band rows out mid-run and make the
-    * standing occupancy a function of fold timing — raw directories
-    * keep the occupancy equal to the all-arrivals banding, which is
-    * what the closed-form oracle restates (the media builder covers
-    * the consolidated-unit rewrite path). */
+    * [[DocumentStream.decontaminate]] at [[decontamHotBucketCap]]. No
+    * consolidation: the band TTL fold would age early band rows out
+    * mid-run and make the standing occupancy a function of fold timing —
+    * raw directories keep the occupancy equal to the all-arrivals
+    * banding, which is what the closed-form oracle restates (the media
+    * builder covers the consolidated-unit rewrite path). */
   def buildDecontamPipeline(spark: SparkSession, dir: String,
       horizonMinutes: Int = 60, nBatches: Int = 4): String = {
     import spark.implicits._
     val horizonMs = horizonMinutes * 60000L
-    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val all = collectParityDocs(spark, dir, "decontamParity")
-    require(all.nonEmpty, s"no documents in $dir")
-    val splitId = (all.iterator.map(_.doc_id).max + 1L) * 3L / 5L
-    val (o1, o2) = decontamOrganicIds(all.map(_.doc_id), splitId)
-    val arrDocs = all.filter(_.doc_id >= splitId).map(d =>
-      DocumentStream.DocTsIn(d.doc_id, t0Ms + d.doc_id * 60000L,
-        decontamText(d.doc_id, d.text, splitId, o1, o2)))
-    require(arrDocs.exists(_.doc_id % CappedFloodMod == 0),
-      "decontam scenario vacuous: no flood arrival")
-    val history = graft.Tables.documents(spark, dir)
-      .filter(col("doc_id") < splitId)
-
-    val root = freshRoot(spark, "docstream_decontam", dir)
-    initDocRoot(spark, s"$root/state", history)
-    wavesOf(arrDocs.toSeq, nBatches).zipWithIndex.foreach { case (w, i) =>
-      DocumentStream.processBatch(w.toSeq.toDF(), i.toLong, s"$root/state",
-        horizonMs, hotBucketCap = 0) // UNCAPPED — the incident
-    }
-    val report = DocumentStream.decontaminate(spark, s"$root/state",
-      decontamHotBucketCap(arrDocs.length.toLong), horizonMs)
-    report.write.mode("overwrite").parquet(s"$root/report")
-    root
+    val (splitId, arrDocs, documents) = decontamDocs(spark, dir)
+    buildGate(spark, dir, "docstream_decontam", initDocRoot(spark, _,
+        documents.filter(col("doc_id") < splitId)))(
+      repaired(wavesOf(arrDocs.toSeq, nBatches).map(_.toDF()))(
+        DocumentStream.processBatch(_, _, _, horizonMs,
+          hotBucketCap = 0))( // UNCAPPED — the incident
+        DocumentStream.decontaminate(spark, _,
+          decontamHotBucketCap(arrDocs.length.toLong), horizonMs)))
   }
 
   /** The TEXT decontamination gate: post-repair pair/label state must
@@ -1051,50 +1006,22 @@ object ParityCheck {
     * DuckDB MinHash replica with the same suffix rewrite. */
   def docDecontamParity(spark: SparkSession, dir: String, root: String,
       horizonMinutes: Int = 60): DataFrame = {
-    val horizonMs = horizonMinutes * 60000L
-    val all = collectParityDocs(spark, dir, "decontamParity")
-    val splitId = (all.iterator.map(_.doc_id).max + 1L) * 3L / 5L
-    val nArr = all.count(_.doc_id >= splitId).toLong
-    val (o1, o2) = decontamOrganicIds(all.map(_.doc_id), splitId)
-    val documents = graft.Tables.documents(spark, dir)
-      .withColumn("text",
-        when(col("doc_id") >= splitId &&
-            col("doc_id") % CappedFloodMod === 0,
-          concat(lit(s"${graft.OracleSql.CappedFloodTemplate} v"),
-            col("doc_id").cast("string")))
-        .when(col("doc_id") === o1,
-          lit(s"$DecontamOrganicBase version one"))
-        .when(col("doc_id") === o2,
-          lit(s"$DecontamOrganicBase version two"))
-        .otherwise(col("text")))
-    val history = documents.filter(col("doc_id") < splitId)
-
-    val livePairs = DocumentStream.livePairs(spark, s"$root/state")
-      .filter(col("id_a") >= splitId)
-      .localCheckpoint(true)
-    val liveLabels = DocumentStream.labels(spark, s"$root/state")
-      .localCheckpoint(true)
-    val (keptBatch, livePairsB, batchLabels) =
-      cappedPipelineBatchTwin(documents, history, splitId, horizonMs,
-        decontamHotBucketCap(nArr))
-
-    val report = spark.read.parquet(s"$root/report").head()
-    val hotBuckets = report.getAs[Long]("hot_buckets")
-    val nDropped = report.getAs[Long]("n_dropped")
-    val (pOnlyL, pOnlyB, nPairsAfter, _) = diffCounts(livePairs, livePairsB)
-    val (lOnlyL, lOnlyB, _, _) = diffCounts(liveLabels, batchLabels)
-    val nClusters = liveLabels.select(col("cluster_id")).distinct().count()
-    val result = spark.createDataFrame(Seq(
-      (nPairsAfter, nDropped, hotBuckets, nClusters,
-        pOnlyL + lOnlyL, pOnlyB + lOnlyB,
-        pOnlyL == 0L && pOnlyB == 0L && lOnlyL == 0L && lOnlyB == 0L &&
-          nDropped > 0L && hotBuckets > 0L && nPairsAfter > 0L)))
-      .toDF("n_pairs_after", "n_dropped", "hot_buckets", "n_clusters",
-        "n_only_live", "n_only_batch", "parity_ok")
-    Seq(livePairs, liveLabels, keptBatch, livePairsB, batchLabels)
-      .foreach(graft.Snap.free(_))
-    result
+    val (splitId, arrDocs, documents) = decontamDocs(spark, dir)
+    val (keptBatch, livePairsB, batchLabels) = cappedPipelineBatchTwin(
+      documents, documents.filter(col("doc_id") < splitId), splitId,
+      horizonMinutes * 60000L, decontamHotBucketCap(arrDocs.length.toLong))
+    val s = compareServed(spark, DocumentStream, root, splitId,
+      col("id_a") >= splitId, None, livePairsB, batchLabels)
+    graft.Snap.free(keptBatch)
+    repairVerdict(spark, root, s, "hot_buckets")
   }
+
+  /** Decoded 128-bit pHash fingerprints (doc_id, sh0, sh1) of `media`. */
+  private def fingerprints(
+      media: Dataset[graft.ops.Multimodal.MediaRow]): DataFrame =
+    graft.ops.Multimodal.pHashes(media).filter(_.decoded).toDF()
+      .select(col("media_id").as("doc_id"),
+        col("ph0").as("sh0"), col("ph1").as("sh1"))
 
   /** The runnable FINGERPRINT (media) pipeline, gated end to end — the
     * third tier over the shared [[BatchState]]
@@ -1108,9 +1035,10 @@ object ParityCheck {
     * state must equal the all-at-once batch twin (fingerprints of every
     * decodable image doc, one banded self-join, one CC) — whose counts
     * the CLOSED-FORM texture oracle restates without decoding a pixel
-    * (same-class cliques at hamming 0, the q_phash_pairs truth). */
-  /** The media-gate ARRIVAL fixture: the image slice above the split,
-    * id-sorted, with every 13th arrival's payload truncated (the
+    * (same-class cliques at hamming 0, the q_phash_pairs truth).
+    *
+    * This is the gate's ARRIVAL fixture: the image slice above the
+    * split, id-sorted, with every 13th arrival's payload truncated (the
     * quarantine scenario). Shared by the builder and the parity row. */
   private def fpArrivalMedia(spark: SparkSession, dir: String,
       splitId: Long): Seq[graft.ops.Multimodal.MediaRow] = {
@@ -1128,16 +1056,9 @@ object ParityCheck {
   }
 
   private def fpBaseFps(spark: SparkSession, dir: String,
-      splitId: Long): DataFrame = {
-    import spark.implicits._
-    graft.ops.Multimodal.pHashes(
-        graft.ops.Multimodal.imagePngMedia(spark,
-          graft.Tables.documents(spark, dir)
-            .filter(col("doc_id") < splitId)))
-      .filter(_.decoded).toDF()
-      .select(col("media_id").as("doc_id"),
-        col("ph0").as("sh0"), col("ph1").as("sh1"))
-  }
+      splitId: Long): DataFrame =
+    fingerprints(graft.ops.Multimodal.imagePngMedia(spark,
+      graft.Tables.documents(spark, dir).filter(col("doc_id") < splitId)))
 
   /** Initialize a media gate's root: the base fingerprint index, its
     * pair table and their connected components as the standing state. */
@@ -1158,6 +1079,19 @@ object ParityCheck {
     (maxId + 1L) * 3L / 5L
   }
 
+  /** Build a media restart gate's state: `arrivals` in id-ordered waves
+    * through the real codec path under `hotBucketCap`, restart
+    * straddling a consolidation. */
+  private def buildFpGate(spark: SparkSession, dir: String, kind: String,
+      splitId: Long, arrivals: Seq[graft.ops.Multimodal.MediaRow],
+      nBatches: Int, hotBucketCap: Int): String = {
+    import spark.implicits._
+    buildGate(spark, dir, kind, initFpRoot(spark, dir, splitId, _))(
+      restarted(spark, wavesOf(arrivals, nBatches))(
+        FingerprintStream.start(_, _, _, maxHamming = 3,
+          consolidateEvery = 2, hotBucketCap = hotBucketCap)))
+  }
+
   /** Build the media pipeline's gate state (waves through the real codec
     * path, corrupt %13 arrivals, restart straddling a consolidation) and
     * return its root — built once per JVM by the caller
@@ -1165,87 +1099,61 @@ object ParityCheck {
     * q_fpstream_gauge. */
   def buildFingerprintPipeline(spark: SparkSession, dir: String,
       nBatches: Int = 4): String = {
-    import spark.implicits._
     val splitId = fpSplitId(spark, dir)
-    val root = freshRoot(spark, "fpstream_gate", dir)
-    initFpRoot(spark, dir, splitId, s"$root/state")
-    runWithRestart(spark,
-        wavesOf(fpArrivalMedia(spark, dir, splitId), nBatches))(
-      FingerprintStream.start(_, s"$root/state", s"$root/ckpt",
-        maxHamming = 3, consolidateEvery = 2))
-    root
+    buildFpGate(spark, dir, "fpstream_gate", splitId,
+      fpArrivalMedia(spark, dir, splitId), nBatches, hotBucketCap = 0)
   }
 
   def fingerprintRestartParity(spark: SparkSession, dir: String,
       root: String): DataFrame = {
     import spark.implicits._
     val splitId = fpSplitId(spark, dir)
-    val baseFps = fpBaseFps(spark, dir, splitId).localCheckpoint(true)
-    val arrMedia = fpArrivalMedia(spark, dir, splitId)
-
-    val idxArr = FingerprintStream.indexedFps(spark, s"$root/state")
-      .filter(col("doc_id") >= splitId)
-      .select(col("doc_id"), col("sh0"), col("sh1"))
-      .localCheckpoint(true)
-    // pair canonical order puts the (larger-id) arrival at id_b, so the
-    // arrival-touching slice is exactly id_b >= split
-    val livePairs = FingerprintStream.livePairs(spark, s"$root/state")
-      .filter(col("id_b") >= splitId)
-      .select(col("id_a"), col("id_b"))
-      .localCheckpoint(true)
-    val liveLabels = FingerprintStream.labels(spark, s"$root/state")
-      .localCheckpoint(true)
-    val nQuarantined = FingerprintStream.gaugeRows(spark, s"$root/state")
-      .agg(coalesce(sum(col("n_quarantined")), lit(0L))).head().getLong(0)
-
     // ── batch twin: every decodable image doc at once ──
-    val arrFpB = graft.ops.Multimodal.pHashes(
-        spark.createDataset(arrMedia))
-      .filter(_.decoded).toDF()
-      .select(col("media_id").as("doc_id"),
-        col("ph0").as("sh0"), col("ph1").as("sh1"))
-      .localCheckpoint(true)
+    val baseFps = fpBaseFps(spark, dir, splitId).localCheckpoint(true)
+    val arrFpB = fingerprints(spark.createDataset(
+      fpArrivalMedia(spark, dir, splitId))).localCheckpoint(true)
     val allFps = baseFps.unionByName(arrFpB)
     val pairsAll = graft.ops.Dedup.hammingPairs128(allFps, 3)
       .select(col("id_a"), col("id_b")).localCheckpoint(true)
-    val livePairsB = pairsAll.filter(col("id_b") >= splitId)
     val batchLabels = graft.ops.Dedup.nearDupClusters(
       allFps.select(col("doc_id")), pairsAll).localCheckpoint(true)
+    val nQuarantined = FingerprintStream.gaugeRows(spark, s"$root/state")
+      .agg(coalesce(sum(col("n_quarantined")), lit(0L))).head().getLong(0)
 
-    val (fOnlyL, fOnlyB, nIndexed, _) = diffCounts(idxArr, arrFpB)
-    val (pOnlyL, pOnlyB, nPairsLive, _) = diffCounts(livePairs, livePairsB)
-    val (onlyLive, onlyBatch, _, _) = diffCounts(liveLabels, batchLabels)
-    val fpsAgree = fOnlyL == 0L && fOnlyB == 0L
-    val pairsAgree = pOnlyL == 0L && pOnlyB == 0L
-    val nClusters = liveLabels.select(col("cluster_id")).distinct().count()
-    val result = spark.createDataFrame(Seq(
-      (nIndexed, nQuarantined, nPairsLive, nClusters, onlyLive, onlyBatch,
-        fpsAgree && pairsAgree && onlyLive == 0L && onlyBatch == 0L &&
-          nQuarantined > 0L)))
-      .toDF("n_indexed", "n_quarantined", "n_pairs_live", "n_clusters",
-        "n_only_live", "n_only_batch", "parity_ok")
-    Seq(baseFps, idxArr, livePairs, liveLabels, arrFpB, pairsAll,
-      batchLabels).foreach(graft.Snap.free(_))
-    result
+    // pair canonical order puts the (larger-id) arrival at id_b, so the
+    // arrival-touching slice is exactly id_b >= split
+    val s = compareServed(spark, FingerprintStream, root, splitId,
+      col("id_b") >= splitId, Some(arrFpB),
+      pairsAll.filter(col("id_b") >= splitId), batchLabels)
+    Seq(baseFps, pairsAll).foreach(graft.Snap.free(_))
+    oneRow(spark, "n_indexed" -> s.kept.n, "n_quarantined" -> nQuarantined,
+      "n_pairs_live" -> s.pairs.n, "n_clusters" -> s.nClusters,
+      "n_only_live" -> s.labels.onlyLive, "n_only_batch" -> s.labels.onlyTwin,
+      "parity_ok" -> (s.agree && nQuarantined > 0L))
   }
 
   /** Bidirectional multiset difference + sizes in ONE aggregated pass —
-    * (onlyA, onlyB, nA, nB) over the frames' full column set. Each
-    * parity gate previously ran `a.exceptAll(b).count()`,
-    * `b.exceptAll(a).count()` and separate `count()`s — five traversals
-    * of the same state; a grouped count per side joined full-outer
-    * folds all four numbers into one job (exceptAll's multiset
-    * semantics exactly: only-in-A = Σ max(cntA − cntB, 0)). NULL-free
-    * frames only (every gated state surface is): a NULL key would not
-    * match itself across the join where exceptAll would cancel it. */
-  private[streaming] def diffCounts(a: DataFrame,
+    * (onlyA, onlyB, nA, nB) over the frames' full column set, equal to
+    * (`a.exceptAll(b).count()`, `b.exceptAll(a).count()`, `a.count()`,
+    * `b.count()`) at one job instead of four traversals: a grouped count
+    * per side joined full-outer (only-in-A = Σ max(cntA − cntB, 0)). The
+    * join is null-safe (`<=>` per column), so a row with a NULL column
+    * cancels its twin the way exceptAll's does; each side's columns are
+    * renamed first, so frames derived from one source cannot resolve to
+    * the same attribute. */
+  private[graft] def diffCounts(a: DataFrame,
       b: DataFrame): (Long, Long, Long, Long) = {
     val cols = a.columns.toSeq
     require(b.columns.toSeq == cols,
       s"diffCounts column mismatch: $cols vs ${b.columns.toSeq}")
-    val ca = a.groupBy(cols.map(col): _*).agg(count(lit(1)).as("_ca"))
-    val cb = b.groupBy(cols.map(col): _*).agg(count(lit(1)).as("_cb"))
-    val r = ca.join(cb, cols, "full_outer")
+    def counted(df: DataFrame, side: String): DataFrame = {
+      val keys = cols.indices.map(i => s"_$side$i")
+      df.select(cols.zip(keys).map { case (c, k) => col(c).as(k) }: _*)
+        .groupBy(keys.map(col): _*).agg(count(lit(1)).as(s"_c$side"))
+    }
+    val on = cols.indices.map(i => col(s"_a$i") <=> col(s"_b$i"))
+      .reduce(_ && _)
+    val r = counted(a, "a").join(counted(b, "b"), on, "full_outer")
       .select(coalesce(col("_ca"), lit(0L)).as("ca"),
         coalesce(col("_cb"), lit(0L)).as("cb"))
       .agg(
@@ -1293,16 +1201,10 @@ object ParityCheck {
     * SERVED by q_fpstream_capped_parity and q_fpstream_capped_gauge. */
   def buildCappedFingerprintPipeline(spark: SparkSession, dir: String,
       nBatches: Int = 4): String = {
-    import spark.implicits._
     val splitId = fpSplitId(spark, dir)
-    val root = freshRoot(spark, "fpstream_capped", dir)
-    initFpRoot(spark, dir, splitId, s"$root/state")
-    runWithRestart(spark,
-        wavesOf(fpCappedArrivalMedia(spark, dir, splitId), nBatches))(
-      FingerprintStream.start(_, s"$root/state", s"$root/ckpt",
-        maxHamming = 3, consolidateEvery = 2,
-        hotBucketCap = FpCappedHotBucketCap))
-    root
+    buildFpGate(spark, dir, "fpstream_capped", splitId,
+      fpCappedArrivalMedia(spark, dir, splitId), nBatches,
+      FpCappedHotBucketCap)
   }
 
   /** The CAPPED media pipeline gated end to end over the state
@@ -1321,21 +1223,7 @@ object ParityCheck {
     val cap = FpCappedHotBucketCap
     val splitId = fpSplitId(spark, dir)
     val baseFps = fpBaseFps(spark, dir, splitId).localCheckpoint(true)
-    val arrMedia = fpCappedArrivalMedia(spark, dir, splitId)
-    val waves = wavesOf(arrMedia, nBatches)
-
-    val idxArr = FingerprintStream.indexedFps(spark, s"$root/state")
-      .filter(col("doc_id") >= splitId)
-      .select(col("doc_id"), col("sh0"), col("sh1"))
-      .localCheckpoint(true)
-    val livePairs = FingerprintStream.livePairs(spark, s"$root/state")
-      .filter(col("id_b") >= splitId)
-      .select(col("id_a"), col("id_b"))
-      .localCheckpoint(true)
-    val liveLabels = FingerprintStream.labels(spark, s"$root/state")
-      .localCheckpoint(true)
-    val gauges = FingerprintStream.gaugeRows(spark, s"$root/state")
-      .localCheckpoint(true)
+    val waves = wavesOf(fpCappedArrivalMedia(spark, dir, splitId), nBatches)
 
     // ── per-wave capped batch twin: the wave decomposition the builder
     // used, replayed sequentially against an accumulating fps frame ──
@@ -1345,11 +1233,7 @@ object ParityCheck {
     var twinHotWaves = 0L
     val twinFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
     waves.foreach { w =>
-      val wfp = graft.ops.Multimodal.pHashes(spark.createDataset(w))
-        .filter(_.decoded).toDF()
-        .select(col("media_id").as("doc_id"),
-          col("ph0").as("sh0"), col("ph1").as("sh1"))
-        .localCheckpoint(true)
+      val wfp = fingerprints(spark.createDataset(w)).localCheckpoint(true)
       val banded = graft.ops.Dedup.hammingBanding128(wfp)
         .localCheckpoint(true)
       val hot = banded.groupBy(col("band"), col("bh"))
@@ -1375,29 +1259,23 @@ object ParityCheck {
     val twinLabels = graft.ops.Dedup.nearDupClusters(
       stateFps.select(col("doc_id")),
       basePairs.unionByName(twinPairs)).localCheckpoint(true)
-    val twinFps = stateFps.filter(col("doc_id") >= splitId)
 
-    val (fOnlyL, fOnlyB, nIndexed, _) = diffCounts(idxArr, twinFps)
-    val (pOnlyL, pOnlyB, nPairsLive, _) = diffCounts(livePairs, twinPairs)
-    val (onlyLive, onlyBatch, _, _) = diffCounts(liveLabels, twinLabels)
-    val fpsAgree = fOnlyL == 0L && fOnlyB == 0L
-    val pairsAgree = pOnlyL == 0L && pOnlyB == 0L
-    val nClusters = liveLabels.select(col("cluster_id")).distinct().count()
+    val s = compareServed(spark, FingerprintStream, root, splitId,
+      col("id_b") >= splitId, Some(stateFps.filter(col("doc_id") >= splitId)),
+      twinPairs, twinLabels)
+    val gauges = FingerprintStream.gaugeRows(spark, s"$root/state")
+      .localCheckpoint(true)
     val hotTotal = gauges.agg(coalesce(sum(col("hot_buckets")), lit(0L)))
       .head().getLong(0)
     val nHotBatches = gauges.filter(col("hot_buckets") > 0).count()
-    val result = spark.createDataFrame(Seq(
-      (nIndexed, nPairsLive, nClusters, hotTotal, nHotBatches, onlyLive,
-        onlyBatch,
-        fpsAgree && pairsAgree && onlyLive == 0L && onlyBatch == 0L &&
-          hotTotal == twinHotBuckets && nHotBatches == twinHotWaves &&
-          hotTotal > 0L && nPairsLive > 0L)))
-      .toDF("n_indexed", "n_pairs_live", "n_clusters",
-        "hot_buckets_total", "n_hot_batches", "n_only_live",
-        "n_only_batch", "parity_ok")
-    (twinFrames ++ Seq(baseFps, idxArr, livePairs, liveLabels, gauges,
-      basePairs, twinLabels)).foreach(graft.Snap.free(_))
-    result
+    (twinFrames ++ Seq(baseFps, gauges, basePairs))
+      .foreach(graft.Snap.free(_))
+    oneRow(spark, "n_indexed" -> s.kept.n, "n_pairs_live" -> s.pairs.n,
+      "n_clusters" -> s.nClusters, "hot_buckets_total" -> hotTotal,
+      "n_hot_batches" -> nHotBatches, "n_only_live" -> s.labels.onlyLive,
+      "n_only_batch" -> s.labels.onlyTwin,
+      "parity_ok" -> (s.agree && hotTotal == twinHotBuckets &&
+        nHotBatches == twinHotWaves && hotTotal > 0L && s.pairs.n > 0L))
   }
 
   /** Build the DECONTAMINATION gate's media state: the SAME decodable
@@ -1407,30 +1285,22 @@ object ParityCheck {
     * [[FingerprintStream.decontaminate]] at the corpus-level cap
     * `indexed_fps / 4` (the q_phash_pairs_capped calibration: organic
     * texture classes sit near a fifth of the corpus, the flood-inflated
-    * class over a third). The one-row repair report persists to
-    * `$root/report` — the builder runs once per JVM, and the repair
-    * mutates the root, so the gate must read the FIRST pass's counts
-    * (a second pass is a no-op by the idempotence contract). Waves are
-    * driven directly through [[FingerprintStream.processBatch]] with
-    * `consolidateEvery = 2`, so the physical pair rewrite covers
-    * consolidated units (sidecar preservation) as well as raw batches. */
+    * class over a third). Waves are driven directly through
+    * [[FingerprintStream.processBatch]] with `consolidateEvery = 2`, so
+    * the physical pair rewrite covers consolidated units (sidecar
+    * preservation) as well as raw batches. */
   def buildDecontamFingerprintPipeline(spark: SparkSession, dir: String,
       nBatches: Int = 4): String = {
     import spark.implicits._
     val splitId = fpSplitId(spark, dir)
-    val root = freshRoot(spark, "fpstream_decontam", dir)
-    initFpRoot(spark, dir, splitId, s"$root/state")
-    wavesOf(fpCappedArrivalMedia(spark, dir, splitId), nBatches)
-        .zipWithIndex.foreach { case (w, i) =>
-      FingerprintStream.processBatch(spark.createDataset(w).toDF(),
-        i.toLong, s"$root/state", maxHamming = 3, consolidateEvery = 2,
-        hotBucketCap = 0) // UNCAPPED — the incident under repair
-    }
-    val nFps = FingerprintStream.indexedFps(spark, s"$root/state").count()
-    val report = FingerprintStream.decontaminate(spark, s"$root/state",
-      hotBucketCap = (nFps / 4).toInt)
-    report.write.mode("overwrite").parquet(s"$root/report")
-    root
+    buildGate(spark, dir, "fpstream_decontam",
+        initFpRoot(spark, dir, splitId, _))(
+      repaired(wavesOf(fpCappedArrivalMedia(spark, dir, splitId), nBatches)
+          .map(spark.createDataset(_).toDF()))(
+        FingerprintStream.processBatch(_, _, _, maxHamming = 3,
+          consolidateEvery = 2, hotBucketCap = 0))( // UNCAPPED — the incident
+        state => FingerprintStream.decontaminate(spark, state, hotBucketCap =
+          (FingerprintStream.indexedFps(spark, state).count() / 4).toInt)))
   }
 
   /** The media decontamination gate: after the repair, the root's pair
@@ -1447,41 +1317,21 @@ object ParityCheck {
       root: String): DataFrame = {
     import spark.implicits._
     val splitId = fpSplitId(spark, dir)
-    val baseFps = fpBaseFps(spark, dir, splitId)
-    val arrMedia = fpCappedArrivalMedia(spark, dir, splitId)
-    val arrFps = graft.ops.Multimodal.pHashes(spark.createDataset(arrMedia))
-      .filter(_.decoded).toDF()
-      .select(col("media_id").as("doc_id"),
-        col("ph0").as("sh0"), col("ph1").as("sh1"))
-    val allFps = baseFps.unionByName(arrFps).localCheckpoint(true)
-    val nFps = allFps.count()
+    val arrFps = fingerprints(spark.createDataset(
+      fpCappedArrivalMedia(spark, dir, splitId)))
+    val allFps = fpBaseFps(spark, dir, splitId).unionByName(arrFps)
+      .localCheckpoint(true)
     // hammingPairs128Capped returns its result checkpointed (ownership
     // here); the twin labels re-converge from the capped pair set
     val twinPairs = graft.ops.Dedup.hammingPairs128Capped(allFps, 3,
-      (nFps / 4).toInt)
-    val twinPairsK = twinPairs.select(col("id_a"), col("id_b"))
+      (allFps.count() / 4).toInt)
     val twinLabels = graft.ops.Dedup.nearDupClusters(
-      allFps.select(col("doc_id")), twinPairsK).localCheckpoint(true)
-    val livePairs = FingerprintStream.livePairs(spark, s"$root/state")
-      .select(col("id_a"), col("id_b")).localCheckpoint(true)
-    val liveLabels = FingerprintStream.labels(spark, s"$root/state")
+      allFps.select(col("doc_id")), twinPairs.select(col("id_a"), col("id_b")))
       .localCheckpoint(true)
-    val report = spark.read.parquet(s"$root/report").head()
-    val hotBuckets = report.getAs[Long]("hot_buckets")
-    val nDropped = report.getAs[Long]("n_dropped")
-    val (pOnlyL, pOnlyB, nPairsAfter, _) = diffCounts(livePairs, twinPairsK)
-    val (lOnlyL, lOnlyB, _, _) = diffCounts(liveLabels, twinLabels)
-    val nClusters = liveLabels.select(col("cluster_id")).distinct().count()
-    val result = spark.createDataFrame(Seq(
-      (nPairsAfter, nDropped, hotBuckets, nClusters,
-        pOnlyL + lOnlyL, pOnlyB + lOnlyB,
-        pOnlyL == 0L && pOnlyB == 0L && lOnlyL == 0L && lOnlyB == 0L &&
-          nDropped > 0L && hotBuckets > 0L && nPairsAfter > 0L)))
-      .toDF("n_pairs_after", "n_dropped", "hot_buckets", "n_clusters",
-        "n_only_live", "n_only_batch", "parity_ok")
-    Seq(allFps, twinPairs, twinLabels, livePairs, liveLabels)
-      .foreach(graft.Snap.free(_))
-    result
+    val s = compareServed(spark, FingerprintStream, root, splitId, lit(true),
+      None, twinPairs.select(col("id_a"), col("id_b")), twinLabels)
+    Seq(allFps, twinPairs).foreach(graft.Snap.free(_))
+    repairVerdict(spark, root, s, "hot_buckets")
   }
 
   /** The EMBEDDING live-dedup pipeline, gated end to end — the vector
@@ -1524,20 +1374,14 @@ object ParityCheck {
       assigned.select(col("vec_id"), col("embedding"), col("nsq"),
         col("cluster").cast("long").as("cluster"))
     // the standing labeling a previous corpus version persisted
-    var labels = Dedup.nearDupClusters(
+    val labels0 = Dedup.nearDupClusters(
       baseEmb.select(col("vec_id").as("doc_id")),
       Similarity.semanticDedupUnordered(baseAssigned, threshold)
         .select(col("id_a"), col("id_b"))).localCheckpoint(true)
 
     var assignedCur = norm(baseAssigned).localCheckpoint(true)
-    var livePairs = spark.emptyDataFrame
-      .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0)
-    val waveSpan = math.max(1L, (maxId + 1L - splitId) / nWaves)
-    val waveFrames =
-      scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
-    var lo = splitId
-    while (lo <= maxId) {
-      val hi = if (lo + waveSpan > maxId) maxId + 1L else lo + waveSpan
+    val (labels, livePairs) = mergeWaves(spark, splitId, maxId, nWaves,
+        labels0) { (lo, hi) =>
       val waveEmb = emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
       val wa = Similarity.assignToCentroids(waveEmb, cents)
         .localCheckpoint(true)
@@ -1545,39 +1389,68 @@ object ParityCheck {
         .semanticDedupPairsBetween(wa, assignedCur, threshold)
         .unionByName(Similarity.semanticDedupUnordered(wa, threshold))
         .select(col("id_a"), col("id_b")).localCheckpoint(true)
-      val prevLabels = labels
-      labels = Dedup.mergeClusterDelta(labels,
-        waveEmb.select(col("vec_id").as("doc_id")), wavePairs)
-      graft.Snap.free(prevLabels)
-      livePairs = livePairs.unionByName(wavePairs)
       val prevAssigned = assignedCur
       assignedCur = assignedCur.unionByName(norm(wa)).localCheckpoint(true)
       graft.Snap.free(prevAssigned)
       graft.Snap.free(wa) // both consumers checkpointed
-      waveFrames += wavePairs // alive until livePairs materializes
-      lo = hi
+      (waveEmb.select(col("vec_id").as("doc_id")), wavePairs)
     }
-    livePairs = livePairs.distinct().localCheckpoint(true)
-    waveFrames.foreach(graft.Snap.free(_))
 
     // ── batch twin under the SAME base-trained quantizer ──
     val (allPairs, batchLabels) = embeddingBatchTwin(emb, cents, threshold)
     val batchLive = allPairs.filter(col("id_b") >= splitId) // id_a < id_b:
       // arrivals hold the HIGH ids, so any pair touching one has id_b ≥ split
-
-    val (onlyLive, onlyBatch, nVectors, _) = diffCounts(labels, batchLabels)
-    val (pOnlyL, pOnlyB, nPairsLive, _) = diffCounts(livePairs, batchLive)
-    val pairsAgree = pOnlyL == 0L && pOnlyB == 0L
-    val result = spark.createDataFrame(Seq(
-      (nVectors, nPairsLive,
-        labels.select(col("cluster_id")).distinct().count(),
-        onlyLive, onlyBatch,
-        pairsAgree && onlyLive == 0L && onlyBatch == 0L && nPairsLive > 0L)))
-      .toDF("n_vectors", "n_pairs_live", "n_clusters",
-        "n_only_live", "n_only_batch", "parity_ok")
+    val result = waveVerdict(spark, "n_vectors", labels, batchLabels,
+      livePairs, batchLive)
     Seq(labels, assignedCur, livePairs, allPairs, batchLabels)
       .foreach(graft.Snap.free(_))
     result
+  }
+
+  /** A hand-driven wave gate's replay: the arrivals [splitId, maxId] in
+    * `nWaves` id-range waves; `wave(lo, hi)` returns a wave's ids
+    * (doc_id) and its verified pairs against everything before it, which
+    * merge into the standing labels from `labels0` through
+    * [[graft.ops.Dedup.mergeClusterDelta]] — cost ∝ wave. Returns the
+    * final labels and the distinct live pairs, both snapshotted. */
+  private def mergeWaves(spark: SparkSession, splitId: Long, maxId: Long,
+      nWaves: Int, labels0: DataFrame)(
+      wave: (Long, Long) => (DataFrame, DataFrame))
+      : (DataFrame, DataFrame) = {
+    var labels = labels0
+    var livePairs = spark.emptyDataFrame
+      .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0)
+    val waveSpan = math.max(1L, (maxId + 1L - splitId) / nWaves)
+    val waveFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    var lo = splitId
+    while (lo <= maxId) {
+      val hi = if (lo + waveSpan > maxId) maxId + 1L else lo + waveSpan
+      val (ids, wavePairs) = wave(lo, hi)
+      val prevLabels = labels
+      labels = graft.ops.Dedup.mergeClusterDelta(labels, ids, wavePairs)
+      graft.Snap.free(prevLabels)
+      livePairs = livePairs.unionByName(wavePairs)
+      waveFrames += wavePairs // alive until livePairs materializes
+      lo = hi
+    }
+    val distinctPairs = livePairs.distinct().localCheckpoint(true)
+    waveFrames.foreach(graft.Snap.free(_))
+    (labels, distinctPairs)
+  }
+
+  /** A hand-driven wave gate's row: (`nCol` = label rows, n_pairs_live,
+    * n_clusters, n_only_live, n_only_batch, parity_ok) — labels and
+    * live pairs each equal to the twin's, and the tier fired. */
+  private def waveVerdict(spark: SparkSession, nCol: String,
+      labels: DataFrame, twinLabels: DataFrame, pairs: DataFrame,
+      twinPairs: DataFrame): DataFrame = {
+    val (onlyLive, onlyBatch, n, _) = diffCounts(labels, twinLabels)
+    val (pOnlyL, pOnlyB, nPairsLive, _) = diffCounts(pairs, twinPairs)
+    oneRow(spark, nCol -> n, "n_pairs_live" -> nPairsLive,
+      "n_clusters" -> labels.select(col("cluster_id")).distinct().count(),
+      "n_only_live" -> onlyLive, "n_only_batch" -> onlyBatch,
+      "parity_ok" -> (pOnlyL == 0L && pOnlyB == 0L && onlyLive == 0L &&
+        onlyBatch == 0L && nPairsLive > 0L))
   }
 
   /** The SHARED all-at-once truth both embedding gates compare against
@@ -1615,62 +1488,44 @@ object ParityCheck {
   def embeddingRestartParity(spark: SparkSession, dir: String,
       nBatches: Int = 4, threshold: Double = 0.4): DataFrame = {
     import spark.implicits._
-    import graft.ops.{Dedup, Similarity}
     val emb = graft.Tables.embeddings(spark, dir)
     val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
     val splitId = (maxId + 1L) * 3L / 5L
-    val baseEmb = emb.filter(col("vec_id") < splitId)
     val arrivals = emb.filter(col("vec_id") >= splitId)
       .select(col("vec_id"), col("embedding"))
       .as[EmbeddingStream.VecIn].collect().sortBy(_.vec_id)
     require(arrivals.nonEmpty, "fixture too small to split")
-
-    val root = freshRoot(spark, "embstream_gate", dir)
     // gauge reference: the earliest arrival slice (held-out,
     // in-distribution — parity doesn't depend on it, the health rows do)
     val refHi = splitId + math.max(1L, (maxId + 1L - splitId) / nBatches)
-    EmbeddingStream.initFromCorpus(spark, s"$root/state", baseEmb,
-      emb.filter(col("vec_id") >= splitId && col("vec_id") < refHi),
-      threshold)
-
     val waves = wavesOf(arrivals.toSeq, nBatches)
-    runWithRestart(spark, waves)(EmbeddingStream.start(_, s"$root/state",
-      s"$root/ckpt", threshold, consolidateEvery = 2))
+    val root = buildGate(spark, dir, "embstream_gate",
+        EmbeddingStream.initFromCorpus(spark, _,
+          emb.filter(col("vec_id") < splitId),
+          emb.filter(col("vec_id") >= splitId && col("vec_id") < refHi),
+          threshold))(
+      restarted(spark, waves)(EmbeddingStream.start(_, _, _, threshold,
+        consolidateEvery = 2)))
 
-    val liveLabels = EmbeddingStream.labels(spark, s"$root/state")
-      .localCheckpoint(true)
-    // arrival-touching pairs: arrivals hold the HIGH ids (id_a < id_b
-    // canonical), and the batch=-1 base pair table only holds base ids
-    val livePairs = EmbeddingStream.livePairs(spark, s"$root/state")
-      .filter(col("id_b") >= splitId)
-      .select(col("id_a"), col("id_b")).distinct().localCheckpoint(true)
-
-    // ── batch twin: the SHARED definition, under the PIPELINE's epoch-0
-    // centroids (read back from its state root) ──
+    // batch twin: the SHARED definition, under the PIPELINE's epoch-0
+    // centroids (read back from its state root); arrival-touching pairs
+    // have id_b ≥ split (id_a < id_b canonical), and the batch=-1 base
+    // pair table only holds base ids
     val (allPairs, batchLabels) = embeddingBatchTwin(emb,
       spark.read.parquet(s"$root/state/cents/epoch=0"), threshold)
-    val batchLive = allPairs.filter(col("id_b") >= splitId)
-
-    val (onlyLive, onlyBatch, nVectors, _) =
-      diffCounts(liveLabels, batchLabels)
-    val (pOnlyL, pOnlyB, nPairsLive, _) = diffCounts(livePairs, batchLive)
-    val pairsAgree = pOnlyL == 0L && pOnlyB == 0L
+    val s = compareServed(spark, EmbeddingStream, root, splitId,
+      col("id_b") >= splitId, None, allPairs.filter(col("id_b") >= splitId),
+      batchLabels)
+    graft.Snap.free(allPairs)
     // every non-empty batch must have left a committed health row with
     // its epoch pinned at 0 (no retrain fired on in-distribution waves)
     val gauges = EmbeddingStream.gaugeRows(spark, s"$root/state")
     val gaugeOk = gauges.count() == waves.length.toLong &&
       gauges.filter(col("retrain") || col("epoch") =!= 0).count() == 0L
-    val result = spark.createDataFrame(Seq(
-      (nVectors, nPairsLive,
-        liveLabels.select(col("cluster_id")).distinct().count(),
-        onlyLive, onlyBatch,
-        pairsAgree && gaugeOk && onlyLive == 0L && onlyBatch == 0L &&
-          nPairsLive > 0L)))
-      .toDF("n_vectors", "n_pairs_live", "n_clusters",
-        "n_only_live", "n_only_batch", "parity_ok")
-    Seq(liveLabels, livePairs, allPairs, batchLabels)
-      .foreach(graft.Snap.free(_))
-    result
+    oneRow(spark, "n_vectors" -> s.labels.n, "n_pairs_live" -> s.pairs.n,
+      "n_clusters" -> s.nClusters, "n_only_live" -> s.labels.onlyLive,
+      "n_only_batch" -> s.labels.onlyTwin,
+      "parity_ok" -> (s.agree && gaugeOk && s.pairs.n > 0L))
   }
 
   /** DEEP-HISTORY live near-dup, gated end to end — the batch
@@ -1710,42 +1565,22 @@ object ParityCheck {
     // standing labels from the SAME checkpointed banding (re-running the
     // shingle+signature pass through minHashPairs would pay the gate's
     // dominant cost twice): self-join candidates + exact-jaccard verify
-    val histCand = accBanded
-      .select(col("band"), col("bh"), col("doc_id").as("id_a"))
-      .join(accBanded.select(col("band"), col("bh"), col("doc_id").as("id_b")),
-        Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    var labels = Dedup.nearDupClusters(history.select(col("doc_id")),
-      Dedup.jaccardVerifyUnordered(histCand, history)
+    val labels0 = Dedup.nearDupClusters(history.select(col("doc_id")),
+      Dedup.jaccardVerifyUnordered(bandCandidates(accBanded), history)
         .select(col("id_a"), col("id_b")))
       .localCheckpoint(true)
-    var livePairs = spark.emptyDataFrame
-      .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0)
-    val waveSpan = math.max(1L, (maxId + 1L - splitId) / nWaves)
-    val waveFrames =
-      scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
-    var lo = splitId
-    while (lo <= maxId) {
-      val hi = if (lo + waveSpan > maxId) maxId + 1L else lo + waveSpan
+    val (labels, livePairs) = mergeWaves(spark, splitId, maxId, nWaves,
+        labels0) { (lo, hi) =>
       val waveDocs = docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
       val wb = Dedup.minHashBanded(waveDocs).localCheckpoint(true)
       val wavePairs = Dedup.minHashPairsAgainst(wb, accBanded, docs)
         .select(col("id_a"), col("id_b")).localCheckpoint(true)
-      val prevLabels = labels
-      labels = Dedup.mergeClusterDelta(labels,
-        waveDocs.select(col("doc_id")), wavePairs)
-      graft.Snap.free(prevLabels)
-      livePairs = livePairs.unionByName(wavePairs)
       val prevBanded = accBanded
       accBanded = accBanded.unionByName(wb).localCheckpoint(true)
       graft.Snap.free(prevBanded)
       graft.Snap.free(wb) // both consumers checkpointed
-      waveFrames += wavePairs // alive until livePairs materializes
-      lo = hi
+      (waveDocs.select(col("doc_id")), wavePairs)
     }
-    livePairs = livePairs.distinct().localCheckpoint(true)
-    waveFrames.foreach(graft.Snap.free(_))
 
     // ── batch twin: one full self-join over everything ──
     val allPairs = Dedup.minHashPairs(docs)
@@ -1754,17 +1589,8 @@ object ParityCheck {
       allPairs).localCheckpoint(true)
     val batchLive = allPairs.filter(col("id_b") >= splitId) // id_a < id_b:
       // arrivals hold the HIGH ids, so a pair touching one has id_b ≥ split
-
-    val (onlyLive, onlyBatch, nDocs, _) = diffCounts(labels, batchLabels)
-    val (pOnlyL, pOnlyB, nPairsLive, _) = diffCounts(livePairs, batchLive)
-    val pairsAgree = pOnlyL == 0L && pOnlyB == 0L
-    val result = spark.createDataFrame(Seq(
-      (nDocs, nPairsLive,
-        labels.select(col("cluster_id")).distinct().count(),
-        onlyLive, onlyBatch,
-        pairsAgree && onlyLive == 0L && onlyBatch == 0L && nPairsLive > 0L)))
-      .toDF("n_docs", "n_pairs_live", "n_clusters",
-        "n_only_live", "n_only_batch", "parity_ok")
+    val result = waveVerdict(spark, "n_docs", labels, batchLabels,
+      livePairs, batchLive)
     Seq(labels, accBanded, livePairs, allPairs, batchLabels)
       .foreach(graft.Snap.free(_))
     result
@@ -1776,7 +1602,6 @@ object ParityCheck {
       requireLate: Boolean): DataFrame = {
     import spark.implicits._
     val horizonMs = horizonMinutes * 60000L
-    val t0Ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
 
     // collectParityDocs returns doc_id-sorted rows (ts is monotone in
     // doc_id); `arrange` sets the ARRIVAL order under test
@@ -1784,61 +1609,27 @@ object ParityCheck {
     require(docs.nonEmpty, s"no documents in $dir")
     val nLate = docs.iterator.sliding(2).withPartial(false)
       .count(p => p(1).doc_id < p(0).doc_id)
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StatefulOps.DocIn]
-    try spark.catalog.dropTempView(tbl) catch { case _: Exception => () }
-    def withTs(df: DataFrame): DataFrame =
-      df.withColumn("ts",
-        timestamp_millis(lit(t0Ms) + col("doc_id") * 60000L))
-    val banded = withTs(graft.ops.Dedup.minHashBanded(mem.toDF()))
-      .select(col("doc_id"), col("ts"), col("band"), col("bh"))
-      .as[StatefulOps.BandTsIn]
-    val q = StatefulOps.lshCandidatesStreamTtl(banded, horizonMs)
-      .writeStream.format("memory").queryName(tbl).outputMode("append").start()
-    try {
-      val batchSize = math.max(1, docs.length / nBatches)
-      docs.grouped(batchSize).foreach { b =>
-        mem.addData(b.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
+    val emitted = replay(spark, tbl, wavesOf(docs.toSeq, nBatches))(ds =>
+      StatefulOps.lshCandidatesStreamTtl(bandedAtT0(spark, ds.toDF()),
+        horizonMs).toDF())
 
     val documents = graft.Tables.documents(spark, dir)
-    val streamCand = spark.table(tbl)
+    val streamCand = emitted
       .select(col("id_a"), col("id_b")).distinct().localCheckpoint(true)
-    val bandedBatch = graft.ops.Dedup.minHashBanded(documents)
-    val batchCandFull = bandedBatch
-      .select(col("band"), col("bh"), col("doc_id").as("id_a"))
-      .join(bandedBatch.select(col("band"), col("bh"), col("doc_id").as("id_b")),
-        Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
     // ts is doc_id-linear, so the horizon is an id-distance predicate
-    val batchCand = batchCandFull
-      .filter(abs(col("id_a") - col("id_b")) * 60000L <= horizonMs)
+    val batchCand = withinHorizon(
+        bandCandidates(graft.ops.Dedup.minHashBanded(documents)), horizonMs)
       .localCheckpoint(true)
-    val candAgree = batchCand.exceptAll(streamCand).count() == 0L &&
-      streamCand.exceptAll(batchCand).count() == 0L
+    val (cOnlyB, cOnlyS, _, _) = diffCounts(batchCand, streamCand)
 
     val streamed = graft.ops.Dedup.jaccardVerify(streamCand, documents)
       .select(col("id_a"), col("id_b")).localCheckpoint(true)
     val batchFull = graft.ops.Dedup.minHashPairs(documents)
       .select(col("id_a"), col("id_b")).localCheckpoint(true)
-    val batch = batchFull
-      .filter(abs(col("id_a") - col("id_b")) * 60000L <= horizonMs)
-      .localCheckpoint(true)
-
-    val nBatch = batch.count()
-    val nStream = streamed.count()
-    val onlyBatch = batch.exceptAll(streamed).count()
-    val onlyStream = streamed.exceptAll(batch).count()
-    val beyond = batchFull.count() - nBatch
-    spark.createDataFrame(Seq(
-      (nBatch, nStream, onlyBatch, onlyStream, beyond,
-        candAgree && nBatch == nStream && onlyBatch == 0L &&
-          onlyStream == 0L && beyond > 0L &&
-          (!requireLate || nLate > 0))))
-      .toDF("n_batch", "n_stream", "n_only_batch", "n_only_stream",
-        "n_beyond_horizon", "parity_ok")
+    val batch = withinHorizon(batchFull, horizonMs).localCheckpoint(true)
+    val beyond = batchFull.count() - batch.count()
+    setParity(spark, batch, streamed, Seq("n_beyond_horizon" -> beyond),
+      extraOk = cOnlyB == 0L && cOnlyS == 0L && beyond > 0L &&
+        (!requireLate || nLate > 0))
   }
 }
